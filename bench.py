@@ -1,10 +1,12 @@
 #!/usr/bin/env python
 """Benchmark the engine's headline queries.
 
-Runs each registered headline query at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+Runs each registered headline query at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 test tables) on local[$SPARK_GRAFT_CPUS] and prints the full
+JSON line first: {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "sf": ...}. When that line is longer than 1900
+characters it then prints a compact line without the "queries" map, so
+a line-oriented consumer should take the LAST JSON line.
 
 Queries execute via the noop sink so we measure full plan execution
 (scan -> shuffle -> agg) without driver-side collect overhead.

@@ -29,7 +29,7 @@ import os
 import shutil
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .sources.csv import read_csv, read_csv_dir
@@ -106,17 +106,40 @@ class PipelineEngine:
     def _table_path(self, table_name: str) -> str:
         return os.path.join(self.warehouse_dir, table_name)
 
+    def _write_counted(
+        self, df: DataFrame, table_name: str, partition_cols: list[str] | None = None
+    ) -> LoadResult:
+        """Overwrite ``table_name`` with ``df`` and report the rows
+        written, counted by the write job itself.
+
+        The count is an ``Observation`` attached as the LAST
+        transformation before ``.write``: an observe node below an
+        operator that re-runs its child (the sampling job of
+        ``repartitionByRange``) would count those rows twice. No
+        re-read of the written files, so no extra job.
+        """
+        path = self._table_path(table_name)
+        rows = Observation()
+        w = df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
+        if partition_cols:
+            w = w.partitionBy(*partition_cols)
+        w.parquet(path)
+        return LoadResult(table_path=path, rows_written=rows.get["n"])
+
     def load(self, df: DataFrame, table_name: str) -> LoadResult:
         """Overwrite-whole-table load (reference `if_exists='replace'`).
 
         Column names with spaces (the reference dataset has `Unique ID`,
         `Geo Type Name`, ...) pass through verbatim — Spark 4's parquet
         writer accepts them (verified), so no escaping layer is needed.
+
+        ``rows_written`` is counted inside the write job (an
+        ``Observation`` on the written frame), so a load from a CSV
+        directory is one job: the files' schemas were resolved at
+        ingest, and nothing re-reads the table. An empty frame still
+        writes the table with its schema and reports 0.
         """
-        path = self._table_path(table_name)
-        df.write.mode("overwrite").parquet(path)
-        rows = self.spark.read.parquet(path).count()
-        return LoadResult(table_path=path, rows_written=rows)
+        return self._write_counted(df, table_name)
 
     # -- scale-out sinks (beyond reference surface) ---------------------
     def write_partitioned(
@@ -130,10 +153,7 @@ class PipelineEngine:
         (date, region), never a high-cardinality key: one directory
         per value.
         """
-        path = self._table_path(table_name)
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-        rows = self.spark.read.parquet(path).count()
-        return LoadResult(table_path=path, rows_written=rows)
+        return self._write_counted(df, table_name, partition_cols)
 
     def write_bucketed(
         self,
@@ -229,17 +249,13 @@ class PipelineEngine:
             norm(zy, bounds["y0"], bounds["y1"]),
             bits=bits,
         )
-        path = self._table_path(table_name)
-        (
+        clustered = (
             df.withColumn("_z", z)
             .repartitionByRange(n_files, F.col("_z"))
             .sortWithinPartitions("_z")
             .drop("_z")
-            .write.mode("overwrite")
-            .parquet(path)
         )
-        rows = self.spark.read.parquet(path).count()
-        return LoadResult(table_path=path, rows_written=rows)
+        return self._write_counted(clustered, table_name)
 
     def compact_table(
         self, table_name: str, target_file_bytes: int = 128 << 20

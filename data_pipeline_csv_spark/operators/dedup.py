@@ -533,6 +533,15 @@ def lsh_bucket_candidates(
     most once per bucket (one signature per doc), and array_sort
     guarantees d1 < d2 without a post-filter. See
     :func:`minhash_lsh_pairs` for the cap/drop-observation contract.
+
+    The observed drop counts are exact only while the bucket subtree
+    runs once per job. The verification references the returned
+    candidates three times and relies on ReuseExchange to dedupe that
+    subtree; a plan change that defeats the reuse re-executes the
+    ``observe`` node and double- or triple-counts ``dropped_buckets``
+    and ``dropped_doc_slots``. The same hazard applies to any
+    ``observe`` placed below an operator that re-runs its child (for
+    example the sampling job of ``repartitionByRange``).
     """
     buckets = (
         band_entries.groupBy("band_id", "band_hash")

@@ -14,8 +14,19 @@ Reference behavior being reproduced (Spark-first, not a port):
 Spark mapping: ``spark.read.csv`` is lazy/distributed/splittable; the
 by-name alignment uses per-file readers + ``unionByName(
 allowMissingColumns=True)`` because a single multi-path read aligns by
-position. Per-file error tolerance probes each file's header eagerly
-(cheap driver-side open of the first bytes, not a full read).
+position. Per-file error tolerance resolves each file's schema eagerly
+(a header job plus, with inference, a full inference scan), so a
+corrupt file is caught before the union is built.
+
+Each file's schema resolution is a small job that leaves most cores
+idle, so the directory scan resolves files concurrently: a thread pool of
+``min(files, defaultParallelism)`` workers, each target wrapped with
+``pyspark.util.inheritable_thread_target`` so its jobs run under the
+caller's local properties (job group, description) and session tags —
+``cancelJobGroup`` and job-group accounting see every inference job.
+Inference stays per file (a joint multi-path inference would change
+the types inferred for ragged inputs), and frames are unioned in
+sorted-name order, so the result is the serial scan's result.
 
 At scale: a directory of homogeneous CSVs should use the single
 ``spark.read.csv(dir)`` path (one distributed scan, no union plan);
@@ -27,9 +38,11 @@ from __future__ import annotations
 
 import logging
 import os
+from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 logger = logging.getLogger(__name__)
 
@@ -67,7 +80,8 @@ def read_csv_dir(
     infer_schema: bool = True,
 ) -> DataFrame:
     """Tolerant non-recursive directory scan with by-name column
-    alignment (reference S2+S3)."""
+    alignment (reference S2+S3). Files resolve concurrently in the
+    caller's job group; the union is in sorted-name order."""
     if not os.path.isdir(dir_path):
         raise FileNotFoundError(f"Directory not found: {dir_path}")
     names = sorted(
@@ -77,17 +91,31 @@ def read_csv_dir(
         and f.lower().endswith(".csv")
         and os.path.isfile(os.path.join(dir_path, f))
     )
-    frames: list[DataFrame] = []
-    for name in names:
+
+    def resolve(name: str) -> DataFrame | None:
         full = os.path.join(dir_path, name)
         try:
             df = read_csv(spark, full, header=header, infer_schema=infer_schema)
             # force header/schema resolution now so a corrupt file is
             # caught here and skipped, like the reference's per-file try
             _ = df.schema
-            frames.append(df)
+            return df
         except Exception as exc:  # noqa: BLE001 - reference skips any per-file failure
             logger.warning("Skipping unreadable CSV %s: %s", full, exc)
+            return None
+
+    frames: list[DataFrame] = []
+    if names:
+        workers = min(len(names), spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            # wrapped per task in this thread: each target gets its own
+            # copy of the caller's local properties (a shared copy would
+            # let concurrent SQL executions overwrite each other's ids)
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(resolve), name)
+                for name in names
+            ]
+            frames = [df for f in futures if (df := f.result()) is not None]
     if not frames:
         raise FileNotFoundError(f"No readable CSV files in: {dir_path}")
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)

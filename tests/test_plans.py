@@ -898,3 +898,54 @@ def test_join_strategy_audit_broadcasts_below_threshold(spark, sf_dir):
     plan = _plan(above)
     assert "SortMergeJoin" in plan, plan
     assert "BroadcastHashJoin" not in plan
+
+
+def _jobs_in_group(spark, group: str, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    ids of the jobs the group launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job-budget pin")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _csv_dir(tmp_path, n_files: int):
+    d = tmp_path / "csvs"
+    d.mkdir()
+    for i in range(n_files):
+        body = "".join(f"{i * 10 + j},n{j},{j}.5\n" for j in range(5))
+        (d / f"part{i:02d}.csv").write_text("id,name,price\n" + body)
+    return str(d)
+
+
+def test_read_csv_dir_jobs_stay_in_caller_job_group(spark, tmp_path):
+    """Per-file schema resolution runs on pool threads; every one of its
+    jobs must still carry the caller's job group (cancelJobGroup and
+    job accounting depend on it). Each file costs at least one job."""
+    from data_pipeline_csv_spark.sources.csv import read_csv_dir
+
+    n = 2 * spark.sparkContext.defaultParallelism + 1
+    path = _csv_dir(tmp_path, n)
+    df, jobs = _jobs_in_group(
+        spark, "read-csv-dir-budget", lambda: read_csv_dir(spark, path)
+    )
+    assert len(jobs) >= n
+    assert df.count() == 5 * n
+
+
+def test_pipeline_load_is_one_job(spark, tmp_path):
+    """PipelineEngine.load counts rows inside the write job: one job,
+    no re-read of the written table."""
+    from data_pipeline_csv_spark.engine import PipelineEngine
+
+    engine = PipelineEngine(spark, str(tmp_path / "wh"))
+    cleaned = engine.clean(engine.ingest(_csv_dir(tmp_path, 4)))
+    res, jobs = _jobs_in_group(
+        spark, "engine-load-budget", lambda: engine.load(cleaned, "products")
+    )
+    assert len(jobs) == 1
+    assert res.rows_written == 20

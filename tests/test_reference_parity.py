@@ -6,11 +6,15 @@ all-null); dropna excluding Message -> 18,862. The synthetic startup
 dataset: 100 rows, categories 33/34/33, in_stock true = 50, 0 nulls.
 """
 
+import logging
 import os
+from collections import Counter
+from functools import reduce
 
 import pytest
 
 from data_pipeline_csv_spark.engine import PipelineEngine
+from data_pipeline_csv_spark.sources import csv as csv_source
 from data_pipeline_csv_spark.sources.csv import read_csv, read_csv_dir
 from data_pipeline_csv_spark.sources.synthetic import synthetic_products
 
@@ -60,6 +64,45 @@ def test_dir_scan_aligns_by_name_and_skips_bad(spark, tmp_path):
     # by-name alignment: missing columns are null
     rows = {(r["id"], r["name"], r["extra"]) for r in df.collect()}
     assert (None, "z", 9) in rows
+
+
+def test_dir_scan_skips_bad_file_under_concurrency(spark, tmp_path, monkeypatch, caplog):
+    """More files than two rounds of the resolver pool, with ragged
+    columns and types; one file fails to resolve. The concurrent scan
+    must log and skip it, keep every other file, and equal a serial
+    by-name union over the kept files in sorted-name order."""
+    n_files = 2 * spark.sparkContext.defaultParallelism + 3
+    d = tmp_path / "ragged"
+    d.mkdir()
+    for i in range(n_files):
+        # x is int in even files, double in odd ones, all-empty in every
+        # fifth (inferred string there): type widening depends on order
+        xs = [""] * 3 if i % 5 == 0 else [f"{j}.5" if i % 2 else str(j) for j in range(3)]
+        body = "".join(f"{i * 100 + j},v{i}_{j},{xs[j]}\n" for j in range(3))
+        (d / f"f{i:02d}.csv").write_text(f"id,c{i % 4},x\n" + body)
+    bad = "f07.csv"
+    real_read_csv = csv_source.read_csv
+
+    def flaky_read_csv(spark_, path, **kw):
+        if os.path.basename(path) == bad:
+            raise ValueError("corrupt header")
+        return real_read_csv(spark_, path, **kw)
+
+    monkeypatch.setattr(csv_source, "read_csv", flaky_read_csv)
+    with caplog.at_level(logging.WARNING, logger=csv_source.__name__):
+        df = read_csv_dir(spark, str(d))
+    skipped = [r.getMessage() for r in caplog.records if "Skipping unreadable CSV" in r.getMessage()]
+    assert len(skipped) == 1 and bad in skipped[0]
+
+    kept = sorted(f for f in os.listdir(d) if f != bad)
+    assert len(kept) == n_files - 1
+    serial = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [real_read_csv(spark, str(d / f)) for f in kept],
+    )
+    assert df.columns == serial.columns
+    assert df.dtypes == serial.dtypes
+    assert Counter(map(tuple, df.collect())) == Counter(map(tuple, serial.collect()))
 
 
 def test_dir_scan_empty_raises(spark, tmp_path):
@@ -125,6 +168,20 @@ def test_pipeline_end_to_end(spark, engine, tmp_path):
     assert result2.rows_written == 2
     engine.drop_table("products")
     assert not engine.table_exists("products")
+
+
+def test_pipeline_empty_clean_writes_schema(spark, engine, tmp_path):
+    """The reference quirk: an all-null Message column makes dropna()
+    empty the frame. The load still writes the table with its schema
+    and the in-job count reports 0."""
+    src = tmp_path / "messages.csv"
+    src.write_text("id,name,Message\n1,apple,\n2,pear,\n")
+    result = engine.run_pipeline(str(src), "messages")
+    assert result.rows_written == 0
+    assert engine.table_exists("messages")
+    stats = engine.stats("messages")
+    assert stats["total_records"] == 0
+    assert [c["name"] for c in stats["columns"]] == ["id", "name", "Message"]
 
 
 def test_column_names_with_spaces_roundtrip(spark, engine, tmp_path):

@@ -56,6 +56,17 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert "PartitionFilters: [isnotnull(o_year" in buf.getvalue()
 
 
+def test_zordered_write_counts_each_row_once(spark, tmp_path):
+    """The written-row count is observed after repartitionByRange: an
+    observation below it would also count the rows its range-bounds
+    sampling job reads, reporting a multiple of the true count."""
+    eng = PipelineEngine(spark, str(tmp_path / "wh"))
+    df = spark.range(100_000).withColumn("y", (F.col("id") * 7919) % 1000)
+    res = eng.write_zordered(df, "z", ("id", "y"), n_files=8)
+    assert res.rows_written == df.count() == 100_000
+    assert eng.read_table("z").count() == 100_000
+
+
 def test_dynamic_partition_pruning_on_partitioned_fact(spark, sf_dir, tmp_path):
     """Joining a partitioned fact to a FILTERED dim must inject a
     dynamic partition-pruning subquery: the fact scan reads only the
