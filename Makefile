@@ -1,7 +1,13 @@
-.PHONY: test verify bench
+.PHONY: test slow verify bench
 
 test:
 	python -m pytest tests/ -q
+
+# The crash/race/compaction sweeps pytest.ini excludes by default; run
+# them after any change near layout, commit or streaming state.
+slow:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	python -m pytest tests/ -m slow -q -p no:cacheprovider
 
 # Full pre-submit gate: unit/property tests + every registered query vs
 # its DuckDB oracle through the driver-faithful comparison path.

@@ -429,7 +429,7 @@ HEADLINE = [
 #   fraction (and the scan time with it) can move either way a little.
 # - bench EMISSION (r9 verdict #1): the final printed line is now the
 #   compact driver contract only; the full payload (mins, medians,
-#   phases) goes to the committed BENCH_DETAIL_r{N}.json. No timing
+#   phases) goes to the committed BENCH_DETAIL_r{N}_c{cpus}.json. No timing
 #   semantics changed.
 # r11 engine-side deltas to expect:
 # - dedup_cc_incremental: EXPECT A LARGE DROP (r10 15.1 s min -> ~7 s
@@ -780,6 +780,31 @@ EXTRA_OPS = {
 }
 
 
+def _open_detail_file(repo_dir: str, cpus: int):
+    """(name, file opened for writing) of a NEW detail file
+    ``BENCH_DETAIL_r{N}_c{cpus}.json``: N is one past the highest
+    ``BENCH_r{N}*.json`` round on disk, and a clash with an existing
+    file (same round and CPU count) adds ``_2``, ``_3``, ... — an
+    earlier detail file is never overwritten."""
+    import glob
+    import itertools
+    import re
+
+    rounds = [
+        int(m.group(1))
+        for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
+        if (m := re.search(r"BENCH_r(\d+)[^/]*\.json$", p))
+    ]
+    stem = f"BENCH_DETAIL_r{max(rounds) + 1:02d}" if rounds else "BENCH_DETAIL"
+    stem += f"_c{cpus}"
+    for i in itertools.count(1):
+        name = f"{stem}.json" if i == 1 else f"{stem}_{i}.json"
+        try:
+            return name, open(os.path.join(repo_dir, name), "x")
+        except FileExistsError:
+            continue
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -857,24 +882,12 @@ def main() -> None:
     # (52 mins + 52 medians + canary + phases), so the driver could
     # not parse it and the r9 per-query mins were lost from the
     # artifact. The full payload now goes to a COMMITTED detail file
-    # (BENCH_DETAIL_r{N}.json, round inferred from the BENCH_r*.json
-    # artifacts already on disk) and the final printed line carries
-    # only the compact driver contract — well under any tail window.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    try:
-        import glob
-        import re
-
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
-            if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-        ]
-        detail_name = f"BENCH_DETAIL_r{max(rounds) + 1:02d}.json" if rounds else "BENCH_DETAIL.json"
-    except Exception:
-        detail_name = "BENCH_DETAIL.json"
-    detail_path = os.path.join(repo_dir, detail_name)
-    with open(detail_path, "w") as f:
+    # and the final printed line carries only the compact driver
+    # contract — well under any tail window.
+    detail_name, f = _open_detail_file(
+        os.path.dirname(os.path.abspath(__file__)), spark.sparkContext.defaultParallelism
+    )
+    with f:
         json.dump(detail, f, indent=1)
         f.write("\n")
 

@@ -11,6 +11,7 @@ windows, dedup, similarity search, text analysis, streaming) that a
 Layout:
     session     SparkSession factory tuned for the target cluster
     sources     CSV / Parquet / synthetic readers (reference S1-S6)
+    artifacts   build-once artifact cache (layouts, indexes, trained models)
     engine      reference-parity ETL pipeline (ingest -> clean -> load)
     queries     the query library + DuckDB oracle registry
     operators   dedup / similarity / text-analysis / sessionization

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..artifacts import build_once
 from ..functions.text_funcs import tokens
 
 
@@ -48,9 +49,6 @@ def _merge_pass(a: str, b: str):
     )
 
 
-_TRAIN_CACHE: dict = {}
-
-
 def _train(spark, docs: DataFrame, n_merges: int, text_col: str, cache_key=None):
     """Run the merge-training loop; returns ``(merges, seg)`` where
     ``merges`` is the driver-side list of ``(rank, left, right,
@@ -64,17 +62,19 @@ def _train(spark, docs: DataFrame, n_merges: int, text_col: str, cache_key=None)
     re-derives rounds 1..N-1 — same per-round materialization the
     iterative graph/components operators use.
 
-    Training is memoized per (cache_key, n_merges) when the caller
-    names the corpus version (the kmeans_centroids_df contract) — a
-    tokenizer is trained once per corpus version and applied many
-    times, so serving paths must not re-bill the training cost; the
-    trainer is deterministic, so cached and fresh results are
-    bit-identical. The cached seg table is a localCheckpoint, valid
-    for the life of the session.
+    Training is built once per (cache_key, n_merges) when the caller
+    names the corpus version — a tokenizer is trained once per corpus
+    version and applied many times, so serving paths must not re-bill
+    the training cost; the trainer is deterministic, so cached and
+    fresh results are bit-identical. The cached seg table is a
+    localCheckpoint, valid for the life of the session.
     """
-    key = (cache_key, n_merges) if cache_key is not None else None
-    if key is not None and key in _TRAIN_CACHE:
-        return _TRAIN_CACHE[key]
+    if cache_key is not None:
+        return build_once(
+            "bpe_train",
+            (cache_key, n_merges),
+            lambda _dir: _train(spark, docs, n_merges, text_col),
+        )
     words = (
         docs.select(tokens(text_col).alias("_toks"))
         .select(F.explode("_toks").alias("w"))
@@ -109,8 +109,6 @@ def _train(spark, docs: DataFrame, n_merges: int, text_col: str, cache_key=None)
         a, b, pf = pairs[0]["left"], pairs[0]["right"], pairs[0]["pfreq"]
         merges.append((r, a, b, a + b, int(pf)))
         cur = cur.select(_merge_pass(a, b).alias("seg"), "freq").localCheckpoint()
-    if key is not None:
-        _TRAIN_CACHE[key] = (merges, cur)
     return merges, cur
 
 

@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..artifacts import build_once
 from ..functions.text_funcs import normalize_text, token_count, tokens, word_shingles
 
 
@@ -1602,9 +1603,6 @@ def _bloom_positions(shingle_col, num_hashes: int, m_bits: int):
     ])
 
 
-_BLOOM_BITSET_CACHE: dict = {}
-
-
 def bloom_candidate_docs(
     train: DataFrame,
     eval_set: DataFrame,
@@ -1645,13 +1643,8 @@ def bloom_candidate_docs(
     from pyspark.sql.functions import pandas_udf
 
     spark = train.sparkSession
-    # the bitset is the build-once artifact of a decontamination pass
-    # (the benchmark set is fixed per corpus version) — memoized per
-    # cache_key like pq_train / ivf_layout_cached so repeated serving
-    # calls skip the eval-side scan + position collect
-    key = (cache_key, m_bits, num_hashes, n) if cache_key is not None else None
-    bc = _BLOOM_BITSET_CACHE.get(key) if key is not None else None
-    if bc is None:
+
+    def build(_dir):
         e_pos = (
             shingle_sets(eval_set, text_col, id_col, n)
             .select(F.explode(_bloom_positions(F.col("shingle"), num_hashes, m_bits)).alias("p"))
@@ -1661,9 +1654,15 @@ def bloom_candidate_docs(
         pos = np.array([r["p"] for r in e_pos.collect()], dtype=np.int64)
         if pos.size:
             np.bitwise_or.at(bitset, pos // 8, np.uint8(1) << (pos % 8).astype(np.uint8))
-        bc = spark.sparkContext.broadcast(bitset)
-        if key is not None:
-            _BLOOM_BITSET_CACHE[key] = bc
+        return spark.sparkContext.broadcast(bitset)
+
+    # the bitset is the build-once artifact of a decontamination pass
+    # (the benchmark set is fixed per corpus version), so repeated
+    # serving calls with a cache_key skip the eval-side scan + collect
+    if cache_key is None:
+        bc = build(None)
+    else:
+        bc = build_once("bloom_bitset", (cache_key, m_bits, num_hashes, n), build)
 
     @pandas_udf("boolean")
     def _hits(positions: pd.Series) -> pd.Series:

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..artifacts import build_once
 from ..functions.vector import cosine_from_parts, cosine_fast, norm_sq_exact, dot_exact
 
 
@@ -1027,9 +1028,6 @@ def ivf_retrain(
         _rm_f(os.path.join(_manifest_pool_dir(layout_path), cp))
 
 
-_IVF_LAYOUT_CACHE: dict = {}
-
-
 def ivf_layout_cached(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -1044,23 +1042,15 @@ def ivf_layout_cached(
     kmeans_centroids_df. A real ANN deployment builds the layout once
     and serves every probe from it; without this cache the registered
     serving audits were re-billing the build on every invocation
-    (the r6 similarity_ann_pq_rerank +90% bench regression). Layouts
-    live in a process-temp dir removed at interpreter exit; a cache
-    entry whose directory vanished underneath it is rebuilt.
+    (the r6 similarity_ann_pq_rerank +90% bench regression).
     """
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    path = _IVF_LAYOUT_CACHE.get(cache_key)
-    if path is not None and os.path.isdir(path):
+    def build(path):
+        write_ivf_layout(
+            corpus, centroids, path, carry=carry, partition_cols=partition_cols
+        )
         return path
-    path = tempfile.mkdtemp(prefix="sg_ivf_cache_")
-    write_ivf_layout(corpus, centroids, path, carry=carry, partition_cols=partition_cols)
-    _IVF_LAYOUT_CACHE[cache_key] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+
+    return build_once("ivf_layout", cache_key, build)
 
 
 def ann_ivf_probe_ondisk(
@@ -1451,9 +1441,6 @@ def clustered_cell_assignment(corpus: DataFrame, centroids, nprobe: int) -> Data
 # 64-dim float32 vector -> m=4 one-byte codes = 64x compression)
 # ---------------------------------------------------------------------------
 
-_PQ_BOOK_CACHE: dict = {}
-
-
 def pq_train(spark, corpus: DataFrame, dim: int, m: int = 4, k: int = 16,
              iters: int = 2, cache_key=None):
     """Train m per-subspace codebooks with the deterministic k-means
@@ -1477,21 +1464,21 @@ def pq_train(spark, corpus: DataFrame, dim: int, m: int = 4, k: int = 16,
             f"pq_train: dim={dim} is not divisible by m={m}; pad the "
             "vectors or pick m | dim so every coordinate is quantized"
         )
-    key = (cache_key, dim, m, k, iters) if cache_key is not None else None
-    if key is not None and key in _PQ_BOOK_CACHE:
-        return _PQ_BOOK_CACHE[key]
-    d_sub = dim // m
-    books = []
-    for s in range(m):
-        sliced = corpus.select(
-            "vec_id", F.slice("embedding", s * d_sub + 1, d_sub).alias("embedding")
-        )
-        C, _, alive = kmeans_fit(sliced, k=k, iters=iters)
-        ids = np.where(alive)[0].astype(np.int64)
-        books.append((ids, np.asarray(C, dtype=np.float64)[alive]))
-    if key is not None:
-        _PQ_BOOK_CACHE[key] = books
-    return books
+    def train(_dir):
+        d_sub = dim // m
+        books = []
+        for s in range(m):
+            sliced = corpus.select(
+                "vec_id", F.slice("embedding", s * d_sub + 1, d_sub).alias("embedding")
+            )
+            C, _, alive = kmeans_fit(sliced, k=k, iters=iters)
+            ids = np.where(alive)[0].astype(np.int64)
+            books.append((ids, np.asarray(C, dtype=np.float64)[alive]))
+        return books
+
+    if cache_key is None:
+        return train(None)
+    return build_once("pq_books", (cache_key, dim, m, k, iters), train)
 
 
 def pq_encode(corpus: DataFrame, books, m: int = 4, carry: tuple = ()) -> DataFrame:
@@ -1536,9 +1523,6 @@ def pq_encode(corpus: DataFrame, books, m: int = 4, carry: tuple = ()) -> DataFr
     return corpus.select("vec_id", "embedding", *carry).mapInPandas(_enc, schema)
 
 
-_PQ_CODES_CACHE: dict = {}
-
-
 def pq_codes_cached(spark, layout_path: str, books, m: int, cache_key) -> str:
     """Encode-once PQ codes artifact — returns a parquet path of
     (vec_id, codes, list_id) rows encoded FROM a
@@ -1547,30 +1531,20 @@ def pq_codes_cached(spark, layout_path: str, books, m: int, cache_key) -> str:
     deployment builds once per corpus version (faiss persists them in
     the index file); serving then reads this m-bytes-per-vector table
     instead of re-running the full-corpus encode pass per query.
-    Cache-eviction/cleanup contract identical to
-    :func:`ivf_layout_cached`.
     """
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    path = _PQ_CODES_CACHE.get(cache_key)
-    if path is not None and os.path.isdir(path):
+    def build(path):
+        codes = pq_encode(
+            ivf_scan(spark, layout_path).withColumn(
+                "list_id", F.col("list_id").cast("bigint")
+            ),
+            books,
+            m=m,
+            carry=("list_id",),
+        )
+        codes.write.mode("overwrite").parquet(path)
         return path
-    path = tempfile.mkdtemp(prefix="sg_pq_codes_")
-    codes = pq_encode(
-        ivf_scan(spark, layout_path).withColumn(
-            "list_id", F.col("list_id").cast("bigint")
-        ),
-        books,
-        m=m,
-        carry=("list_id",),
-    )
-    codes.write.mode("overwrite").parquet(path)
-    _PQ_CODES_CACHE[cache_key] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+
+    return build_once("pq_codes", cache_key, build)
 
 
 def pq_adc_topk(

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import build_once
 from ..operators.dedup import (
     exact_dedup,
     md5_hash60_duckdb_sql,
@@ -806,13 +807,10 @@ def corpus_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CC_BASE_CACHE: dict = {}
-
-
 def _cc_base_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
-    """Build-once STANDING dedup index of the base (80%) corpus — the
-    ivf_layout_cached contract (r10 VERDICT #5): a production cluster
-    index is built once and then MAINTAINED; the registered
+    """Build-once STANDING dedup index of the base (80%) corpus (r10
+    VERDICT #5): a production cluster index is built once and then
+    MAINTAINED; the registered
     incremental audit was rebuilding the base labeling on every call
     (15.1 s at sf0.1, the #2 bench entry), billing the one-shot solve
     to an operator whose whole point is the O(batch) fold. The index
@@ -821,28 +819,24 @@ def _cc_base_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
     entries (jaccard_prefix_index) the one-sided exact probe reads —
     so repeated calls read them back instead of re-solving/re-ranking.
     Returns (labels, sh_corpus, prefix_corpus) DataFrames."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from ..operators.components import connected_components
     from ..operators.dedup import jaccard_prefix_index, ngram_jaccard_pairs_prefix
 
-    path = _CC_BASE_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
+    def build(path):
         docs = balanced(spark, load_table(spark, sf_dir, "documents"))
         old = docs.filter(F.col("doc_id") % 5 != 0)
         base = connected_components(
             ngram_jaccard_pairs_prefix(old, threshold=0.8), src="d1", dst="d2"
         )
         sh, prefix = jaccard_prefix_index(old, threshold=0.8)
-        path = tempfile.mkdtemp(prefix="sg_ccbase_")
         base.write.mode("overwrite").parquet(os.path.join(path, "labels"))
         sh.write.mode("overwrite").parquet(os.path.join(path, "shingles"))
         prefix.write.mode("overwrite").parquet(os.path.join(path, "prefix"))
-        _CC_BASE_CACHE[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+        return path
+
+    path = build_once("cc_base_index", sf_dir, build)
     return (
         spark.read.parquet(os.path.join(path, "labels")),
         spark.read.parquet(os.path.join(path, "shingles")),

@@ -5,9 +5,12 @@ driver-checked queries over the TPC-H-ish tables."""
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import build_once
 from ..operators.cdc import merge_latest_snapshot
 from ..operators.profile import profile_table
 from ..sources.tables import load_table
@@ -194,9 +197,6 @@ def cdc_read_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZORDER_CACHE: dict = {}
-
-
 def _orders_zorder_spec(sf_dir: str) -> dict:
     """Quantization spec for the orders (price, order-date) layout,
     DERIVED FROM COLUMN STATS (r9 ADVICE: the domain constants were
@@ -212,31 +212,27 @@ def _orders_zorder_spec(sf_dir: str) -> dict:
     )
 
 
-def _zorder_layout_cached(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once z-ordered orders layout (the ivf_layout_cached
-    contract): stats-derived quantized (price, order-day) interleaved
-    into a 20-bit Morton value, 256 level-8 cells, files (cell, z)-
-    ordered and committed through the r14 versioned commit log; the
-    spec rides IN the commit payload so appends/compactions reuse its
-    grid."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from ..operators.layout import write_zorder_table
-
-    path = _ZORDER_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    orders = load_table(spark, sf_dir, "orders").select(
+def _orders_box(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    path = tempfile.mkdtemp(prefix="sg_zorder_")
-    write_zorder_table(orders, _orders_zorder_spec(sf_dir), path)
-    _ZORDER_CACHE[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+
+
+def _zorder_layout_cached(spark: SparkSession, sf_dir: str) -> str:
+    """Build-once z-ordered orders layout: stats-derived quantized
+    (price, order-day) interleaved into a 20-bit Morton value, 256
+    level-8 cells, files (cell, z)-ordered and committed through the
+    r14 versioned commit log; the spec rides IN the commit payload so
+    appends/compactions reuse its grid."""
+    from ..operators.layout import write_zorder_table
+
+    def build(path):
+        write_zorder_table(
+            _orders_box(spark, sf_dir), _orders_zorder_spec(sf_dir), path
+        )
+        return path
+
+    return build_once("zorder", sf_dir, build)
 
 
 @query(
@@ -284,64 +280,56 @@ def layout_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("o_orderkey", "o_totalprice", "o_orderdate")
 
 
-_ZORDER_COMPACT_CACHE: dict = {}
+def _curve_compacted(spark: SparkSession, sf_dir: str, name: str, write_table):
+    """Build-once append-then-compact scaffold over orders for either
+    curve: ``write_table`` lays out the BASE 80% (o_orderkey % 5 != 0),
+    one :func:`~..operators.layout.zorder_append` routes the remaining
+    20% along the layout's own committed curve (touched cells committed
+    as dirty), then ONE :func:`~..operators.layout.zorder_compact` folds
+    exactly the dirty buckets. The clean-bucket byte-identity check runs
+    at compaction time, when 'before' is observable, and rides the
+    artifact. Returns (layout_path, dirty_ids, compacted_ids,
+    clean_untouched_ok)."""
+    import os
+
+    from ..operators.layout import zorder_append, zorder_compact
+
+    def build(path):
+        orders = _orders_box(spark, sf_dir)
+        # production shape: stats predate the split (the spec comes from
+        # the table's footers once; appends reuse the layout's own grid)
+        base = orders.filter(F.col("o_orderkey") % 5 != 0)
+        write_table(base, _orders_zorder_spec(sf_dir), path)
+        dirty = zorder_append(orders.filter(F.col("o_orderkey") % 5 == 0), path)
+
+        def _files():
+            ddir = os.path.join(path, "data")
+            return {
+                f: os.path.getsize(os.path.join(ddir, f))
+                for f in os.listdir(ddir)
+                if f.endswith(".parquet")
+            }
+
+        before = _files()
+        compacted = zorder_compact(spark, path)
+        after = _files()
+        # commit-log immutability (r14): compaction only ADDS files —
+        # every pre-compaction data file must still be present
+        # byte-identical (the replaced ones stay referenced by retained
+        # versions until retention GC), so clean files are untouched BY
+        # CONSTRUCTION and pinned readers survive the rewrite
+        clean_ok = all(after.get(f) == sz for f, sz in before.items())
+        return path, dirty, compacted, clean_ok
+
+    return build_once(name, sf_dir, build)
 
 
 def _zorder_compacted_cached(spark: SparkSession, sf_dir: str):
-    """Build-once scaffolding for layout_zorder_compacted_scan: a
-    z-order layout over the BASE 80% of orders (o_orderkey % 5 != 0),
-    one :func:`~..operators.layout.zorder_append` of the remaining 20%
-    (cell-routed, touched cells committed as dirty), then ONE
-    :func:`~..operators.layout.zorder_compact` folding exactly the
-    dirty buckets. The clean-bucket byte-identity check runs at
-    compaction time, when 'before' is observable, and rides the cache.
-    Returns (layout_path, dirty_ids, compacted_ids, clean_untouched_ok)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    """Build-once scaffolding for layout_zorder_compacted_scan: the
+    Morton append-then-compact scaffold (:func:`_curve_compacted`)."""
+    from ..operators.layout import write_zorder_table
 
-    from ..operators.layout import (
-        write_zorder_table,
-        zorder_append,
-        zorder_compact,
-    )
-
-    hit = _ZORDER_COMPACT_CACHE.get(sf_dir)
-    if hit is not None and os.path.isdir(hit[0]):
-        return hit
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderdate"
-    )
-    base = orders.filter(F.col("o_orderkey") % 5 != 0)
-    incoming = orders.filter(F.col("o_orderkey") % 5 == 0)
-    path = tempfile.mkdtemp(prefix="sg_zorder_inc_")
-    # production shape: stats predate the split (the spec comes from
-    # the table's footers once; appends reuse the layout's own grid)
-    write_zorder_table(base, _orders_zorder_spec(sf_dir), path)
-    dirty = zorder_append(incoming, path)
-
-    def _files():
-        ddir = os.path.join(path, "data")
-        return {
-            f: os.path.getsize(os.path.join(ddir, f))
-            for f in os.listdir(ddir)
-            if f.endswith(".parquet")
-        }
-
-    before = _files()
-    compacted = zorder_compact(spark, path)
-    after = _files()
-    # commit-log immutability (r14): compaction only ADDS files — every
-    # pre-compaction data file must still be present byte-identical
-    # (the replaced ones stay referenced by retained versions until
-    # retention GC), so clean files are untouched BY CONSTRUCTION and
-    # pinned readers survive the rewrite
-    clean_ok = all(after.get(f) == sz for f, sz in before.items())
-    out = (path, dirty, compacted, clean_ok)
-    _ZORDER_COMPACT_CACHE[sf_dir] = out
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return out
+    return _curve_compacted(spark, sf_dir, "zorder_compacted", write_zorder_table)
 
 
 @query(
@@ -387,33 +375,21 @@ def layout_zorder_compacted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("o_orderkey", "o_totalprice", "o_orderdate")
 
 
-_HILBERT_CACHE: dict = {}
-
-
 def _hilbert_layout_cached(spark: SparkSession, sf_dir: str) -> str:
     """Build-once HILBERT-ordered orders layout: the same stats-derived
     (price, order-day) quantizers as the Morton layout, but buckets
     follow the level-4 Hilbert curve (one bucket = one curve cell =
     one axis-aligned square; the cell id is a 256-entry literal-array
-    lookup, pure JVM). Same cache contract as the Morton layout."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    lookup, pure JVM)."""
     from ..operators.layout import write_hilbert_table
 
-    path = _HILBERT_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
+    def build(path):
+        write_hilbert_table(
+            _orders_box(spark, sf_dir), _orders_zorder_spec(sf_dir), path
+        )
         return path
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderdate"
-    )
-    path = tempfile.mkdtemp(prefix="sg_hilbert_")
-    write_hilbert_table(orders, _orders_zorder_spec(sf_dir), path)
-    _HILBERT_CACHE[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+
+    return build_once("hilbert", sf_dir, build)
 
 
 @query(
@@ -462,43 +438,38 @@ def layout_hilbert_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("o_orderkey", "o_totalprice", "o_orderdate")
 
 
-_ZORDER3_CACHE: dict = {}
+def _lineitem3_layout(spark: SparkSession, sf_dir: str, name: str, write_table) -> str:
+    """Build-once 3-column lineitem layout written by ``write_table``
+    over the stats-derived (price, ship-day, quantity) spec: 7 bits per
+    axis, 9 prefix bits = 3 per axis -> 512 box buckets."""
+    import os
+
+    from ..operators.layout import derive_zorder_spec_nd
+
+    def build(path):
+        spec = derive_zorder_spec_nd(
+            os.path.join(sf_dir, "lineitem.parquet"),
+            [("l_extendedprice", "num"), ("l_shipdate", "date"), ("l_quantity", "num")],
+            bits=7,
+            prefix_bits=9,
+        )
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity", "l_shipdate"
+        )
+        write_table(li, spec, path)
+        return path
+
+    return build_once(name, sf_dir, build)
 
 
 def _zorder3_layout_cached(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once 3-COLUMN z-ordered lineitem layout: stats-derived
-    quantized (price, ship-day, quantity) interleaved into a 21-bit
-    Morton value, bucketed by its top 9 bits -> 512 box partitions
-    (3 prefix bits per dimension: 8 cells per axis), z-sorted within
-    each. Same cache contract as the 2-D layout."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    """Build-once 3-COLUMN z-ordered lineitem layout: quantized (price,
+    ship-day, quantity) interleaved into a 21-bit Morton value,
+    bucketed by its top 9 bits -> 512 box partitions (8 cells per
+    axis), z-sorted within each."""
+    from ..operators.layout import write_zorder_table_nd
 
-    from ..operators.layout import derive_zorder_spec_nd, write_zorder_table_nd
-
-    path = _ZORDER3_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    spec = derive_zorder_spec_nd(
-        os.path.join(sf_dir, "lineitem.parquet"),
-        [("l_extendedprice", "num"), ("l_shipdate", "date"), ("l_quantity", "num")],
-        bits=7,
-        prefix_bits=9,
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_linenumber",
-        "l_extendedprice",
-        "l_quantity",
-        "l_shipdate",
-    )
-    path = tempfile.mkdtemp(prefix="sg_zorder3_")
-    write_zorder_table_nd(li, spec, path)
-    _ZORDER3_CACHE[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+    return _lineitem3_layout(spark, sf_dir, "zorder3", write_zorder_table_nd)
 
 
 @query(
@@ -550,29 +521,19 @@ def layout_zorder3_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DPP_CACHE: dict = {}
-
-
 def _dpp_layout_cached(spark: SparkSession, sf_dir: str) -> str:
     """Build-once lineitem layout partitioned by ship MONTH — the
     date-partitioned fact table every warehouse keeps; 83 month
     partitions at this data's 1995-2001 span."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
 
-    path = _DPP_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
+    def build(path):
+        li = load_table(spark, sf_dir, "lineitem").withColumn(
+            "l_smonth", F.date_format("l_shipdate", "yyyy-MM")
+        )
+        li.write.mode("overwrite").partitionBy("l_smonth").parquet(path)
         return path
-    li = load_table(spark, sf_dir, "lineitem").withColumn(
-        "l_smonth", F.date_format("l_shipdate", "yyyy-MM")
-    )
-    path = tempfile.mkdtemp(prefix="sg_dpp_")
-    li.write.mode("overwrite").partitionBy("l_smonth").parquet(path)
-    _DPP_CACHE[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+
+    return build_once("dpp", sf_dir, build)
 
 
 @query(
@@ -646,7 +607,6 @@ def layout_dpp_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SKIP_CACHE: dict = {}
 _SKIP_COLS = ["l_shipdate", "l_extendedprice"]
 
 
@@ -657,31 +617,36 @@ def _skip_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_skip_scaffold(
+    spark: SparkSession, sf_dir: str, name: str, n_files: int, **kw
+) -> str:
+    """Build-once stats-layout scaffold stored under ``name`` (see
+    :func:`_write_skip_scaffold` for the lifecycle variants)."""
+    return build_once(
+        name,
+        sf_dir,
+        lambda path: _write_skip_scaffold(spark, sf_dir, path, n_files, **kw),
+    )
+
+
+def _write_skip_scaffold(
     spark: SparkSession,
     sf_dir: str,
-    cache: dict,
-    prefix: str,
+    path: str,
     n_files: int,
     with_appends: bool = False,
     replay: bool = False,
     compact_div: int | None = None,
     delete: dict | None = None,
 ) -> str:
-    """Build-once stats-layout scaffold (the ivf_layout_cached
-    contract) — ONE builder for the whole lifecycle family so the
-    scan / appended / compacted / deleted entries can never drift onto
-    different data: the plain 48-file layout, the 80%-base +
-    two-batch appended variant (odd then even line numbers, optional
-    committed-replay of the first batch on the real corpus), the
-    appended-then-compacted variant, and the appended-then-DELETED
-    variant (``delete`` is a stats_delete range dict; the committed
-    delete is replayed once with its stable batch_id to exercise the
-    short-circuit on the real corpus)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    """Write a stats-layout scaffold into ``path`` — ONE writer for the
+    whole lifecycle family so the scan / appended / compacted / deleted
+    / restored entries can never drift onto different data: the plain
+    48-file layout, the 80%-base + two-batch appended variant (odd then
+    even line numbers, optional committed-replay of the first batch on
+    the real corpus), the appended-then-compacted variant, and the
+    appended-then-DELETED variant (``delete`` is a stats_delete range
+    dict; the committed delete is replayed once with its stable
+    batch_id to exercise the short-circuit on the real corpus)."""
     from ..operators.layout import (
         stats_append,
         stats_compact,
@@ -689,11 +654,7 @@ def _build_skip_scaffold(
         write_stats_layout,
     )
 
-    path = cache.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
     li = _skip_lineitem(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix=prefix)
     if not with_appends:
         write_stats_layout(li, path, _SKIP_COLS, n_files=n_files)
     else:
@@ -714,8 +675,6 @@ def _build_skip_scaffold(
         if delete is not None:
             stats_delete(spark, path, delete, batch_id="purge-1")
             stats_delete(spark, path, delete, batch_id="purge-1")  # committed: no-op
-    cache[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
 
 
@@ -739,7 +698,7 @@ def _skip_layout_cached(spark: SparkSession, sf_dir: str) -> str:
     """Build-once stats-skipping lineitem layout: 48 range-partitioned
     files on l_shipdate with the per-file min/max manifest alongside
     (operators/layout.py write_stats_layout)."""
-    return _build_skip_scaffold(spark, sf_dir, _SKIP_CACHE, "sg_skip_", 48)
+    return _build_skip_scaffold(spark, sf_dir, "skip", 48)
 
 
 @query(
@@ -781,9 +740,6 @@ def layout_stats_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _skip_scan_3months(spark, _skip_layout_cached(spark, sf_dir))
 
 
-_SKIP_APPEND_CACHE: dict = {}
-
-
 def _skip_appended_cached(spark: SparkSession, sf_dir: str) -> str:
     """Build-once scaffolding for layout_stats_appended_scan: the
     stats-skipping layout over the BASE 80% of lineitem (l_orderkey %
@@ -794,8 +750,7 @@ def _skip_appended_cached(spark: SparkSession, sf_dir: str) -> str:
     replayed once with its stable batch_id to exercise the committed
     short-circuit on the real corpus (no duplicate rows can enter)."""
     return _build_skip_scaffold(
-        spark, sf_dir, _SKIP_APPEND_CACHE, "sg_skipapp_", 48,
-        with_appends=True, replay=True,
+        spark, sf_dir, "skip_appended", 48, with_appends=True, replay=True
     )
 
 
@@ -833,9 +788,6 @@ def layout_stats_appended_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _skip_scan_3months(spark, _skip_appended_cached(spark, sf_dir))
 
 
-_SKIP_COMPACT_CACHE: dict = {}
-
-
 def _skip_compacted_cached(spark: SparkSession, sf_dir: str) -> str:
     """Build-once scaffolding for layout_stats_compacted_scan: the
     appended layout's lifecycle completed — base 80% written as 16
@@ -847,8 +799,7 @@ def _skip_compacted_cached(spark: SparkSession, sf_dir: str) -> str:
     ~ n/12 rows/file, so the 16 base + batch files all qualify as
     small and compaction exercises a real multi-file bin-pack."""
     return _build_skip_scaffold(
-        spark, sf_dir, _SKIP_COMPACT_CACHE, "sg_skipcomp_", 16,
-        with_appends=True, compact_div=12,
+        spark, sf_dir, "skip_compacted", 16, with_appends=True, compact_div=12
     )
 
 
@@ -889,7 +840,8 @@ def layout_stats_compacted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _skip_scan_3months(spark, _skip_compacted_cached(spark, sf_dir))
 
 
-_SKIP_DELETE_CACHE: dict = {}
+# the ship-date slice the deleted and restored scaffolds purge
+_APRIL_1996 = {"l_shipdate": (datetime(1996, 4, 1), datetime(1996, 4, 30))}
 
 
 def _skip_deleted_cached(spark: SparkSession, sf_dir: str) -> str:
@@ -901,12 +853,8 @@ def _skip_deleted_cached(spark: SparkSession, sf_dir: str) -> str:
     overlaps April are rewritten, planned from the manifest alone),
     replayed once with its stable batch_id (committed short-circuit:
     byte-level no-op)."""
-    from datetime import datetime
-
     return _build_skip_scaffold(
-        spark, sf_dir, _SKIP_DELETE_CACHE, "sg_skipdel_", 48,
-        with_appends=True,
-        delete={"l_shipdate": (datetime(1996, 4, 1), datetime(1996, 4, 30))},
+        spark, sf_dir, "skip_deleted", 48, with_appends=True, delete=_APRIL_1996
     )
 
 
@@ -952,62 +900,15 @@ def layout_stats_deleted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _skip_scan_3months(spark, _skip_deleted_cached(spark, sf_dir))
 
 
-_HILBERT_COMPACT_CACHE: dict = {}
-
-
 def _hilbert_compacted_cached(spark: SparkSession, sf_dir: str):
     """Build-once scaffolding for layout_hilbert_compacted_scan — the
     Morton compacted scaffold with the curve swapped (r11 VERDICT #6,
-    Hilbert lifecycle parity): a Hilbert layout over the BASE 80% of
-    orders, one zorder_append of the rest (the committed spec's
-    ``curve: hilbert`` marker routes the batch along the layout's OWN
-    curve — no Hilbert-specific append code exists, which is the
-    point), then one zorder_compact folding exactly the dirty cells.
-    Returns (layout_path, dirty_ids, compacted_ids, clean_untouched_ok)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    Hilbert lifecycle parity): the committed spec's ``curve: hilbert``
+    marker routes the appended batch along the layout's OWN curve — no
+    Hilbert-specific append code exists, which is the point."""
+    from ..operators.layout import write_hilbert_table
 
-    from ..operators.layout import (
-        write_hilbert_table,
-        zorder_append,
-        zorder_compact,
-    )
-
-    hit = _HILBERT_COMPACT_CACHE.get(sf_dir)
-    if hit is not None and os.path.isdir(hit[0]):
-        return hit
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderdate"
-    )
-    base = orders.filter(F.col("o_orderkey") % 5 != 0)
-    incoming = orders.filter(F.col("o_orderkey") % 5 == 0)
-    path = tempfile.mkdtemp(prefix="sg_hilbert_inc_")
-    write_hilbert_table(base, _orders_zorder_spec(sf_dir), path)
-    dirty = zorder_append(incoming, path)
-
-    def _files():
-        ddir = os.path.join(path, "data")
-        return {
-            f: os.path.getsize(os.path.join(ddir, f))
-            for f in os.listdir(ddir)
-            if f.endswith(".parquet")
-        }
-
-    before = _files()
-    compacted = zorder_compact(spark, path)
-    after = _files()
-    # commit-log immutability (r14): compaction only ADDS files — every
-    # pre-compaction data file must still be present byte-identical
-    # (the replaced ones stay referenced by retained versions until
-    # retention GC), so clean files are untouched BY CONSTRUCTION and
-    # pinned readers survive the rewrite
-    clean_ok = all(after.get(f) == sz for f, sz in before.items())
-    out = (path, dirty, compacted, clean_ok)
-    _HILBERT_COMPACT_CACHE[sf_dir] = out
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return out
+    return _curve_compacted(spark, sf_dir, "hilbert_compacted", write_hilbert_table)
 
 
 @query(
@@ -1053,9 +954,6 @@ def layout_hilbert_compacted_scan(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select("o_orderkey", "o_totalprice", "o_orderdate")
 
 
-_SKIP_MERGE_CACHE: dict = {}
-
-
 def _skip_merged_cached(spark: SparkSession, sf_dir: str) -> str:
     """Build-once scaffolding for layout_stats_merged_scan: the orders
     INSERT state (seq 1 of the synthetic CDC feed) written as a stats
@@ -1066,35 +964,27 @@ def _skip_merged_cached(spark: SparkSession, sf_dir: str) -> str:
     both updated and later deleted lands on the delete side, exactly
     the CDC semantics) and the deleted keys — replayed once with its
     stable batch_id (committed short-circuit)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from ..operators.layout import stats_merge, write_stats_layout
 
-    path = _SKIP_MERGE_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
+    def build(path):
+        orders = load_table(spark, sf_dir, "orders")
+        base = orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
+        snap = merge_latest_snapshot(_changes(spark, sf_dir), ["o_orderkey"])
+        ups = snap.filter(F.col("o_orderkey") % 5 == 0).select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        )
+        dels = (
+            _changes(spark, sf_dir)
+            .filter(F.col("op") == "D")
+            .select("o_orderkey")
+            .distinct()
+        )
+        write_stats_layout(base, path, ["o_orderkey", "o_totalprice"], n_files=16)
+        stats_merge(spark, path, ups, dels, "o_orderkey", batch_id="cdc-1")
+        stats_merge(spark, path, ups, dels, "o_orderkey", batch_id="cdc-1")  # replay
         return path
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
-    snap = merge_latest_snapshot(_changes(spark, sf_dir), ["o_orderkey"])
-    ups = snap.filter(F.col("o_orderkey") % 5 == 0).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    dels = (
-        _changes(spark, sf_dir)
-        .filter(F.col("op") == "D")
-        .select("o_orderkey")
-        .distinct()
-    )
-    path = tempfile.mkdtemp(prefix="sg_skipmerge_")
-    write_stats_layout(base, path, ["o_orderkey", "o_totalprice"], n_files=16)
-    stats_merge(spark, path, ups, dels, "o_orderkey", batch_id="cdc-1")
-    stats_merge(spark, path, ups, dels, "o_orderkey", batch_id="cdc-1")  # replay
-    _SKIP_MERGE_CACHE[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+
+    return build_once("skip_merged", sf_dir, build)
 
 
 @query(
@@ -1195,9 +1085,6 @@ def layout_stats_timetravel_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SKIP_EVOLVE_CACHE: dict = {}
-
-
 def _skip_evolved_cached(spark: SparkSession, sf_dir: str) -> str:
     """Build-once scaffolding for layout_stats_evolved_scan: the base
     80% of lineitem written WITHOUT ``l_quantity``, then the remaining
@@ -1208,26 +1095,18 @@ def _skip_evolved_cached(spark: SparkSession, sf_dir: str) -> str:
     always pruned under a quantity predicate, exact for files that
     predate the column: they hold only NULLs there).
     The batch is replayed once (committed short-circuit)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from ..operators.layout import stats_append, write_stats_layout
 
-    path = _SKIP_EVOLVE_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
+    def build(path):
+        li = _skip_lineitem(spark, sf_dir)
+        base = li.filter(F.col("l_orderkey") % 5 != 0).drop("l_quantity")
+        batch = li.filter(F.col("l_orderkey") % 5 == 0)
+        write_stats_layout(base, path, ["l_shipdate", "l_extendedprice"], n_files=48)
+        stats_append(batch, path, batch_id="evolve-1", new_skip_cols=["l_quantity"])
+        stats_append(batch, path, batch_id="evolve-1", new_skip_cols=["l_quantity"])
         return path
-    li = _skip_lineitem(spark, sf_dir)
-    base = li.filter(F.col("l_orderkey") % 5 != 0).drop("l_quantity")
-    batch = li.filter(F.col("l_orderkey") % 5 == 0)
-    path = tempfile.mkdtemp(prefix="sg_skipevo_")
-    write_stats_layout(base, path, ["l_shipdate", "l_extendedprice"], n_files=48)
-    stats_append(batch, path, batch_id="evolve-1", new_skip_cols=["l_quantity"])
-    stats_append(batch, path, batch_id="evolve-1", new_skip_cols=["l_quantity"])
-    _SKIP_EVOLVE_CACHE[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+
+    return build_once("skip_evolved", sf_dir, build)
 
 
 @query(
@@ -1281,9 +1160,6 @@ def layout_stats_evolved_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SKIP_CONC_CACHE: dict = {}
-
-
 def _skip_concurrent_cached(spark: SparkSession, sf_dir: str) -> str:
     """Build-once scaffolding for layout_stats_concurrent_appends: the
     base 60% of lineitem written once, then the two 20% batches
@@ -1291,43 +1167,36 @@ def _skip_concurrent_cached(spark: SparkSession, sf_dir: str) -> str:
     corpus (the loser re-points its part list at the winner's commit
     and retries; both land, no lost update). Fails the build if either
     writer errors."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
     import threading
 
     from ..operators.layout import stats_append, write_stats_layout
 
-    path = _SKIP_CONC_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
+    def build(path):
+        li = _skip_lineitem(spark, sf_dir)
+        base = li.filter(F.col("l_orderkey") % 5 > 1)
+        b0 = li.filter(F.col("l_orderkey") % 5 == 0)
+        b1 = li.filter(F.col("l_orderkey") % 5 == 1)
+        write_stats_layout(base, path, _SKIP_COLS, n_files=32)
+        errs: list = []
+
+        def run(df, bid):
+            try:
+                stats_append(df, path, batch_id=bid)
+            except Exception as e:  # surfaced by the assert below
+                errs.append(e)
+
+        threads = [
+            threading.Thread(target=run, args=(b0, "writer-0")),
+            threading.Thread(target=run, args=(b1, "writer-1")),
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert not errs, errs
         return path
-    li = _skip_lineitem(spark, sf_dir)
-    base = li.filter(F.col("l_orderkey") % 5 > 1)
-    b0 = li.filter(F.col("l_orderkey") % 5 == 0)
-    b1 = li.filter(F.col("l_orderkey") % 5 == 1)
-    path = tempfile.mkdtemp(prefix="sg_skipconc_")
-    write_stats_layout(base, path, _SKIP_COLS, n_files=32)
-    errs: list = []
 
-    def run(df, bid):
-        try:
-            stats_append(df, path, batch_id=bid)
-        except Exception as e:  # surfaced by the assert below
-            errs.append(e)
-
-    threads = [
-        threading.Thread(target=run, args=(b0, "writer-0")),
-        threading.Thread(target=run, args=(b1, "writer-1")),
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errs, errs
-    _SKIP_CONC_CACHE[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+    return build_once("skip_concurrent", sf_dir, build)
 
 
 @query(
@@ -1361,43 +1230,13 @@ def layout_stats_concurrent_appends(spark: SparkSession, sf_dir: str) -> DataFra
     return _skip_scan_3months(spark, _skip_concurrent_cached(spark, sf_dir))
 
 
-_HILBERT3_CACHE: dict = {}
-
-
 def _hilbert3_layout_cached(spark: SparkSession, sf_dir: str) -> str:
     """Build-once 3-COLUMN HILBERT lineitem layout: the zorder3
-    scaffold's spec (quantized price, ship-day, quantity; 7 bits each;
-    9 prefix bits = 3 per axis -> 512 level-3 Hilbert cells) with the
-    bucket ids mapped through the n-D Hilbert walk instead of the
-    Morton prefix. Same cache contract as the other layouts."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    scaffold's spec with the bucket ids mapped through the n-D Hilbert
+    walk (512 level-3 cells) instead of the Morton prefix."""
+    from ..operators.layout import write_hilbert_table_nd
 
-    from ..operators.layout import derive_zorder_spec_nd, write_hilbert_table_nd
-
-    path = _HILBERT3_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    spec = derive_zorder_spec_nd(
-        os.path.join(sf_dir, "lineitem.parquet"),
-        [("l_extendedprice", "num"), ("l_shipdate", "date"), ("l_quantity", "num")],
-        bits=7,
-        prefix_bits=9,
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_linenumber",
-        "l_extendedprice",
-        "l_quantity",
-        "l_shipdate",
-    )
-    path = tempfile.mkdtemp(prefix="sg_hilbert3_")
-    write_hilbert_table_nd(li, spec, path)
-    _HILBERT3_CACHE[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+    return _lineitem3_layout(spark, sf_dir, "hilbert3", write_hilbert_table_nd)
 
 
 @query(
@@ -1488,9 +1327,6 @@ def layout_stats_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats_history(spark, layout).select("version", "op", "n_parts")
 
 
-_SKIP_RESTORE_CACHE: dict = {}
-
-
 def _skip_restored_cached(spark: SparkSession, sf_dir: str) -> str:
     """Build-once scaffolding for layout_stats_restored_scan: its OWN
     copy of the append+delete lifecycle (the deleted/timetravel
@@ -1499,26 +1335,17 @@ def _skip_restored_cached(spark: SparkSession, sf_dir: str) -> str:
     one :func:`~..operators.layout.stats_restore` (replayed once —
     committed short-circuit). The live table is then exactly the
     post-append state while the undone delete remains in history."""
-    import os
-    from datetime import datetime
-
     from ..operators.layout import stats_restore
 
-    path = _SKIP_RESTORE_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
+    def build(path):
+        _write_skip_scaffold(
+            spark, sf_dir, path, 48, with_appends=True, delete=_APRIL_1996
+        )
+        stats_restore(spark, path, 3, batch_id="undo-1")
+        stats_restore(spark, path, 3, batch_id="undo-1")  # committed: no-op
         return path
-    cache: dict = {}
-    # _build_skip_scaffold registers the atexit cleanup itself — this
-    # builder only layers the rollback on top of its own private copy
-    path = _build_skip_scaffold(
-        spark, sf_dir, cache, "sg_skiprestore_", 48,
-        with_appends=True,
-        delete={"l_shipdate": (datetime(1996, 4, 1), datetime(1996, 4, 30))},
-    )
-    stats_restore(spark, path, 3, batch_id="undo-1")
-    stats_restore(spark, path, 3, batch_id="undo-1")  # committed: no-op
-    _SKIP_RESTORE_CACHE[sf_dir] = path
-    return path
+
+    return build_once("skip_restored", sf_dir, build)
 
 
 @query(
@@ -1556,9 +1383,6 @@ def layout_stats_restored_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _skip_scan_3months(spark, _skip_restored_cached(spark, sf_dir))
 
 
-_SKIP_CLUSTER_CACHE: dict = {}
-
-
 def _skip_clustered_cached(spark: SparkSession, sf_dir: str):
     """Build-once scaffolding for layout_stats_clustered_scan: the
     48-file range layout on (l_shipdate, l_extendedprice) — where
@@ -1569,32 +1393,21 @@ def _skip_clustered_cached(spark: SparkSession, sf_dir: str):
     Returns (path, files_planned_before, files_planned_after) for the
     box the registered query serves; the build asserts the clustering
     actually tightened the plan."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    from datetime import datetime
-
     from ..operators.layout import stats_cluster, stats_pruned_scan, write_stats_layout
 
-    hit = _SKIP_CLUSTER_CACHE.get(sf_dir)
-    if hit is not None and os.path.isdir(hit[0]):
-        return hit
-    li = _skip_lineitem(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="sg_skipclust_")
-    write_stats_layout(li, path, _SKIP_COLS, n_files=48)
-    box = {
-        "l_shipdate": (datetime(1993, 1, 1), datetime(1998, 12, 31)),
-        "l_extendedprice": (30000.0, 34000.0),
-    }
-    _df, before = stats_pruned_scan(spark, path, box, return_files=True)
-    stats_cluster(spark, path, _SKIP_COLS, n_files=48, batch_id="opt-1")
-    stats_cluster(spark, path, _SKIP_COLS, n_files=48, batch_id="opt-1")  # replay
-    _df, after = stats_pruned_scan(spark, path, box, return_files=True)
-    out = (path, len(before), len(after))
-    _SKIP_CLUSTER_CACHE[sf_dir] = out
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return out
+    def build(path):
+        write_stats_layout(_skip_lineitem(spark, sf_dir), path, _SKIP_COLS, n_files=48)
+        box = {
+            "l_shipdate": (datetime(1993, 1, 1), datetime(1998, 12, 31)),
+            "l_extendedprice": (30000.0, 34000.0),
+        }
+        _df, before = stats_pruned_scan(spark, path, box, return_files=True)
+        stats_cluster(spark, path, _SKIP_COLS, n_files=48, batch_id="opt-1")
+        stats_cluster(spark, path, _SKIP_COLS, n_files=48, batch_id="opt-1")  # replay
+        _df, after = stats_pruned_scan(spark, path, box, return_files=True)
+        return path, len(before), len(after)
+
+    return build_once("skip_clustered", sf_dir, build)
 
 
 @query(
@@ -1687,9 +1500,6 @@ def layout_stats_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RETROFIT_CACHE: dict = {}
-
-
 def _skip_retrofit_cached(spark: SparkSession, sf_dir: str) -> str:
     """Build-once scaffolding for layout_stats_retrofit_scan: a stats
     layout over lineitem keyed on l_shipdate whose data arrived in
@@ -1701,11 +1511,6 @@ def _skip_retrofit_cached(spark: SparkSession, sf_dir: str) -> str:
     mode first (the price predicate is REFUSED pre-retrofit, and the
     append-path promotion raises the silent-mis-prune guard), then
     that the promoted scan plans a minority of the files."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from ..operators.layout import (
         stats_append,
         stats_compute_stats,
@@ -1713,45 +1518,40 @@ def _skip_retrofit_cached(spark: SparkSession, sf_dir: str) -> str:
         write_stats_layout,
     )
 
-    path = _RETROFIT_CACHE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity", "l_shipdate"
-    )
-    bands = [(0, 25000), (25000, 40000), (40000, 55000), (55000, 10**9)]
-    path = tempfile.mkdtemp(prefix="sg_retrofit_")
-    first = li.filter(
-        (F.col("l_extendedprice") >= bands[0][0])
-        & (F.col("l_extendedprice") < bands[0][1])
-    )
-    write_stats_layout(first, path, ["l_shipdate"], n_files=8)
-    for i, (lo, hi) in enumerate(bands[1:], 1):
-        stats_append(
-            li.filter(
-                (F.col("l_extendedprice") >= lo) & (F.col("l_extendedprice") < hi)
-            ),
-            path,
-            batch_id=f"band-{i}",
-            n_files=8,
+    def build(path):
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity", "l_shipdate"
         )
-    # the r13 failure mode, pinned: no stats -> refused, not wrong
-    try:
-        stats_pruned_scan(spark, path, {"l_extendedprice": (41000, 54000)})
-        raise AssertionError("price predicate must be refused before retrofit")
-    except ValueError:
-        pass
-    widened = stats_compute_stats(
-        spark, path, ["l_extendedprice"], batch_id="retrofit-price"
-    )
-    assert widened == ["l_shipdate", "l_extendedprice"]
-    _df, files = stats_pruned_scan(
-        spark, path, {"l_extendedprice": (41000, 54000)}, return_files=True
-    )
-    assert 0 < len(files) <= 10, len(files)  # ~band 3's 8 of 32 files
-    _RETROFIT_CACHE[sf_dir] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+        bands = [(0, 25000), (25000, 40000), (40000, 55000), (55000, 10**9)]
+        price = F.col("l_extendedprice")
+        lo, hi = bands[0]
+        write_stats_layout(
+            li.filter((price >= lo) & (price < hi)), path, ["l_shipdate"], n_files=8
+        )
+        for i, (lo, hi) in enumerate(bands[1:], 1):
+            stats_append(
+                li.filter((price >= lo) & (price < hi)),
+                path,
+                batch_id=f"band-{i}",
+                n_files=8,
+            )
+        # the r13 failure mode, pinned: no stats -> refused, not wrong
+        try:
+            stats_pruned_scan(spark, path, {"l_extendedprice": (41000, 54000)})
+            raise AssertionError("price predicate must be refused before retrofit")
+        except ValueError:
+            pass
+        widened = stats_compute_stats(
+            spark, path, ["l_extendedprice"], batch_id="retrofit-price"
+        )
+        assert widened == ["l_shipdate", "l_extendedprice"]
+        _df, files = stats_pruned_scan(
+            spark, path, {"l_extendedprice": (41000, 54000)}, return_files=True
+        )
+        assert 0 < len(files) <= 10, len(files)  # ~band 3's 8 of 32 files
+        return path
+
+    return build_once("skip_retrofit", sf_dir, build)
 
 
 @query(
@@ -1795,9 +1595,6 @@ def layout_stats_retrofit_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CDF_MV_CACHE: dict = {}
-
-
 def _cdf_mv_cached(spark: SparkSession, sf_dir: str) -> str:
     """Build-once scaffolding for layout_cdf_incremental_mv: a source
     stats layout over orders (keyed o_orderkey, values in integer
@@ -1806,10 +1603,7 @@ def _cdf_mv_cached(spark: SparkSession, sf_dir: str) -> str:
     tick after init, then append + range-delete and tick again; a
     replayed tick is a no-op (the cursor rides the fold-merge's batch
     token). Returns the MV path."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from ..operators.layout import (
         stats_append,
@@ -1819,30 +1613,27 @@ def _cdf_mv_cached(spark: SparkSession, sf_dir: str) -> str:
         write_stats_layout,
     )
 
-    mv = _CDF_MV_CACHE.get(sf_dir)
-    if mv is not None and os.path.isdir(mv):
+    def build(root):
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            "o_custkey",
+            F.round(F.col("o_totalprice") * 100).cast("long").alias("o_cents"),
+        )
+        base = orders.filter(F.col("o_orderkey") % 4 != 0)
+        batch = orders.filter(F.col("o_orderkey") % 4 == 0)
+        src = os.path.join(root, "src")
+        mv = os.path.join(root, "mv")
+        write_stats_layout(base, src, ["o_orderkey"], n_files=8)
+        stats_init_mv(spark, mv, "o_custkey")
+        assert stats_incremental_mv_apply(spark, src, mv, "o_custkey", "o_cents") == (0, 1)
+        stats_append(batch, src, batch_id="cdfmv-batch", n_files=4)
+        stats_delete(spark, src, {"o_orderkey": (1, 2000)}, batch_id="cdfmv-del")
+        assert stats_incremental_mv_apply(spark, src, mv, "o_custkey", "o_cents") == (1, 3)
+        # an at-least-once caller re-ticks: nothing double-folds
+        assert stats_incremental_mv_apply(spark, src, mv, "o_custkey", "o_cents") == (3, 3)
         return mv
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("o_cents"),
-    )
-    base = orders.filter(F.col("o_orderkey") % 4 != 0)
-    batch = orders.filter(F.col("o_orderkey") % 4 == 0)
-    root = tempfile.mkdtemp(prefix="sg_cdfmv_")
-    src = os.path.join(root, "src")
-    mv = os.path.join(root, "mv")
-    write_stats_layout(base, src, ["o_orderkey"], n_files=8)
-    stats_init_mv(spark, mv, "o_custkey")
-    assert stats_incremental_mv_apply(spark, src, mv, "o_custkey", "o_cents") == (0, 1)
-    stats_append(batch, src, batch_id="cdfmv-batch", n_files=4)
-    stats_delete(spark, src, {"o_orderkey": (1, 2000)}, batch_id="cdfmv-del")
-    assert stats_incremental_mv_apply(spark, src, mv, "o_custkey", "o_cents") == (1, 3)
-    # an at-least-once caller re-ticks: nothing double-folds
-    assert stats_incremental_mv_apply(spark, src, mv, "o_custkey", "o_cents") == (3, 3)
-    _CDF_MV_CACHE[sf_dir] = mv
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return mv
+
+    return build_once("cdf_mv", sf_dir, build)
 
 
 @query(

@@ -493,11 +493,11 @@ def corpus_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "sampling", "sharding", "sink", "layout"),
 )
 def corpus_write_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
+    from ..artifacts import scratch_dir
     from ..operators.sampling import write_training_shards
 
-    out = tempfile.mkdtemp(prefix="sg_shards_")
+    # the returned DataFrame reads the shards back: they live until exit
+    out = scratch_dir("shards_")
     write_training_shards(
         _docs(spark, sf_dir).select("doc_id", "text"), out, n_shards=16
     )

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..artifacts import build_once
 from ..operators.similarity import (
     ann_ivf_topk,
     cosine_topk,
@@ -851,62 +852,54 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     return project_onto(corpus, v)
 
 
-_IVF_APPEND_CACHE: dict = {}
-
-
 def _ivf_append_demo_cached(spark: SparkSession, sf_dir: str):
     """Build-once scaffolding for similarity_ivf_append: an IVF layout
     over the BASE 80% of the corpus (vec_id % 5 != 0), then ONE
     ivf_append of the remaining 20% — the continuously-ingesting-corpus
-    scenario. Memoized per corpus version like ivf_layout_cached (and
-    for the same reason: the audit measures serving against the merged
-    index, not rebuilds); the untouched-partition file check runs at
-    append time, when 'before' is observable, and rides the cache.
-    Returns (layout_path, drift_report, untouched_ok)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    scenario. Built once per corpus version (the audit measures serving
+    against the merged index, not rebuilds); the untouched-partition
+    file check runs at append time, when 'before' is observable, and
+    rides the artifact. Returns (layout_path, drift_report,
+    untouched_ok)."""
     from pyspark.sql import functions as F
 
     from ..operators.clustering import kmeans_centroids_df
     from ..operators.similarity import ivf_append, write_ivf_layout
 
-    hit = _IVF_APPEND_CACHE.get(sf_dir)
-    if hit is not None and os.path.isdir(hit[0]):
-        return hit
-    corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
-    base = corpus.filter(F.col("vec_id") % 5 != 0)
-    new = corpus.filter(F.col("vec_id") % 5 == 0)
-    cents = kmeans_centroids_df(
-        spark, base, k=16, iters=2, cache_key=(sf_dir, "ivf_append_base")
-    )
-    layout = tempfile.mkdtemp(prefix="sg_ivf_append_")
-    write_ivf_layout(base, cents, layout)
+    def build(layout):
+        corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
+        base = corpus.filter(F.col("vec_id") % 5 != 0)
+        new = corpus.filter(F.col("vec_id") % 5 == 0)
+        cents = kmeans_centroids_df(
+            spark, base, k=16, iters=2, cache_key=(sf_dir, "ivf_append_base")
+        )
+        write_ivf_layout(base, cents, layout)
+        before = _data_file_sizes(layout)
+        rep = ivf_append(new, cents, layout)
+        after = _data_file_sizes(layout)
+        # commit-log immutability (r14): an append only ADDS b<tag>-
+        # files — every pre-append data file must still be present
+        # byte-identical and every new file must carry the batch prefix,
+        # so standing lists are untouched BY CONSTRUCTION (snapshot
+        # isolation for readers)
+        untouched_ok = all(after.get(f) == sz for f, sz in before.items()) and all(
+            f.startswith("b") for f in set(after) - set(before)
+        )
+        return layout, rep, untouched_ok
 
-    def _files():
-        ddir = os.path.join(layout, "data")
-        return {
-            f: os.path.getsize(os.path.join(ddir, f))
-            for f in os.listdir(ddir)
-            if f.endswith(".parquet")
-        }
+    return build_once("ivf_append_demo", sf_dir, build)
 
-    before = _files()
-    rep = ivf_append(new, cents, layout)
-    after = _files()
-    # commit-log immutability (r14): an append only ADDS b<tag>- files
-    # — every pre-append data file must still be present byte-identical
-    # and every new file must carry the batch prefix, so standing lists
-    # are untouched BY CONSTRUCTION (snapshot isolation for readers)
-    untouched_ok = all(after.get(f) == sz for f, sz in before.items()) and all(
-        f.startswith("b") for f in set(after) - set(before)
-    )
-    out = (layout, rep, untouched_ok)
-    _IVF_APPEND_CACHE[sf_dir] = out
-    atexit.register(shutil.rmtree, layout, ignore_errors=True)
-    return out
+
+def _data_file_sizes(layout: str) -> dict:
+    """{file name: size} of the parquet files under ``layout/data``."""
+    import os
+
+    ddir = os.path.join(layout, "data")
+    return {
+        f: os.path.getsize(os.path.join(ddir, f))
+        for f in os.listdir(ddir)
+        if f.endswith(".parquet")
+    }
 
 
 @query(
@@ -1112,9 +1105,6 @@ def similarity_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_RETRAIN_CACHE: dict = {}
-
-
 def _ivf_retrain_demo_cached(spark: SparkSession, sf_dir: str):
     """Build-once scaffolding for similarity_ivf_retrain, with HEAVY
     PLANTED DRIFT: the coarse quantizer is trained ONLY on the label<5
@@ -1125,60 +1115,42 @@ def _ivf_retrain_demo_cached(spark: SparkSession, sf_dir: str):
     retrain threshold and :func:`~..operators.similarity.ivf_retrain`
     refits exactly those cells. The untouched-list byte-identity check
     runs at retrain time, when 'before' is observable, and rides the
-    cache. Returns (layout, new_centroids, retrain_report,
+    artifact. Returns (layout, new_centroids, retrain_report,
     untouched_ok, append_report)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..operators.clustering import kmeans_centroids_df
     from ..operators.similarity import ivf_append, ivf_retrain, write_ivf_layout
 
-    hit = _IVF_RETRAIN_CACHE.get(sf_dir)
-    if hit is not None and os.path.isdir(hit[0]):
-        return hit
-    corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
-    base = corpus.filter(F.col("label") < 5).select("vec_id", "embedding")
-    incoming = corpus.filter(F.col("label") >= 5).select("vec_id", "embedding")
-    cents = kmeans_centroids_df(
-        spark, base, k=16, iters=2, cache_key=(sf_dir, "ivf_retrain_biased")
-    )
-    layout = tempfile.mkdtemp(prefix="sg_ivf_retrain_")
-    write_ivf_layout(base, cents, layout)
-    rep_append = ivf_append(incoming, cents, layout, batch_id="drift-batch-1")
+    def build(layout):
+        corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
+        base = corpus.filter(F.col("label") < 5).select("vec_id", "embedding")
+        incoming = corpus.filter(F.col("label") >= 5).select("vec_id", "embedding")
+        cents = kmeans_centroids_df(
+            spark, base, k=16, iters=2, cache_key=(sf_dir, "ivf_retrain_biased")
+        )
+        write_ivf_layout(base, cents, layout)
+        rep_append = ivf_append(incoming, cents, layout, batch_id="drift-batch-1")
+        before = _data_file_sizes(layout)
+        # threshold 0.05: the min-cosine edge LOOSENS as cells grow (the
+        # weakest build-time member sets it), so per-list drift ratios
+        # shrink with corpus size for the same planted shift — measured
+        # max per-list ratio 0.66/0.59/0.16 at sf0.001/0.01/0.1; 0.05
+        # selects a strict subset of lists at every SF (never all, never
+        # none), which is what makes the untouched-byte-identity check
+        # meaningful.
+        new_cents, rep = ivf_retrain(spark, layout, cents, drift_threshold=0.05, iters=2)
+        after = _data_file_sizes(layout)
+        # commit-log immutability (r14): the retrain's copy-on-write
+        # rewrite only ADDS files — every pre-retrain file is still
+        # present byte-identical (referenced by retained versions until
+        # GC), so pinned readers survive the retrain and untouched lists'
+        # files are trivially unchanged; the rewrite itself is scoped to
+        # the files whose list run intersects the drifted set
+        untouched_ok = all(after.get(f) == sz for f, sz in before.items())
+        return layout, new_cents, rep, untouched_ok, rep_append
 
-    def _files():
-        ddir = os.path.join(layout, "data")
-        return {
-            f: os.path.getsize(os.path.join(ddir, f))
-            for f in os.listdir(ddir)
-            if f.endswith(".parquet")
-        }
-
-    before = _files()
-    # threshold 0.05: the min-cosine edge LOOSENS as cells grow (the
-    # weakest build-time member sets it), so per-list drift ratios
-    # shrink with corpus size for the same planted shift — measured
-    # max per-list ratio 0.66/0.59/0.16 at sf0.001/0.01/0.1; 0.05
-    # selects a strict subset of lists at every SF (never all, never
-    # none), which is what makes the untouched-byte-identity check
-    # meaningful.
-    new_cents, rep = ivf_retrain(spark, layout, cents, drift_threshold=0.05, iters=2)
-    after = _files()
-    # commit-log immutability (r14): the retrain's copy-on-write
-    # rewrite only ADDS files — every pre-retrain file is still
-    # present byte-identical (referenced by retained versions until
-    # GC), so pinned readers survive the retrain and untouched lists'
-    # files are trivially unchanged; the rewrite itself is scoped to
-    # the files whose list run intersects the drifted set
-    untouched_ok = all(after.get(f) == sz for f, sz in before.items())
-    out = (layout, new_cents, rep, untouched_ok, rep_append)
-    _IVF_RETRAIN_CACHE[sf_dir] = out
-    atexit.register(shutil.rmtree, layout, ignore_errors=True)
-    return out
+    return build_once("ivf_retrain_demo", sf_dir, build)
 
 
 @query(

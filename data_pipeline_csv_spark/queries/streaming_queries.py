@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..artifacts import scratch_dir
 from ..streaming import (
     hourly_rollup_stream,
     read_events_stream,
@@ -561,7 +562,11 @@ def streaming_stats_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import run_streaming_stats_ingest
 
     staged = tempfile.mkdtemp(prefix="sg_stream_")
-    layout = tempfile.mkdtemp(prefix="sg_skipstream_")
+    # the returned DataFrame plans over the layout's parquet files: with
+    # the layout deleted on return, a persisted block evicted before the
+    # harness collects would recompute against a dead path (r11 ADVICE)
+    # — so the layout lives until interpreter exit
+    layout = scratch_dir("skipstream_")
     try:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_linenumber", "l_shipdate", "l_extendedprice", "l_quantity"
@@ -588,15 +593,7 @@ def streaming_stats_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.persist().count()
         return out
     finally:
-        import atexit
-
         shutil.rmtree(staged, ignore_errors=True)
-        # the returned DataFrame plans over the layout's parquet files:
-        # with the layout deleted here, a persisted block evicted before
-        # the harness collects would recompute against a dead path (r11
-        # ADVICE) — defer the layout cleanup to interpreter exit, the
-        # cached-scaffold builders' discipline
-        atexit.register(shutil.rmtree, layout, ignore_errors=True)
 
 
 @query(
@@ -653,7 +650,7 @@ def streaming_cdc_stats_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
     staged = tempfile.mkdtemp(prefix="sg_stream_")
-    layout = tempfile.mkdtemp(prefix="sg_cdcmerge_")
+    layout = scratch_dir("cdcmerge_")  # outlives the call, as above
     try:
         base = load_table(spark, sf_dir, "orders").select(*cols).limit(0)
         write_stats_layout(base, layout, ["o_orderkey"], n_files=1)
@@ -669,10 +666,4 @@ def streaming_cdc_stats_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.persist().count()
         return out
     finally:
-        import atexit
-
         shutil.rmtree(staged, ignore_errors=True)
-        # the returned DataFrame plans over the layout's files: defer
-        # cleanup to interpreter exit (the streaming_stats_ingest /
-        # cached-scaffold discipline, r11 ADVICE)
-        atexit.register(shutil.rmtree, layout, ignore_errors=True)

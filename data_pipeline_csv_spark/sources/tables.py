@@ -113,16 +113,8 @@ def _events_ts_is_nanos(path: str) -> bool:
 # repeat query construction job-free (asserted in
 # tests/test_similarity.py::test_ann_query_construction_runs_no_job).
 # Keyed by (path, mtime) so a rewrite at the same path within a
-# long-lived process invalidates naturally; clear_caches() is the
-# explicit hook.
+# long-lived process invalidates naturally.
 _SCHEMA_CACHE: dict = {}
-
-
-def clear_caches() -> None:
-    """Drop all cached inferred schemas (long-lived-process hook; the
-    (path, mtime) keying already handles in-place rewrites that touch
-    the file/dir mtime)."""
-    _SCHEMA_CACHE.clear()
 
 
 def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:

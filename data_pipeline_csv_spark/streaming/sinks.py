@@ -436,6 +436,18 @@ def _docs_with_shset(df: DataFrame) -> DataFrame:
     return with_shingle_set(df.select("doc_id", "text"))
 
 
+def _has_data_files(path: str) -> bool:
+    """True when ``path`` holds a file Spark would read (its names
+    starting with ``_`` or ``.`` are metadata, not data)."""
+    import os
+
+    return any(
+        not f.startswith(("_", "."))
+        for _root, _dirs, files in os.walk(path)
+        for f in files
+    )
+
+
 def _read_tail_docs(spark, docs_root: str, batch_dirs: list, cond) -> DataFrame:
     """The visible batch-keyed docs tail, normalized to include
     ``shset``. A tail written across a version upgrade can MIX
@@ -444,13 +456,15 @@ def _read_tail_docs(spark, docs_root: str, batch_dirs: list, cond) -> DataFrame:
     schema probe below (one footer read per visible dir, tail length
     is bounded by compact_every) detects that and falls back to
     recomputing the whole tail's shingle sets — correctness-only
-    migration path; an all-new tail takes the zero-cost branch."""
+    migration path; an all-new tail takes the zero-cost branch. A dir
+    with no data files (an orphaned ``batch=`` dir) has no schema to
+    probe and contributes no rows, so the probe skips it."""
     import os
 
     df = spark.read.parquet(docs_root).where(cond)
+    paths = [os.path.join(docs_root, d) for d in batch_dirs]
     if "shset" in df.columns and all(
-        "shset" in spark.read.parquet(os.path.join(docs_root, d)).columns
-        for d in batch_dirs
+        "shset" in spark.read.parquet(p).columns for p in paths if _has_data_files(p)
     ):
         return df.select("doc_id", "text", "shset")
     from ..operators.dedup import with_shingle_set

@@ -454,6 +454,29 @@ def test_compaction_skips_idx_only_partial_epoch(spark, sf_dir, tmp_path):
                 clear_managed_table(spark, t.name)
 
 
+def test_state_read_skips_orphaned_empty_batch_dir(spark, sf_dir, tmp_path):
+    """An orphaned ``seen_docs/batch=N`` dir holding no data files (a
+    crash before the docs write put a file in it) is visible to the
+    tail read but has no schema; the per-dir schema probe must skip it
+    rather than fail with "Unable to infer schema", and the docs read
+    back must be the same as without it."""
+    from data_pipeline_csv_spark.streaming.sinks import _neardup_state
+
+    docs = load_table(spark, sf_dir, "documents")
+    state = str(tmp_path / "state")
+    w = neardup_epoch_writer(spark, state, threshold=0.8)
+    w(docs.filter(F.col("doc_id") % 2 == 0), 0)
+    w(docs.filter(F.col("doc_id") % 2 == 1), 1)
+
+    def seen():
+        df, _idx = _neardup_state(spark, state, 5)
+        return sorted(tuple(r) for r in df.select("doc_id", "text").collect())
+
+    want = seen()
+    os.makedirs(os.path.join(state, "seen_docs", "batch=7"))
+    assert seen() == want
+
+
 def test_generation_gc_spares_prefix_overlapping_index(spark, sf_dir, tmp_path):
     """Two pipelines sharing a Spark catalog with prefix-overlapping
     index_table names ('t_nd_gcpfx' vs 't_nd_gcpfx_gold' — note

@@ -253,26 +253,32 @@ def test_bpe_encode_matches_pure_python_reference(spark):
         assert got[i] == (nt, np_, np_ / nt), i
 
 
-def test_bpe_encode_cache_is_bit_identical(spark):
-    """The memoized trained artifact must serve results bit-identical
-    to a fresh training run (the kmeans_centroids_df contract)."""
-    from data_pipeline_csv_spark.operators.bpe import _TRAIN_CACHE, bpe_encode_stats
+def test_bpe_encode_cache_is_bit_identical(spark, monkeypatch):
+    """The build-once trained artifact must serve results bit-identical
+    to a fresh training run, and a second keyed call must not retrain
+    (counted through the per-round merge pass)."""
+    from data_pipeline_csv_spark.operators import bpe
+
+    rounds = []
+    merge_pass = bpe._merge_pass
+    monkeypatch.setattr(
+        bpe, "_merge_pass", lambda a, b: rounds.append(1) or merge_pass(a, b)
+    )
 
     docs = spark.createDataFrame(
         [(d, "xyz xyz abc abc qq") for d in range(12)],
         "doc_id long, text string",
     )
     fresh = sorted(
-        map(tuple, bpe_encode_stats(spark, docs, n_merges=3).collect())
+        map(tuple, bpe.bpe_encode_stats(spark, docs, n_merges=3).collect())
     )
     key = ("test-bpe-cache", "v1")
-    first = sorted(
-        map(tuple, bpe_encode_stats(spark, docs, n_merges=3, cache_key=key).collect())
-    )
-    assert ((key, 3)) in _TRAIN_CACHE
-    cached = sorted(
-        map(tuple, bpe_encode_stats(spark, docs, n_merges=3, cache_key=key).collect())
-    )
+    encode = lambda: bpe.bpe_encode_stats(spark, docs, n_merges=3, cache_key=key)
+    first = sorted(map(tuple, encode().collect()))
+    trained = len(rounds)
+    assert trained == 6  # two 3-round trainings: the fresh one and the keyed one
+    cached = sorted(map(tuple, encode().collect()))
+    assert len(rounds) == trained
     assert fresh == first == cached
 
 
