@@ -1,7 +1,9 @@
 .PHONY: test slow verify bench
 
+# The tier-1 suite with the exports and flags of ROADMAP's tier-1 verify.
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # The crash/race/compaction sweeps pytest.ini excludes by default; run
 # them after any change near layout, commit or streaming state.

@@ -260,7 +260,9 @@ def test_pq_rerank_fetch_prunes_partitions(spark, sf_dir, tmp_path):
 
     qrows = [
         (r["vec_id"], r["embedding"])
-        for r in corpus.filter(F.col("vec_id") < 3).collect()
+        for r in load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") < 3)
+        .collect()
     ]
     codes = pq_encode(
         ivf_scan(spark, layout).withColumn(
@@ -270,14 +272,20 @@ def test_pq_rerank_fetch_prunes_partitions(spark, sf_dir, tmp_path):
         m=8,
         carry=("list_id",),
     )
-    short = pq_adc_topk(codes, books, qrows, k=20, carry="list_id").select(
-        "q_id", "vec_id", "list_id"
+    short = (
+        pq_adc_topk(codes, books, qrows, k=20, carry="list_id")
+        .select("q_id", "vec_id", "list_id")
+        .toPandas()
     )
-    lists = sorted(r["list_id"] for r in short.select("list_id").distinct().collect())
+    lists = sorted(set(short["list_id"].tolist()))
     assert 0 < len(lists) <= len(all_lists)
 
-    # the rerank's cand fetch, exactly as the registered query builds it
-    cand = short.select("q_id", "vec_id").join(
+    # the rerank's cand fetch, exactly as the registered query builds
+    # it: the collected shortlist comes back as a driver-built frame
+    short_df = spark.createDataFrame(
+        short[["q_id", "vec_id"]], "q_id long, vec_id long"
+    )
+    cand = short_df.join(
         read_ivf_lists(spark, layout, lists).select("vec_id", "embedding"), "vec_id"
     )
     plan = _plan(cand)
@@ -949,3 +957,20 @@ def test_pipeline_load_is_one_job(spark, tmp_path):
     )
     assert len(jobs) == 1
     assert res.rows_written == 20
+
+
+def test_pq_rerank_job_budget(spark, sf_dir):
+    """A warm similarity_ann_pq_rerank call collects its ADC shortlist
+    once and builds every driver-made frame through Arrow: at most 20
+    jobs (the persisted-shortlist shape with list-built frames ran
+    25), and it leaves no cached RDD behind."""
+    fn = REGISTRY["similarity_ann_pq_rerank"].fn
+    fn(spark, sf_dir).collect()  # builds the layout and codes artifacts
+    n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    _, jobs = _jobs_in_group(
+        spark,
+        "pq-rerank-budget",
+        lambda: fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+    )
+    assert len(jobs) <= 20
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached
