@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .sources.csv import read_csv, read_csv_dir
+from .sources.tables import read_parquet_cached
 
 
 @dataclass
@@ -426,7 +427,13 @@ class PipelineEngine:
         return os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path))
 
     def read_table(self, table_name: str) -> DataFrame:
-        return self.spark.read.parquet(self._table_path(table_name))
+        """The table as a lazy scan. Its schema is inferred (one Spark
+        job) only on the first read after each rewrite: the schema is
+        cached per path, keyed by the listing of the table's part files
+        (name, mtime_ns, size), so a rewrite, which always writes new
+        part-file names, is never served an old schema
+        (``sources.tables.read_parquet_cached``)."""
+        return read_parquet_cached(self.spark, self._table_path(table_name))
 
     def preview(self, table_name: str, limit: int = 10) -> list[dict]:
         """Q2: SELECT * LIMIT n as list-of-dicts (reference api.py:189-198)."""

@@ -435,23 +435,6 @@ def containment_lsh_ensemble_pairs(
     )
 
 
-def minhash_signatures(
-    shingles: DataFrame, num_hashes: int = 32
-) -> DataFrame:
-    """(doc_id, sig: array<bigint>) — k independent minhashes per doc.
-
-    Hash family: xxhash64(salt_i, shingle); one aggregation computes
-    all k mins map-side (partial aggregation), so the shuffle carries
-    one row per doc.
-    """
-    mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = shingles.groupBy("doc_id").agg(*mins)
-    return sig.select("doc_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.8,

@@ -22,7 +22,7 @@ from ..operators.dedup import (
     ngram_jaccard_pairs_prefix,
     simhash,
 )
-from ..sources.tables import balanced, load_table
+from ..sources.tables import balanced, load_table, read_parquet_cached
 from .registry import query
 
 # DuckDB twin of functions.text_funcs normalization + word-3-gram
@@ -838,9 +838,9 @@ def _cc_base_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
 
     path = build_once("cc_base_index", sf_dir, build)
     return (
-        spark.read.parquet(os.path.join(path, "labels")),
-        spark.read.parquet(os.path.join(path, "shingles")),
-        spark.read.parquet(os.path.join(path, "prefix")),
+        read_parquet_cached(spark, os.path.join(path, "labels")),
+        read_parquet_cached(spark, os.path.join(path, "shingles")),
+        read_parquet_cached(spark, os.path.join(path, "prefix")),
     )
 
 

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..artifacts import build_once
 from ..operators.graph import PR_SCALE, pagerank
-from ..sources.tables import load_table
+from ..sources.tables import load_table, read_parquet_cached
 from .registry import query
 
 _PART_OFFSET = 10_000_000
@@ -364,7 +364,7 @@ def _tri_base_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
             F.col("d1").alias("u"), F.col("d2").alias("v")
         )
         edges.write.mode("overwrite").parquet(os.path.join(path, "edges"))
-        edges_rb = spark.read.parquet(os.path.join(path, "edges"))
+        edges_rb = read_parquet_cached(spark, os.path.join(path, "edges"))
         graph_degrees(edges_rb).write.mode("overwrite").parquet(
             os.path.join(path, "degrees")
         )
@@ -375,9 +375,9 @@ def _tri_base_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
 
     path = build_once("tri_base_index", sf_dir, build)
     return (
-        spark.read.parquet(os.path.join(path, "edges")),
-        spark.read.parquet(os.path.join(path, "degrees")),
-        spark.read.parquet(os.path.join(path, "counts")),
+        read_parquet_cached(spark, os.path.join(path, "edges")),
+        read_parquet_cached(spark, os.path.join(path, "degrees")),
+        read_parquet_cached(spark, os.path.join(path, "counts")),
     )
 
 
@@ -464,11 +464,11 @@ def _tri_edge_base_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
             F.col("d1").alias("u"), F.col("d2").alias("v")
         )
         edges.write.mode("overwrite").parquet(os.path.join(path, "edges"))
-        all_rb = spark.read.parquet(os.path.join(path, "edges"))
+        all_rb = read_parquet_cached(spark, os.path.join(path, "edges"))
         all_rb.filter(~_tri_edge_batch_pred()).write.mode("overwrite").parquet(
             os.path.join(path, "base")
         )
-        base_rb = spark.read.parquet(os.path.join(path, "base"))
+        base_rb = read_parquet_cached(spark, os.path.join(path, "base"))
         graph_degrees(base_rb).write.mode("overwrite").parquet(
             os.path.join(path, "degrees")
         )
@@ -479,10 +479,10 @@ def _tri_edge_base_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
 
     path = build_once("tri_edge_index", sf_dir, build)
     return (
-        spark.read.parquet(os.path.join(path, "edges")),
-        spark.read.parquet(os.path.join(path, "base")),
-        spark.read.parquet(os.path.join(path, "degrees")),
-        spark.read.parquet(os.path.join(path, "counts")),
+        read_parquet_cached(spark, os.path.join(path, "edges")),
+        read_parquet_cached(spark, os.path.join(path, "base")),
+        read_parquet_cached(spark, os.path.join(path, "degrees")),
+        read_parquet_cached(spark, os.path.join(path, "counts")),
     )
 
 

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from ..artifacts import build_once
 from ..operators.cdc import merge_latest_snapshot
 from ..operators.profile import profile_table
-from ..sources.tables import load_table
+from ..sources.tables import load_table, read_parquet_cached
 from .registry import query
 
 # Deterministic synthetic change log over orders: every row is an
@@ -573,7 +573,7 @@ def _dpp_layout_cached(spark: SparkSession, sf_dir: str) -> str:
 )
 def layout_dpp_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout = _dpp_layout_cached(spark, sf_dir)
-    fact = spark.read.parquet(layout)
+    fact = read_parquet_cached(spark, layout)
     cal = (
         load_table(spark, sf_dir, "orders")
         .select(F.date_format("o_orderdate", "yyyy-MM").alias("month"))

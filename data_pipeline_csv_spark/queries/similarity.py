@@ -18,7 +18,7 @@ from ..operators.similarity import (
     embedding_cosine_neardup,
     embedding_cosine_neardup_clustered,
 )
-from ..sources.tables import balanced, load_table
+from ..sources.tables import balanced, load_table, read_parquet_cached
 from .registry import query
 
 QUERY_IDS = [0, 1, 2, 3, 4, 5, 6, 7]
@@ -725,7 +725,8 @@ def similarity_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # encode is part of the build artifact (pq_codes_cached, once per
     # corpus version), so serving reads the m-bytes-per-vector codes
     # table instead of re-encoding
-    codes = spark.read.parquet(
+    codes = read_parquet_cached(
+        spark,
         pq_codes_cached(spark, layout, books, m=8, cache_key=(sf_dir, "pq8-ivf16"))
     )
     # the shortlist is |queries| x 100 rows: collected once, it gives

@@ -8,6 +8,8 @@ DataFrame rather than pre-materializing.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -57,8 +59,6 @@ def table_num_rows(sf_dir: str, name: str) -> int:
     time (e.g. the IVF default centroid stride), where triggering an
     eager full-table count would be an extra scan per call.
     """
-    import os
-
     import pyarrow.parquet as pq
 
     path = f"{sf_dir}/{name}.parquet"
@@ -84,8 +84,6 @@ def _events_ts_is_nanos(path: str) -> bool:
     False and ``load_table`` falls back to retrying the Spark read with
     the conf set.
     """
-    import os
-
     import pyarrow.parquet as pq
 
     p = path
@@ -108,27 +106,53 @@ def _events_ts_is_nanos(path: str) -> bool:
 
 # Inferred Spark schema per parquet path: spark.read.parquet without an
 # explicit schema runs a footer/schema-inference JOB on every call, so
-# each query construction would pay one tiny cluster round-trip per
-# table read. Inferring once and passing .schema(...) afterwards makes
-# repeat query construction job-free (asserted in
-# tests/test_similarity.py::test_ann_query_construction_runs_no_job).
-# Keyed by (path, mtime) so a rewrite at the same path within a
-# long-lived process invalidates naturally.
+# every read of an unchanged table would pay one cluster round trip to
+# re-derive a schema it already knows. Reads of paths the engine wrote
+# (testdata tables, warehouse tables, build-once artifacts) go through
+# read_parquet_cached, which infers once and passes .schema(...) after
+# that (asserted in tests/test_similarity.py::
+# test_ann_query_construction_runs_no_job and the read-path job budget
+# in tests/test_plans.py).
+#
+# One entry per path: path -> (fingerprint, schema). The fingerprint
+# changes on EVERY rewrite, so it is never a timestamp alone: a
+# directory rewritten within the filesystem's mtime resolution (or
+# given its old mtime back) keeps its mtime, and a timestamp key then
+# serves the old schema over the new files. A directory's fingerprint
+# is the listing of every file under it, each as (relative name,
+# mtime_ns, size); Spark names every part file with a per-write UUID,
+# so a Spark rewrite always changes the listing. A plain file's
+# fingerprint is its (mtime_ns, size).
 _SCHEMA_CACHE: dict = {}
 
 
-def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    import os
+def _parquet_fingerprint(path: str) -> tuple:
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_mtime_ns, st.st_size)
+    listing = []
+    for root, _dirs, files in os.walk(path, followlinks=True):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            listing.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
+    return tuple(sorted(listing))
 
+
+def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that runs the schema-inference job
+    only on the first read after each rewrite of ``path`` (see
+    ``_SCHEMA_CACHE`` above). A path that cannot be listed locally is
+    read uncached."""
     try:
-        key = (path, os.path.getmtime(path))
+        fingerprint = _parquet_fingerprint(path)
     except OSError:
-        key = (path, None)
-    cached = _SCHEMA_CACHE.get(key)
-    reader = spark.read if cached is None else spark.read.schema(cached)
-    df = reader.parquet(path)
-    if cached is None:
-        _SCHEMA_CACHE[key] = df.schema
+        return spark.read.parquet(path)
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[0] == fingerprint:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[path] = (fingerprint, df.schema)
     return df
 
 
@@ -172,14 +196,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if _events_ts_is_nanos(path):
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         try:
-            df = _read_parquet_cached(spark, path)
+            df = read_parquet_cached(spark, path)
         except Exception:
             # The footer probe is best-effort (it can miss on exotic
             # layouts or pyarrow errors). A NANOS file read without the
             # legacy conf fails deterministically at schema resolution,
             # so one retry with the conf set recovers exactly that case.
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = _read_parquet_cached(spark, path)
+            df = read_parquet_cached(spark, path)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
@@ -193,7 +217,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ),
             )
         return df
-    return _read_parquet_cached(spark, f"{sf_dir}/{name}.parquet")
+    return read_parquet_cached(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

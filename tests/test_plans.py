@@ -921,11 +921,11 @@ def _jobs_in_group(spark, group: str, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _csv_dir(tmp_path, n_files: int):
+def _csv_dir(tmp_path, n_files: int, rows: int = 5):
     d = tmp_path / "csvs"
     d.mkdir()
     for i in range(n_files):
-        body = "".join(f"{i * 10 + j},n{j},{j}.5\n" for j in range(5))
+        body = "".join(f"{i * rows + j},n{j},{j}.5\n" for j in range(rows))
         (d / f"part{i:02d}.csv").write_text("id,name,price\n" + body)
     return str(d)
 
@@ -959,11 +959,37 @@ def test_pipeline_load_is_one_job(spark, tmp_path):
     assert res.rows_written == 20
 
 
+def test_read_path_job_budget(spark, tmp_path):
+    """preview + stats of an unchanged table take the table's schema
+    from the schema cache: at most 3 jobs warm (the limit collect and
+    the count; an uncached read ran 5, one schema-inference job per
+    read), and at most 4 on the first read after a rewrite."""
+    from data_pipeline_csv_spark.engine import PipelineEngine
+
+    engine = PipelineEngine(spark, str(tmp_path / "wh"))
+    # 25 rows per file: the first scanned file fills the preview, so
+    # the limit collect is one job
+    src = _csv_dir(tmp_path, 4, rows=25)
+
+    def read():
+        return engine.preview("products", 10), engine.stats("products")
+
+    for i in range(2):  # the second pass reads after an overwrite
+        engine.run_pipeline(src, "products")
+        (rows, st), jobs = _jobs_in_group(spark, f"read-path-first-{i}", read)
+        assert len(jobs) <= 4
+        assert len(rows) == 10 and st["total_records"] == 100
+        _, jobs = _jobs_in_group(spark, f"read-path-warm-{i}", read)
+        assert len(jobs) <= 3
+
+
 def test_pq_rerank_job_budget(spark, sf_dir):
     """A warm similarity_ann_pq_rerank call collects its ADC shortlist
-    once and builds every driver-made frame through Arrow: at most 20
-    jobs (the persisted-shortlist shape with list-built frames ran
-    25), and it leaves no cached RDD behind."""
+    once, builds every driver-made frame through Arrow and reads the
+    codes artifact with its cached schema: at most 19 jobs (the
+    persisted-shortlist shape with list-built frames ran 25, an
+    uncached codes read adds one), and it leaves no cached RDD
+    behind."""
     fn = REGISTRY["similarity_ann_pq_rerank"].fn
     fn(spark, sf_dir).collect()  # builds the layout and codes artifacts
     n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -972,5 +998,5 @@ def test_pq_rerank_job_budget(spark, sf_dir):
         "pq-rerank-budget",
         lambda: fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
     )
-    assert len(jobs) <= 20
+    assert len(jobs) <= 19
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached

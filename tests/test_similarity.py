@@ -51,8 +51,9 @@ def test_ann_query_construction_runs_no_job(spark, sf_dir):
     sc = spark.sparkContext
     # Warm the parquet reader: the FIRST read of a path runs one
     # driver-coordinated footer/schema job inside spark.read itself —
-    # reader behavior, not query construction. Subsequent reads reuse
-    # the relation cache.
+    # reader behavior, not query construction. Later reads of the
+    # unchanged file take their schema from the schema cache
+    # (sources/tables.py _SCHEMA_CACHE) and run no job.
     corpus = load_table(spark, sf_dir, "embeddings")
     group = "ann-construction-probe"
     sc.setJobGroup(group, "assert no jobs during query construction")
