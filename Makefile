@@ -1,4 +1,4 @@
-.PHONY: test slow verify bench
+.PHONY: test slow verify bench perftest
 
 # The tier-1 suite with the exports and flags of ROADMAP's tier-1 verify.
 test:
@@ -18,3 +18,7 @@ verify: test
 
 bench:
 	python bench.py
+
+# The benchmark's own tests (perfbench/tests).
+perftest:
+	python3 -m pytest perfbench/tests -q

@@ -1,9 +1,10 @@
 """Process-lifetime artifacts: the one owner of build-once state.
 
 Heavy operators serve from artifacts built once per corpus version —
-IVF layouts, PQ books and codes, k-means centroids, BPE merges, Bloom
-bitsets, z-order/Hilbert/stats layouts, standing dedup and triangle
-indexes. Their lifetime contract lives here and nowhere else:
+IVF layouts, PQ books and codes, k-means centroids, the ANN audits'
+exact top-k truths, BPE merges, Bloom bitsets, z-order/Hilbert/stats
+layouts, standing dedup and triangle indexes. Their lifetime contract
+lives here and nowhere else:
 
 - ``build_once(name, key, build)`` returns the value stored under
   ``(name, key)``. On a miss it calls ``build(path)`` with a fresh,

@@ -273,8 +273,9 @@ def _bucket_init(df: DataFrame, spec: dict, path: str, n_files: int = 64) -> Non
         raise ValueError("bucket layout: 'zb' is the reserved bucket column")
     shutil.rmtree(path, ignore_errors=True)
     data_dir = _skip_data_dir(path)
-    _bucket_write(df, spec, n_files).write.mode("overwrite").parquet(data_dir)
-    data_schema = _nullable_schema(spark.read.parquet(data_dir).schema)
+    out = _bucket_write(df, spec, n_files)
+    out.write.mode("overwrite").parquet(data_dir)
+    data_schema = _nullable_schema(out.schema)
     tag = f"init-{uuid.uuid4().hex[:12]}"
     staging = os.path.join(path, "_staging", tag)
     part = _stage_manifest_part(
@@ -1332,12 +1333,27 @@ def _load_version(path: str, version=None) -> tuple:
 
 def _nullable_schema(schema):
     """Every field nullable: evolved columns backfill as NULL on old
-    files, so the stored schema must never claim non-null."""
-    from pyspark.sql.types import StructField, StructType
+    files, so the stored schema must never claim non-null. Nested
+    struct fields, array elements and map values become nullable too,
+    as they do when Spark reads the files back, so the schema of a
+    frame about to be written equals that of the files it writes."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
-    return StructType(
-        [StructField(f.name, f.dataType, True, f.metadata) for f in schema.fields]
-    )
+    def nullable(t):
+        if isinstance(t, StructType):
+            return StructType(
+                [
+                    StructField(f.name, nullable(f.dataType), True, f.metadata)
+                    for f in t.fields
+                ]
+            )
+        if isinstance(t, ArrayType):
+            return ArrayType(nullable(t.elementType), True)
+        if isinstance(t, MapType):
+            return MapType(nullable(t.keyType), nullable(t.valueType), True)
+        return t
+
+    return nullable(schema)
 
 
 def _data_schema(payload):
@@ -1713,13 +1729,11 @@ def write_stats_layout(
     spark = df.sparkSession
     shutil.rmtree(path, ignore_errors=True)
     data_dir = _skip_data_dir(path)
-    (
-        df.repartitionByRange(n_files, *[F.col(c) for c in skip_cols])
-        .sortWithinPartitions(*skip_cols)
-        .write.mode("overwrite")
-        .parquet(data_dir)
-    )
-    data_schema = _nullable_schema(spark.read.parquet(data_dir).schema)
+    out = df.repartitionByRange(
+        n_files, *[F.col(c) for c in skip_cols]
+    ).sortWithinPartitions(*skip_cols)
+    out.write.mode("overwrite").parquet(data_dir)
+    data_schema = _nullable_schema(out.schema)
     missing = [c for c in skip_cols if c not in data_schema.names]
     if missing:
         raise ValueError(f"write_stats_layout: skip column(s) {missing} not in data")

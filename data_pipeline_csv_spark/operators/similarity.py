@@ -335,13 +335,11 @@ def write_ivf_layout(
     )
     shutil.rmtree(path, ignore_errors=True)
     data_dir = _skip_data_dir(path)
-    (
-        assigned.repartitionByRange(int(n_files), *[F.col(c) for c in pcols])
-        .sortWithinPartitions(*pcols)
-        .write.mode("overwrite")
-        .parquet(data_dir)
-    )
-    data_schema = _nullable_schema(spark.read.parquet(data_dir).schema)
+    out = assigned.repartitionByRange(
+        int(n_files), *[F.col(c) for c in pcols]
+    ).sortWithinPartitions(*pcols)
+    out.write.mode("overwrite").parquet(data_dir)
+    data_schema = _nullable_schema(out.schema)
     missing = [c for c in pcols if c not in data_schema.names]
     if missing:
         raise ValueError(f"write_ivf_layout: partition column(s) {missing} not in data")

@@ -114,28 +114,35 @@ def _events_ts_is_nanos(path: str) -> bool:
 # test_ann_query_construction_runs_no_job and the read-path job budget
 # in tests/test_plans.py).
 #
-# One entry per path: path -> (fingerprint, schema). The fingerprint
-# changes on EVERY rewrite, so it is never a timestamp alone: a
-# directory rewritten within the filesystem's mtime resolution (or
-# given its old mtime back) keeps its mtime, and a timestamp key then
-# serves the old schema over the new files. A directory's fingerprint
-# is the listing of every file under it, each as (relative name,
-# mtime_ns, size); Spark names every part file with a per-write UUID,
-# so a Spark rewrite always changes the listing. A plain file's
-# fingerprint is its (mtime_ns, size).
+# One entry per path: path -> (fingerprint, schema), the fingerprint
+# from parquet_fingerprint below.
 _SCHEMA_CACHE: dict = {}
 
 
-def _parquet_fingerprint(path: str) -> tuple:
+def parquet_fingerprint(path: str) -> tuple:
+    """A key for the contents of a parquet file or directory that
+    changes on EVERY rewrite, so it is never a timestamp alone: a path
+    rewritten within the filesystem's mtime resolution (or given its
+    old mtime back) keeps its mtime, and a timestamp key then serves
+    state derived from the old files. A plain file's fingerprint is
+    its (mtime_ns, ctime_ns, size): ``os.utime`` can set the mtime
+    back but not the ctime, so an in-place rewrite at the same size
+    still changes it. A directory's fingerprint is the listing of
+    every file under it, each as (relative name, mtime_ns, ctime_ns,
+    size); Spark names every part file with a per-write UUID, so a
+    Spark rewrite always changes the listing. Raises ``OSError`` for a
+    path that cannot be listed locally."""
     if not os.path.isdir(path):
         st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
+        return (st.st_mtime_ns, st.st_ctime_ns, st.st_size)
     listing = []
     for root, _dirs, files in os.walk(path, followlinks=True):
         for f in files:
             full = os.path.join(root, f)
             st = os.stat(full)
-            listing.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
+            listing.append(
+                (os.path.relpath(full, path), st.st_mtime_ns, st.st_ctime_ns, st.st_size)
+            )
     return tuple(sorted(listing))
 
 
@@ -145,7 +152,7 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     ``_SCHEMA_CACHE`` above). A path that cannot be listed locally is
     read uncached."""
     try:
-        fingerprint = _parquet_fingerprint(path)
+        fingerprint = parquet_fingerprint(path)
     except OSError:
         return spark.read.parquet(path)
     hit = _SCHEMA_CACHE.get(path)

@@ -983,6 +983,35 @@ def test_stats_concurrent_appends(spark, tmp_path):
     assert _list_commits(path)[-1] == 3  # init + two appends
 
 
+def test_stats_append_accepts_non_null_nested_fields(spark, tmp_path):
+    """A batch whose array elements are non-null (as ``F.array`` builds
+    them) appends into a layout made from the same kind of frame. The
+    committed schema and the batch's are compared with every nested
+    field nullable, as Spark reads the written files back; comparing
+    the batch's nested non-null type against it raised a type
+    mismatch."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_csv_spark.operators.layout import (
+        stats_append,
+        stats_pruned_scan,
+        write_stats_layout,
+    )
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("v"), F.array(F.col("id").cast("double")).alias("arr")
+        )
+
+    path = str(tmp_path / "nested")
+    write_stats_layout(frame(0, 100), path, ["v"], n_files=2)
+    stats_append(frame(100, 150), path)
+    got = stats_pruned_scan(spark, path, {"v": (None, None)}).collect()
+    assert sorted((r["v"], list(r["arr"])) for r in got) == [
+        (i, [float(i)]) for i in range(150)
+    ]
+
+
 def test_stats_rewrite_replans_after_lost_cas(spark, tmp_path, monkeypatch):
     """Optimistic-concurrency serializability: a DELETE that loses its
     CAS race to a concurrent append must RE-PLAN against the winner's

@@ -68,3 +68,21 @@ def test_single_file_rewrite_reads_new_schema(spark, tmp_path):
     df = read_parquet_cached(spark, path)
     assert df.columns == ["id", "score", "tag"]
     assert [tuple(r) for r in df.collect()] == [(2, 3.5, "x")]
+
+
+def test_same_size_rewrite_with_old_mtime_reads_new_schema(spark, tmp_path):
+    """An in-place rewrite at the same byte size, with the old mtime set
+    back, keeps the file's (mtime_ns, size); its ctime still changes,
+    so the read must see the new schema."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": [1], "name": ["a"]}), path)
+    assert read_parquet_cached(spark, path).columns == ["id", "name"]
+    before = os.stat(path)
+
+    pq.write_table(pa.table({"ix": [1], "nome": ["a"]}), path)
+    _restore_mtime(path, before)
+    assert os.stat(path).st_size == before.st_size
+
+    df = read_parquet_cached(spark, path)
+    assert df.columns == ["ix", "nome"]
+    assert [tuple(r) for r in df.collect()] == [(1, "a")]

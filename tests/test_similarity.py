@@ -224,6 +224,57 @@ def test_pq_rerank_finds_planted_twin(spark, sf_dir):
     assert a == b
 
 
+def test_exact_truth_is_rebuilt_after_same_size_rewrite(spark, sf_dir, tmp_path):
+    """The ANN audits' build-once exact top-k is keyed by the corpus
+    file's fingerprint: after an in-place rewrite at the same byte size
+    whose old mtime is set back, the truth must be a fresh cosine_topk
+    of the new file, never the cached truth of the old one."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_csv_spark.queries.similarity import _exact_topk
+    from data_pipeline_csv_spark.sources.tables import balanced
+
+    sf = str(tmp_path / "sf")
+    os.mkdir(sf)
+    path = os.path.join(sf, "embeddings.parquet")
+    table = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+
+    def write(t):
+        # fixed-width pages: the same values count gives the same size
+        pq.write_table(t, path, compression="none", use_dictionary=False)
+
+    def pairs(pdf):
+        return sorted(zip(pdf["q_id"].tolist(), pdf["vec_id"].tolist()))
+
+    write(table)
+    old = _exact_topk(spark, sf, QUERY_IDS, 10)
+    assert _exact_topk(spark, sf, QUERY_IDS, 10) is old  # built once
+    before = os.stat(path)
+
+    # negate every component of the odd-vec_id vectors
+    emb = [
+        [-x for x in e] if v % 2 else e
+        for v, e in zip(table["vec_id"].to_pylist(), table["embedding"].to_pylist())
+    ]
+    i = table.schema.get_field_index("embedding")
+    field = table.schema.field(i)
+    write(table.set_column(i, field, pa.array(emb, field.type)))
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+    st = os.stat(path)
+    assert (st.st_mtime_ns, st.st_size) == (before.st_mtime_ns, before.st_size)
+
+    want = (
+        cosine_topk(balanced(spark, load_table(spark, sf, "embeddings")), QUERY_IDS, k=10)
+        .select("q_id", "vec_id")
+        .toPandas()
+    )
+    assert pairs(want) != pairs(old)
+    assert pairs(_exact_topk(spark, sf, QUERY_IDS, 10)) == pairs(want)
+
+
 def test_pq_rejects_mismatched_dims(spark, sf_dir):
     """dim % m != 0 must raise at train time (not silently drop the
     trailing coordinates from encoding/ADC), and ADC must reject
