@@ -196,16 +196,11 @@ class PipelineEngine:
         """Morton/Z-value of two non-negative int columns: interleave
         the low ``bits`` bits of each (x in odd positions). A pure
         bitwise expression tree — codegen'd JVM-side, no UDF."""
+        from .operators.layout import zvalue_nd
+
         xm = x.cast("bigint") % F.lit(1 << bits)
         ym = y.cast("bigint") % F.lit(1 << bits)
-        z = F.lit(0).cast("bigint")
-        for i in range(bits):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(xm, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-            ).bitwiseOR(
-                F.shiftleft(F.shiftright(ym, i).bitwiseAND(F.lit(1)), 2 * i)
-            )
-        return z
+        return zvalue_nd([xm, ym], bits)
 
     def write_zordered(
         self,
@@ -312,10 +307,17 @@ class PipelineEngine:
         )
         n_files = max(1, math.ceil(total_bytes / target_file_bytes))
         df = self.read_table(table_name)
-        before = df.count()
         tmp = f"{path}._compact_tmp"
-        df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        after = self.spark.read.parquet(tmp).count()
+        # the source rows are counted by the write job itself (the
+        # _write_counted rule: observe as the last step before the
+        # action); the staged files are re-read under the source's
+        # schema, so verifying them runs no schema-inference job
+        rows = Observation()
+        df.repartition(n_files).observe(
+            rows, F.count(F.lit(1)).alias("n")
+        ).write.mode("overwrite").parquet(tmp)
+        before = rows.get["n"]
+        after = self.spark.read.schema(df.schema).parquet(tmp).count()
         if after != before:
             shutil.rmtree(tmp, ignore_errors=True)
             raise RuntimeError(

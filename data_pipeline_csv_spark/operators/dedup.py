@@ -956,54 +956,6 @@ def ngram_jaccard_probe_pairs(
     )
 
 
-def ngram_jaccard_cross_pairs(
-    old_docs: DataFrame,
-    new_docs: DataFrame,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """EXACT word-n-gram Jaccard pairs BETWEEN an old corpus and a new
-    batch — the batch-touching restriction of
-    :func:`ngram_jaccard_pairs`, computed incrementally: only the NEW
-    side's shingles probe the shared-shingle join, so the work is
-    O(|batch shingles| x their bucket occupancy), never the corpus
-    self-join. Returns (d1=old id, d2=new id, jaccard >= threshold).
-
-    This is the DETERMINISTIC sibling of
-    :func:`minhash_lsh_incremental` (r10 ADVICE: LSH's ~1e-11/pair
-    band-miss probability is fine for the serving path, but a
-    downstream consumer that must equal an exact one-shot computation
-    — the incremental connected-components fold, whose incremental ≡
-    one-shot guarantee holds only when the batch pair set is COMPLETE
-    — needs the exact pairing). Candidates come from a PREFIX-PREFIX
-    equi-join (:func:`_prefix_entries`, the SSJoin/all-pairs/PPJoin
-    filter — exact, and the hot shingles whose buckets would make a
-    raw shared-shingle join quadratic fall out of every prefix; the
-    r11 scale spot-check measured the raw join at 13.4x on 10x data,
-    the prefix-filtered one sublinear), then exact Jaccard over the
-    FULL shingle sets decides membership. The frequency order is
-    computed over old ∪ new so both prefixes rank identically. Both
-    shingle tables are materialized once (``localCheckpoint``) — see
-    :func:`ngram_jaccard_pairs_prefix`."""
-    sh_old = shingle_sets(old_docs, text_col, id_col, n).localCheckpoint()
-    sh_new = shingle_sets(new_docs, text_col, id_col, n).localCheckpoint()
-    sh_all = sh_old.unionByName(sh_new)
-    freq = sh_all.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    a = _prefix_entries(sh_old, freq, threshold).alias("a")
-    b = _prefix_entries(sh_new, freq, threshold).alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle")) & _ppjoin_filters(threshold),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
-    return _jaccard_for_pairs(sh_all, cand).filter(F.col("jaccard") >= threshold)
-
-
 def simhash_neardup_pairs(
     df: DataFrame,
     max_hamming: int = 3,

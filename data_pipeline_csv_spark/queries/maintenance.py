@@ -202,13 +202,32 @@ def _orders_zorder_spec(sf_dir: str) -> dict:
     DERIVED FROM COLUMN STATS (r9 ADVICE: the domain constants were
     hard-coded): min/max from the parquet footers — metadata only, no
     scan — with both quantizers clamped to the grid so out-of-domain
-    rows saturate at the edge bucket instead of wrapping."""
+    rows saturate at the edge bucket instead of wrapping. 10 bits per
+    column and 8 prefix bits: 256 level-4 cells."""
     import os
 
-    from ..operators.layout import derive_zorder_spec
+    from ..operators.layout import derive_zorder_spec_nd
 
-    return derive_zorder_spec(
-        os.path.join(sf_dir, "orders.parquet"), "o_totalprice", "o_orderdate"
+    return derive_zorder_spec_nd(
+        os.path.join(sf_dir, "orders.parquet"),
+        [("o_totalprice", "num"), ("o_orderdate", "date")],
+        bits=10,
+        prefix_bits=8,
+    )
+
+
+def _orders_box_scan(spark: SparkSession, path: str) -> DataFrame:
+    """The (price, order-date) box every orders curve query serves,
+    over the committed layout at ``path`` (either curve: the scan reads
+    it from the commit's spec); the oracles replay it as a plain range
+    filter."""
+    from datetime import date
+
+    from ..operators.layout import zorder_pruned_scan_nd
+
+    box = [(200000, 250000), (date(1997, 1, 1), date(1997, 12, 31))]
+    return zorder_pruned_scan_nd(spark, path, box).select(
+        "o_orderkey", "o_totalprice", "o_orderdate"
     )
 
 
@@ -224,10 +243,10 @@ def _zorder_layout_cached(spark: SparkSession, sf_dir: str) -> str:
     level-8 cells, files (cell, z)-ordered and committed through the
     r14 versioned commit log; the spec rides IN the commit payload so
     appends/compactions reuse its grid."""
-    from ..operators.layout import write_zorder_table
+    from ..operators.layout import write_zorder_table_nd
 
     def build(path):
-        write_zorder_table(
+        write_zorder_table_nd(
             _orders_box(spark, sf_dir), _orders_zorder_spec(sf_dir), path
         )
         return path
@@ -262,22 +281,18 @@ def _zorder_layout_cached(spark: SparkSession, sf_dir: str) -> str:
     "pushes zb IN as a row-group residual. The quantization grid is "
     "DERIVED FROM COLUMN STATS (parquet footer min/max — metadata "
     "only), both quantizers clamp to the grid edges, and readers get "
-    "snapshot isolation + time travel from the commit record "
-    "(operators/layout.py; planned-file fraction pinned by tests/"
+    "snapshot isolation + time travel from the commit record. The "
+    "layout is the same curve code as the 3-column one at d=2 "
+    "(operators/layout.py write_zorder_table_nd / "
+    "zorder_pruned_scan_nd; planned-file fraction pinned by tests/"
     "test_plans.py::test_zorder_scan_prunes_buckets; quantizer "
     "agreement + clamps by tests/test_maintenance.py::"
-    "test_zorder_spec_quantizers_agree_and_clamp).",
+    "test_zorder_spec_quantizers_agree_and_clamp; covering cells by "
+    "::test_orders_box_covering_buckets_pinned).",
     tags=("layout", "zorder", "pruning", "scale"),
 )
 def layout_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datetime import date
-
-    from ..operators.layout import zorder_pruned_scan
-
-    layout = _zorder_layout_cached(spark, sf_dir)
-    return zorder_pruned_scan(
-        spark, layout, 200000, 250000, date(1997, 1, 1), date(1997, 12, 31)
-    ).select("o_orderkey", "o_totalprice", "o_orderdate")
+    return _orders_box_scan(spark, _zorder_layout_cached(spark, sf_dir))
 
 
 def _curve_compacted(spark: SparkSession, sf_dir: str, name: str, write_table):
@@ -327,9 +342,9 @@ def _curve_compacted(spark: SparkSession, sf_dir: str, name: str, write_table):
 def _zorder_compacted_cached(spark: SparkSession, sf_dir: str):
     """Build-once scaffolding for layout_zorder_compacted_scan: the
     Morton append-then-compact scaffold (:func:`_curve_compacted`)."""
-    from ..operators.layout import write_zorder_table
+    from ..operators.layout import write_zorder_table_nd
 
-    return _curve_compacted(spark, sf_dir, "zorder_compacted", write_zorder_table)
+    return _curve_compacted(spark, sf_dir, "zorder_compacted", write_zorder_table_nd)
 
 
 @query(
@@ -364,15 +379,9 @@ def _zorder_compacted_cached(spark: SparkSession, sf_dir: str):
     tags=("layout", "zorder", "incremental", "compaction", "scale"),
 )
 def layout_zorder_compacted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datetime import date
-
-    from ..operators.layout import zorder_pruned_scan
-
     path, dirty, compacted, clean_ok = _zorder_compacted_cached(spark, sf_dir)
     assert clean_ok and sorted(dirty) == sorted(compacted)
-    return zorder_pruned_scan(
-        spark, path, 200000, 250000, date(1997, 1, 1), date(1997, 12, 31)
-    ).select("o_orderkey", "o_totalprice", "o_orderdate")
+    return _orders_box_scan(spark, path)
 
 
 def _hilbert_layout_cached(spark: SparkSession, sf_dir: str) -> str:
@@ -381,10 +390,10 @@ def _hilbert_layout_cached(spark: SparkSession, sf_dir: str) -> str:
     follow the level-4 Hilbert curve (one bucket = one curve cell =
     one axis-aligned square; the cell id is a 256-entry literal-array
     lookup, pure JVM)."""
-    from ..operators.layout import write_hilbert_table
+    from ..operators.layout import write_hilbert_table_nd
 
     def build(path):
-        write_hilbert_table(
+        write_hilbert_table_nd(
             _orders_box(spark, sf_dir), _orders_zorder_spec(sf_dir), path
         )
         return path
@@ -407,8 +416,9 @@ def _hilbert_layout_cached(spark: SparkSession, sf_dir: str) -> str:
     """,
     doc="HILBERT-CURVE layout + 2-D pruned scan — the Z-order "
     "alternative lakehouses offer for better box locality (Iceberg "
-    "ships hilbert ordering; Hilbert 1891, standard rotate-reflect "
-    "construction): consecutive Hilbert cells are always grid "
+    "ships hilbert ordering; Skilling's transpose walk at d=2, equal "
+    "cell for cell to the classical rotate-reflect xy2d): "
+    "consecutive Hilbert cells are always grid "
     "NEIGHBORS, so a box's covering BUCKET-ID SET packs into fewer "
     "contiguous runs than Morton's (same count — the cells are the "
     "same squares; measured on this layout: 2 runs vs Morton's 3 for "
@@ -421,21 +431,15 @@ def _hilbert_layout_cached(spark: SparkSession, sf_dir: str) -> str:
     "machine); files (cell, Morton-z)-ordered on the r14 commit log "
     "so each covers a tight run of Hilbert cells; appends/compactions "
     "route with the layout's own curve via the committed spec marker. "
-    "Curve math pinned by the adjacency+roundtrip property test; "
-    "covering completeness and pruning by tests/test_maintenance.py::"
+    "Curve math pinned by tests/test_maintenance.py::"
+    "test_hilbert_2d_matches_rotate_reflect; covering completeness "
+    "and pruning by tests/test_maintenance.py::"
     "test_hilbert_layout_scan_and_maintenance and tests/"
     "test_plans.py::test_hilbert_scan_prunes_buckets.",
     tags=("layout", "hilbert", "pruning", "scale"),
 )
 def layout_hilbert_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datetime import date
-
-    from ..operators.layout import hilbert_pruned_scan
-
-    layout = _hilbert_layout_cached(spark, sf_dir)
-    return hilbert_pruned_scan(
-        spark, layout, 200000, 250000, date(1997, 1, 1), date(1997, 12, 31)
-    ).select("o_orderkey", "o_totalprice", "o_orderdate")
+    return _orders_box_scan(spark, _hilbert_layout_cached(spark, sf_dir))
 
 
 def _lineitem3_layout(spark: SparkSession, sf_dir: str, name: str, write_table) -> str:
@@ -906,9 +910,9 @@ def _hilbert_compacted_cached(spark: SparkSession, sf_dir: str):
     Hilbert lifecycle parity): the committed spec's ``curve: hilbert``
     marker routes the appended batch along the layout's OWN curve — no
     Hilbert-specific append code exists, which is the point."""
-    from ..operators.layout import write_hilbert_table
+    from ..operators.layout import write_hilbert_table_nd
 
-    return _curve_compacted(spark, sf_dir, "hilbert_compacted", write_hilbert_table)
+    return _curve_compacted(spark, sf_dir, "hilbert_compacted", write_hilbert_table_nd)
 
 
 @query(
@@ -943,15 +947,9 @@ def _hilbert_compacted_cached(spark: SparkSession, sf_dir: str):
     tags=("layout", "hilbert", "incremental", "compaction", "scale"),
 )
 def layout_hilbert_compacted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datetime import date
-
-    from ..operators.layout import hilbert_pruned_scan
-
     path, dirty, compacted, clean_ok = _hilbert_compacted_cached(spark, sf_dir)
     assert clean_ok and sorted(dirty) == sorted(compacted)
-    return hilbert_pruned_scan(
-        spark, path, 200000, 250000, date(1997, 1, 1), date(1997, 12, 31)
-    ).select("o_orderkey", "o_totalprice", "o_orderdate")
+    return _orders_box_scan(spark, path)
 
 
 def _skip_merged_cached(spark: SparkSession, sf_dir: str) -> str:
@@ -1253,9 +1251,9 @@ def _hilbert3_layout_cached(spark: SparkSession, sf_dir: str) -> str:
       AND l_quantity >= 10 AND l_quantity <= 30
     """,
     doc="n-DIMENSIONAL HILBERT layout + 3-D pruned scan (r12 VERDICT "
-    "next #7, closing the curve-parity matrix: 2-D and n-D, Morton "
-    "and Hilbert, all with the same maintenance): lineitem partitioned "
-    "by the level-3 3-D Hilbert cell of its quantized (price, "
+    "next #7): the same curve code as the 2-column orders layouts, "
+    "Morton and Hilbert, all with the same maintenance; lineitem "
+    "partitioned by the level-3 3-D Hilbert cell of its quantized (price, "
     "ship-day, quantity) — 512 axis-aligned boxes with the better "
     "locality of the Hilbert walk (every curve step is one cell edge, "
     "so consecutive buckets stay spatially adjacent — Skilling 2004, "

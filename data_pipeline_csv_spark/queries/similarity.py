@@ -29,26 +29,34 @@ from .registry import query
 QUERY_IDS = [0, 1, 2, 3, 4, 5, 6, 7]
 
 
+def _corpus_version(sf_dir: str) -> tuple:
+    """``(embeddings path, parquet_fingerprint(path))``: the prefix of
+    every build-once key derived from the embeddings corpus (truths,
+    centroids, PQ books, IVF layouts and codes, the append/retrain
+    scaffolds). The fingerprint changes on every rewrite of the file,
+    so a corpus rewritten in place under the same ``sf_dir`` is never
+    served artifacts built from the old one."""
+    path = f"{sf_dir}/embeddings.parquet"
+    return (path, parquet_fingerprint(path))
+
+
 def _exact_topk(spark: SparkSession, sf_dir: str, q_ids, k: int):
     """The exact brute-force top-``k`` of ``q_ids`` over the embeddings
     corpus as a pandas frame of ``(q_id, vec_id)`` rows: the ground
     truth the ANN audits measure recall against. It is a pure function
     of (corpus version, query ids, k), so it is built once per corpus
-    version and held in memory. The key carries the embeddings file's
-    ``parquet_fingerprint``, never a bare ``sf_dir``, so a rewritten
+    version and held in memory. The key starts with
+    :func:`_corpus_version`, never a bare ``sf_dir``, so a rewritten
     corpus gets a fresh truth. Queries whose answer IS ``cosine_topk``
     (similarity_cosine_topk, similarity_label_knn,
     contrastive_hard_negatives) run it per call, uncached."""
-    path = f"{sf_dir}/embeddings.parquet"
     q_ids = tuple(q_ids)
 
     def build(_path):
         corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
         return cosine_topk(corpus, list(q_ids), k=k).select("q_id", "vec_id").toPandas()
 
-    return build_once(
-        "ann_exact_truth", (path, parquet_fingerprint(path), q_ids, k), build
-    )
+    return build_once("ann_exact_truth", (*_corpus_version(sf_dir), q_ids, k), build)
 
 
 def _recall_vs_truth(
@@ -194,10 +202,11 @@ def similarity_neardup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import kmeans_centroids_df
 
     corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
+    ver = _corpus_version(sf_dir)
     # cache_key: steady state trains the cell index once per corpus
     # version and reuses it across runs (bit-identical either way).
     cents = kmeans_centroids_df(
-        spark, corpus, k=16, iters=2, cache_key=(sf_dir, "embeddings")
+        spark, corpus, k=16, iters=2, cache_key=(*ver, "embeddings")
     )
     approx = embedding_cosine_neardup_clustered(
         corpus, cents, threshold=0.45, nprobe=4
@@ -415,8 +424,9 @@ def similarity_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import kmeans_centroids_df
 
     corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
+    ver = _corpus_version(sf_dir)
     cents = kmeans_centroids_df(
-        spark, corpus, k=16, iters=2, cache_key=(sf_dir, "embeddings")
+        spark, corpus, k=16, iters=2, cache_key=(*ver, "embeddings")
     )
     approx = ann_ivf_topk(corpus, QUERY_IDS, k=10, nprobe=4, centroids=cents)
     return _recall_vs_truth(spark, sf_dir, QUERY_IDS, approx)
@@ -500,8 +510,9 @@ def similarity_neardup_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     aug = base.unionByName(twins)
+    ver = _corpus_version(sf_dir)
     cents = kmeans_centroids_df(
-        spark, aug, k=16, iters=2, cache_key=(sf_dir, "embeddings_aug16")
+        spark, aug, k=16, iters=2, cache_key=(*ver, "embeddings_aug16")
     )
     exact = embedding_cosine_neardup(aug, threshold=0.9).select("d1", "d2")
     approx = embedding_cosine_neardup_clustered(
@@ -592,11 +603,12 @@ def similarity_ann_ivf_ondisk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ann_ivf_probe_ondisk, ivf_layout_cached
 
     corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
+    ver = _corpus_version(sf_dir)
     cents = kmeans_centroids_df(
-        spark, corpus, k=16, iters=2, cache_key=(sf_dir, "embeddings")
+        spark, corpus, k=16, iters=2, cache_key=(*ver, "embeddings")
     )
     q_ids = QUERY_IDS[:4]
-    layout = ivf_layout_cached(corpus, cents, cache_key=(sf_dir, "ivf16"))
+    layout = ivf_layout_cached(corpus, cents, cache_key=(*ver, "ivf16"))
     queries = corpus.filter(F.col("vec_id").isin(q_ids)).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
@@ -730,11 +742,12 @@ def similarity_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
+    ver = _corpus_version(sf_dir)
     books = pq_train(
-        spark, corpus, dim=64, m=8, k=16, iters=2, cache_key=(sf_dir, "pq8")
+        spark, corpus, dim=64, m=8, k=16, iters=2, cache_key=(*ver, "pq8")
     )
     cents = kmeans_centroids_df(
-        spark, corpus, k=16, iters=2, cache_key=(sf_dir, "embeddings")
+        spark, corpus, k=16, iters=2, cache_key=(*ver, "embeddings")
     )
     # the plain scan, not ``corpus``: the filter reaches the parquet
     # reader and no round-robin shuffle runs, so this is one job
@@ -747,7 +760,7 @@ def similarity_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layout built ONCE per corpus version (shared with
     # similarity_ann_ivf_ondisk — same corpus, same centroids): the
     # audit measures the SERVING path, not a per-call rebuild
-    layout = ivf_layout_cached(corpus, cents, cache_key=(sf_dir, "ivf16"))
+    layout = ivf_layout_cached(corpus, cents, cache_key=(*ver, "ivf16"))
     # codes are encoded FROM the IVF layout so every code row carries
     # its vector's list_id — the key the rerank fetch prunes on; the
     # encode is part of the build artifact (pq_codes_cached, once per
@@ -755,7 +768,7 @@ def similarity_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table instead of re-encoding
     codes = read_parquet_cached(
         spark,
-        pq_codes_cached(spark, layout, books, m=8, cache_key=(sf_dir, "pq8-ivf16"))
+        pq_codes_cached(spark, layout, books, m=8, cache_key=(*ver, "pq8-ivf16"))
     )
     # the shortlist is |queries| x 100 rows: collected once, it gives
     # the probed lists and the reranked count, and the rerank joins it
@@ -888,7 +901,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     return project_onto(corpus, v)
 
 
-def _ivf_append_demo_cached(spark: SparkSession, sf_dir: str):
+def _ivf_append_demo_cached(spark: SparkSession, sf_dir: str, ver: tuple):
     """Build-once scaffolding for similarity_ivf_append: an IVF layout
     over the BASE 80% of the corpus (vec_id % 5 != 0), then ONE
     ivf_append of the remaining 20% — the continuously-ingesting-corpus
@@ -896,7 +909,7 @@ def _ivf_append_demo_cached(spark: SparkSession, sf_dir: str):
     against the merged index, not rebuilds); the untouched-partition
     file check runs at append time, when 'before' is observable, and
     rides the artifact. Returns (layout_path, drift_report,
-    untouched_ok)."""
+    untouched_ok). ``ver`` is the caller's :func:`_corpus_version`."""
     from pyspark.sql import functions as F
 
     from ..operators.clustering import kmeans_centroids_df
@@ -907,7 +920,7 @@ def _ivf_append_demo_cached(spark: SparkSession, sf_dir: str):
         base = corpus.filter(F.col("vec_id") % 5 != 0)
         new = corpus.filter(F.col("vec_id") % 5 == 0)
         cents = kmeans_centroids_df(
-            spark, base, k=16, iters=2, cache_key=(sf_dir, "ivf_append_base")
+            spark, base, k=16, iters=2, cache_key=(*ver, "ivf_append_base")
         )
         write_ivf_layout(base, cents, layout)
         before = _data_file_sizes(layout)
@@ -923,7 +936,7 @@ def _ivf_append_demo_cached(spark: SparkSession, sf_dir: str):
         )
         return layout, rep, untouched_ok
 
-    return build_once("ivf_append_demo", sf_dir, build)
+    return build_once("ivf_append_demo", ver, build)
 
 
 def _data_file_sizes(layout: str) -> dict:
@@ -1000,10 +1013,11 @@ def similarity_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
     base = corpus.filter(F.col("vec_id") % 5 != 0)
+    ver = _corpus_version(sf_dir)
     cents = kmeans_centroids_df(
-        spark, base, k=16, iters=2, cache_key=(sf_dir, "ivf_append_base")
+        spark, base, k=16, iters=2, cache_key=(*ver, "ivf_append_base")
     )
-    layout, rep, untouched_ok = _ivf_append_demo_cached(spark, sf_dir)
+    layout, rep, untouched_ok = _ivf_append_demo_cached(spark, sf_dir, ver)
     q_ids = QUERY_IDS[:4]
     queries = corpus.filter(F.col("vec_id").isin(q_ids)).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
@@ -1083,11 +1097,12 @@ def similarity_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         return cosine_from_parts(dot_exact(a, b), norm_sq_exact(a), norm_sq_exact(b))
 
     corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
+    ver = _corpus_version(sf_dir)
     cents = kmeans_centroids_df(
-        spark, corpus, k=16, iters=2, cache_key=(sf_dir, "embeddings")
+        spark, corpus, k=16, iters=2, cache_key=(*ver, "embeddings")
     )
     layout = ivf_layout_cached(
-        corpus, cents, cache_key=(sf_dir, "ivf16_labeled"),
+        corpus, cents, cache_key=(*ver, "ivf16_labeled"),
         carry=("label",), partition_cols=("list_id", "label"),
     )
     q_ids = QUERY_IDS[:4]
@@ -1148,12 +1163,14 @@ def _ivf_retrain_demo_cached(spark: SparkSession, sf_dir: str):
     from ..operators.clustering import kmeans_centroids_df
     from ..operators.similarity import ivf_append, ivf_retrain, write_ivf_layout
 
+    ver = _corpus_version(sf_dir)
+
     def build(layout):
         corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
         base = corpus.filter(F.col("label") < 5).select("vec_id", "embedding")
         incoming = corpus.filter(F.col("label") >= 5).select("vec_id", "embedding")
         cents = kmeans_centroids_df(
-            spark, base, k=16, iters=2, cache_key=(sf_dir, "ivf_retrain_biased")
+            spark, base, k=16, iters=2, cache_key=(*ver, "ivf_retrain_biased")
         )
         write_ivf_layout(base, cents, layout)
         rep_append = ivf_append(incoming, cents, layout, batch_id="drift-batch-1")
@@ -1176,7 +1193,7 @@ def _ivf_retrain_demo_cached(spark: SparkSession, sf_dir: str):
         untouched_ok = all(after.get(f) == sz for f, sz in before.items())
         return layout, new_cents, rep, untouched_ok, rep_append
 
-    return build_once("ivf_retrain_demo", sf_dir, build)
+    return build_once("ivf_retrain_demo", ver, build)
 
 
 @query(

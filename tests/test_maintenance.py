@@ -124,23 +124,17 @@ def test_snapshots_asof_literal_log(spark):
 def test_zorder_spec_quantizers_agree_and_clamp(spark, sf_dir):
     """Row-side and driver-side quantizers must agree on every value,
     including out-of-domain ones (which clamp, never wrap)."""
-    import os
     from datetime import date, timedelta
 
     from pyspark.sql import functions as F
 
-    from data_pipeline_csv_spark.operators.layout import (
-        derive_zorder_spec,
-        zquant_cols,
-        zquant_x,
-        zquant_y,
-    )
+    from data_pipeline_csv_spark.operators.layout import zquant_nd, zquant_nd_cols
+    from data_pipeline_csv_spark.queries.maintenance import _orders_zorder_spec
 
-    spec = derive_zorder_spec(
-        os.path.join(sf_dir, "orders.parquet"), "o_totalprice", "o_orderdate"
-    )
-    epoch = date.fromisoformat(spec["y_epoch"])
-    xs = [spec["x_min"], spec["x_min"] - 5.0, 1e9, 123456.78, 0.0, 250000.0]
+    spec = _orders_zorder_spec(sf_dir)
+    x_min = spec["cols"][0]["min"]
+    epoch = date.fromisoformat(spec["cols"][1]["epoch"])
+    xs = [x_min, x_min - 5.0, 1e9, 123456.78, 0.0, 250000.0]
     ys = [
         epoch,
         epoch - timedelta(days=400),  # below epoch: clamp to 0, not wrap
@@ -151,13 +145,13 @@ def test_zorder_spec_quantizers_agree_and_clamp(spark, sf_dir):
     df = spark.createDataFrame(rows, "o_totalprice double, d string").select(
         "o_totalprice", F.col("d").cast("timestamp").alias("o_orderdate")
     )
-    xq, yq = zquant_cols(spec)
+    xq, yq = zquant_nd_cols(spec)
     got = df.select("o_totalprice", F.col("o_orderdate").cast("date").alias("d"),
                     xq.alias("xq"), yq.alias("yq")).collect()
     for r in got:
         assert 0 <= r["xq"] <= 1023 and 0 <= r["yq"] <= 1023
-        assert r["xq"] == zquant_x(spec, r["o_totalprice"]), r
-        assert r["yq"] == zquant_y(spec, r["d"]), r
+        assert r["xq"] == zquant_nd(spec, 0, r["o_totalprice"]), r
+        assert r["yq"] == zquant_nd(spec, 1, r["d"]), r
 
 
 def test_zorder_append_compact_roundtrip(spark, sf_dir, tmp_path):
@@ -175,29 +169,27 @@ def test_zorder_append_compact_roundtrip(spark, sf_dir, tmp_path):
     from data_pipeline_csv_spark.operators.layout import (
         _load_version,
         bucket_scan,
-        derive_zorder_spec,
-        write_zorder_table,
+        write_zorder_table_nd,
         zorder_append,
         zorder_compact,
-        zorder_pruned_scan,
+        zorder_pruned_scan_nd,
     )
+    from data_pipeline_csv_spark.queries.maintenance import _orders_zorder_spec
     from data_pipeline_csv_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    spec = derive_zorder_spec(
-        os.path.join(sf_dir, "orders.parquet"), "o_totalprice", "o_orderdate"
-    )
+    spec = _orders_zorder_spec(sf_dir)
     base = orders.filter(F.col("o_orderkey") % 5 != 0)
     incoming = orders.filter(F.col("o_orderkey") % 5 == 0)
     path = str(tmp_path / "zorders")
-    write_zorder_table(base, spec, path)
+    write_zorder_table_nd(base, spec, path)
     n_total = orders.count()
 
     def _box():
         lo, hi = date(1996, 1, 1), date(1998, 6, 30)
-        got = zorder_pruned_scan(spark, path, 150000, 300000, lo, hi)
+        got = zorder_pruned_scan_nd(spark, path, [(150000, 300000), (lo, hi)])
         want = orders.filter(
             (F.col("o_totalprice") >= 150000)
             & (F.col("o_totalprice") <= 300000)
@@ -254,22 +246,20 @@ def test_zorder_append_replay_and_crash_retry(spark, sf_dir, tmp_path, monkeypat
 
     from data_pipeline_csv_spark.operators.layout import (
         bucket_scan,
-        derive_zorder_spec,
-        write_zorder_table,
+        write_zorder_table_nd,
         zorder_append,
     )
+    from data_pipeline_csv_spark.queries.maintenance import _orders_zorder_spec
     from data_pipeline_csv_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    spec = derive_zorder_spec(
-        os.path.join(sf_dir, "orders.parquet"), "o_totalprice", "o_orderdate"
-    )
+    spec = _orders_zorder_spec(sf_dir)
     base = orders.filter(F.col("o_orderkey") % 5 != 0)
     incoming = orders.filter(F.col("o_orderkey") % 5 == 0)
     path = str(tmp_path / "z")
-    write_zorder_table(base, spec, path)
+    write_zorder_table_nd(base, spec, path)
     n_total = orders.count()
 
     # replay: same batch twice lands once
@@ -304,30 +294,26 @@ def _zorder_mini(spark, sf_dir, tmp_path, curve="morton"):
     """80%-base bucketed layout + the held-out 20% — parametrized over
     BOTH curves (r11 VERDICT #6: the maintenance protocol and its crash
     windows are curve-independent, so the crash tests run on each)."""
-    import os
-
     from pyspark.sql import functions as F
 
     from data_pipeline_csv_spark.operators.layout import (
-        derive_zorder_spec,
-        write_hilbert_table,
-        write_zorder_table,
+        write_hilbert_table_nd,
+        write_zorder_table_nd,
     )
+    from data_pipeline_csv_spark.queries.maintenance import _orders_zorder_spec
     from data_pipeline_csv_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    spec = derive_zorder_spec(
-        os.path.join(sf_dir, "orders.parquet"), "o_totalprice", "o_orderdate"
-    )
+    spec = _orders_zorder_spec(sf_dir)
     base = orders.filter(F.col("o_orderkey") % 5 != 0)
     incoming = orders.filter(F.col("o_orderkey") % 5 == 0)
     path = str(tmp_path / "z")
     if curve == "hilbert":
-        write_hilbert_table(base, spec, path)
+        write_hilbert_table_nd(base, spec, path)
     else:
-        write_zorder_table(base, spec, path)
+        write_zorder_table_nd(base, spec, path)
     return orders, incoming, path
 
 
@@ -586,28 +572,69 @@ def test_zorder_nd_append_compact_roundtrip(spark, sf_dir, tmp_path, curve):
     assert bucket_scan(spark, path).count() == n_total
 
 
-def test_hilbert_curve_property():
-    """The curve math self-validates independent of implementation
-    variant: d2xy is a bijection onto the grid, consecutive curve
-    positions are grid NEIGHBORS (the Hilbert property Morton lacks),
-    and xy2d inverts it."""
-    from data_pipeline_csv_spark.operators.layout import (
-        hilbert_d2xy,
-        hilbert_xy2d,
-    )
+def _rotate_reflect_xy2d(order: int, x: int, y: int) -> int:
+    """The classical iterative rotate-reflect Hilbert xy -> d (Hilbert
+    1891), the numbering the 2-column curve layouts were first built
+    with: the reference the shared curve code must reproduce at d=2."""
+    d = 0
+    s = 1 << (order - 1)
+    while s > 0:
+        rx = 1 if (x & s) > 0 else 0
+        ry = 1 if (y & s) > 0 else 0
+        d += s * s * ((3 * rx) ^ ry)
+        if ry == 0:  # rotate/reflect the quadrant
+            if rx == 1:
+                x = s - 1 - x
+                y = s - 1 - y
+            x, y = y, x
+        s //= 2
+    return d
 
-    for order in (2, 4, 6):
-        n = 1 << order
-        seen = set()
-        prev = None
-        for d in range(n * n):
-            x, y = hilbert_d2xy(order, d)
-            assert hilbert_xy2d(order, x, y) == d
-            assert (x, y) not in seen
-            seen.add((x, y))
-            if prev is not None:
-                assert abs(x - prev[0]) + abs(y - prev[1]) == 1, (order, d)
-            prev = (x, y)
+
+def test_hilbert_2d_matches_rotate_reflect():
+    """At d=2 the shared Hilbert walk (Skilling's transpose algorithm)
+    numbers every cell exactly as the rotate-reflect xy2d does, at
+    every level m = 1..6 — so a 2-column Hilbert layout keeps its
+    bucket ids — and consecutive curve positions are grid NEIGHBORS
+    (the Hilbert property Morton lacks)."""
+    from data_pipeline_csv_spark.operators.layout import hilbert_index_nd
+
+    for m in range(1, 7):
+        n = 1 << m
+        cell_at = {}
+        for x in range(n):
+            for y in range(n):
+                h = hilbert_index_nd(m, [x, y])
+                assert h == _rotate_reflect_xy2d(m, x, y), (m, x, y)
+                cell_at[h] = (x, y)
+        assert sorted(cell_at) == list(range(n * n))
+        for h in range(n * n - 1):
+            (x0, y0), (x1, y1) = cell_at[h], cell_at[h + 1]
+            assert abs(x1 - x0) + abs(y1 - y0) == 1, (m, h)
+
+
+def test_orders_box_covering_buckets_pinned(sf_dir):
+    """The covering cells of the registered orders box
+    (layout_zorder_pruned_scan and its three siblings) on the orders
+    spec, for both curves: the literals the 2-column layouts produced
+    before they became the d=2 case of the shared curve code."""
+    from datetime import date
+
+    from data_pipeline_csv_spark.operators.layout import (
+        hilbert_covering_buckets_nd,
+        zorder_covering_buckets_nd,
+        zquant_nd,
+    )
+    from data_pipeline_csv_spark.queries.maintenance import _orders_zorder_spec
+
+    spec = _orders_zorder_spec(sf_dir)
+    assert (spec["bits"], spec["prefix_bits"]) == (10, 8)
+    box = [(200000, 250000), (date(1997, 1, 1), date(1997, 12, 31))]
+    lo_q = [zquant_nd(spec, j, lo) for j, (lo, _) in enumerate(box)]
+    hi_q = [zquant_nd(spec, j, hi) for j, (_, hi) in enumerate(box)]
+    assert zorder_covering_buckets_nd(spec, lo_q, hi_q) == [45, 47, 56, 57, 58, 59]
+    hilbert = {**spec, "curve": "hilbert"}
+    assert hilbert_covering_buckets_nd(hilbert, lo_q, hi_q) == [26, 27, 36, 37, 38, 39]
 
 
 def test_hilbert_layout_scan_and_maintenance(spark, sf_dir, tmp_path):
@@ -615,43 +642,39 @@ def test_hilbert_layout_scan_and_maintenance(spark, sf_dir, tmp_path):
     append + dirty-bucket compaction route with the layout's own curve
     (the spec-sidecar dispatch); the covering bucket-id set has the
     same CELL count as Morton but fewer contiguous runs."""
-    import os
     from datetime import date
 
     from pyspark.sql import functions as F
 
     from data_pipeline_csv_spark.operators.layout import (
         bucket_scan,
-        derive_zorder_spec,
-        hilbert_covering_buckets,
-        hilbert_pruned_scan,
+        hilbert_covering_buckets_nd,
         read_zorder_spec,
-        write_hilbert_table,
+        write_hilbert_table_nd,
         zorder_append,
         zorder_compact,
-        zorder_covering_buckets,
-        zquant_x,
-        zquant_y,
+        zorder_covering_buckets_nd,
+        zorder_pruned_scan_nd,
+        zquant_nd,
     )
+    from data_pipeline_csv_spark.queries.maintenance import _orders_zorder_spec
     from data_pipeline_csv_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    spec = derive_zorder_spec(
-        os.path.join(sf_dir, "orders.parquet"), "o_totalprice", "o_orderdate"
-    )
+    spec = _orders_zorder_spec(sf_dir)
     base = orders.filter(F.col("o_orderkey") % 5 != 0)
     incoming = orders.filter(F.col("o_orderkey") % 5 == 0)
     path = str(tmp_path / "hilb")
-    write_hilbert_table(base, spec, path)
+    write_hilbert_table_nd(base, spec, path)
     assert read_zorder_spec(path)["curve"] == "hilbert"
     n_total = orders.count()
 
     lo, hi = date(1996, 1, 1), date(1998, 6, 30)
 
     def _box(src):
-        got = hilbert_pruned_scan(spark, path, 150000, 300000, lo, hi)
+        got = zorder_pruned_scan_nd(spark, path, [(150000, 300000), (lo, hi)])
         want = src.filter(
             (F.col("o_totalprice") >= 150000)
             & (F.col("o_totalprice") <= 300000)
@@ -679,16 +702,10 @@ def test_hilbert_layout_scan_and_maintenance(spark, sf_dir, tmp_path):
 
     # contiguity: same covering-cell count, fewer or equal id runs
     sp = read_zorder_spec(path)
-    args = (
-        zquant_x(sp, 150000),
-        zquant_x(sp, 300000),
-        zquant_y(sp, lo),
-        zquant_y(sp, hi),
-    )
-    hb = hilbert_covering_buckets(sp, *args)
-    mb = sorted(
-        zorder_covering_buckets(*args, bits=sp["bits"], prefix_bits=sp["prefix_bits"])
-    )
+    lo_q = [zquant_nd(sp, 0, 150000), zquant_nd(sp, 1, lo)]
+    hi_q = [zquant_nd(sp, 0, 300000), zquant_nd(sp, 1, hi)]
+    hb = hilbert_covering_buckets_nd(sp, lo_q, hi_q)
+    mb = sorted(zorder_covering_buckets_nd(sp, lo_q, hi_q))
     assert len(hb) == len(mb)
 
     def runs(xs):
@@ -1369,7 +1386,7 @@ def test_bucket_timetravel_restore_and_history(spark, sf_dir, tmp_path):
         stats_history,
         stats_restore,
         zorder_append,
-        zorder_pruned_scan,
+        zorder_pruned_scan_nd,
     )
 
     orders, incoming, path = _zorder_mini(spark, sf_dir, tmp_path)
@@ -1382,8 +1399,8 @@ def test_bucket_timetravel_restore_and_history(spark, sf_dir, tmp_path):
     def box_keys(version=None):
         return sorted(
             r["o_orderkey"]
-            for r in zorder_pruned_scan(
-                spark, path, 150000, 300000, lo, hi, version=version
+            for r in zorder_pruned_scan_nd(
+                spark, path, [(150000, 300000), (lo, hi)], version=version
             ).collect()
         )
 
@@ -1408,7 +1425,7 @@ def test_bucket_timetravel_restore_and_history(spark, sf_dir, tmp_path):
     assert bucket_scan(spark, path).count() == n_base  # append undone
     assert box_keys() == want_keys(base)
     # the spec flowed through the metadata-only restore commit
-    assert read_zorder_spec(path)["x_col"] == "o_totalprice"
+    assert read_zorder_spec(path)["cols"][0]["name"] == "o_totalprice"
 
 
 def test_bucket_snapshot_isolation_reader_vs_compaction(spark, sf_dir, tmp_path):
@@ -1425,13 +1442,13 @@ def test_bucket_snapshot_isolation_reader_vs_compaction(spark, sf_dir, tmp_path)
     from data_pipeline_csv_spark.operators.layout import (
         zorder_append,
         zorder_compact,
-        zorder_pruned_scan,
+        zorder_pruned_scan_nd,
     )
 
     orders, incoming, path = _zorder_mini(spark, sf_dir, tmp_path)
     dirty = zorder_append(incoming, path)
     lo, hi = date(1996, 1, 1), date(1998, 6, 30)
-    pinned = zorder_pruned_scan(spark, path, 150000, 300000, lo, hi)  # v2 plan
+    pinned = zorder_pruned_scan_nd(spark, path, [(150000, 300000), (lo, hi)])  # v2
     want = sorted(
         r["o_orderkey"]
         for r in orders.filter(
@@ -1861,7 +1878,7 @@ def test_zorder_lifecycle_crash_at_every_fs_op(spark, sf_dir, tmp_path):
     from data_pipeline_csv_spark.operators.layout import (
         zorder_append,
         zorder_compact,
-        zorder_pruned_scan,
+        zorder_pruned_scan_nd,
     )
 
     orders, incoming, root = _zorder_mini(spark, sf_dir, tmp_path)
@@ -1885,7 +1902,9 @@ def test_zorder_lifecycle_crash_at_every_fs_op(spark, sf_dir, tmp_path):
     def rows(p):
         return sorted(
             r["o_orderkey"]
-            for r in zorder_pruned_scan(spark, p, x_lo, x_hi, y_lo, y_hi).collect()
+            for r in zorder_pruned_scan_nd(
+                spark, p, [(x_lo, x_hi), (y_lo, y_hi)]
+            ).collect()
         )
 
     ops = [
@@ -1989,7 +2008,6 @@ def test_hilbert_nd_curve_and_covering(spark, sf_dir):
     from data_pipeline_csv_spark.operators.layout import (
         derive_zorder_spec_nd,
         hilbert_covering_buckets_nd,
-        hilbert_coords_nd,
         hilbert_index_nd,
         read_zorder_spec,
         write_hilbert_table_nd,
@@ -2007,7 +2025,6 @@ def test_hilbert_nd_curve_and_covering(spark, sf_dir):
             h = hilbert_index_nd(m, coords)
             assert 0 <= h < n_cells and h not in seen
             seen[h] = coords
-            assert hilbert_coords_nd(m, d, h) == coords
         for h in range(n_cells - 1):
             diffs = [abs(a - b) for a, b in zip(seen[h], seen[h + 1])]
             assert sum(diffs) == 1 and max(diffs) == 1
@@ -2752,8 +2769,8 @@ def test_tag_prefix_collision_and_bucket_op_inheritance(spark, sf_dir, tmp_path)
     assert sorted(compacted) == sorted(remaining_dirty)
     from datetime import date
 
-    got = L.zorder_pruned_scan(
-        spark, bpath, 150000, 300000, date(1996, 1, 1), date(1998, 6, 30)
+    got = L.zorder_pruned_scan_nd(
+        spark, bpath, [(150000, 300000), (date(1996, 1, 1), date(1998, 6, 30))]
     ).count()
     assert got > 0
 

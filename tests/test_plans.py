@@ -983,6 +983,31 @@ def test_read_path_job_budget(spark, tmp_path):
         assert len(jobs) <= 3
 
 
+def test_compact_table_job_budget(spark, tmp_path):
+    """compact_table counts the source rows inside its write job (an
+    Observation) and re-reads the staged files under the source's
+    schema: at most 5 jobs per call on a 1000-row, 8-file table (the
+    source's schema inference after each rewrite, the repartitioned
+    write, the staged count). A separate source count plus a staged
+    read that inferred its schema ran 7, and 8 on a repeat call."""
+    import os
+
+    from data_pipeline_csv_spark.engine import PipelineEngine
+
+    engine = PipelineEngine(spark, str(tmp_path / "wh"))
+    spark.range(1000).selectExpr("id", "id * 2 AS v").repartition(8).write.parquet(
+        os.path.join(str(tmp_path / "wh"), "t")
+    )
+    engine.read_table("t").schema  # the first call reads a cached schema
+    for i in range(2):  # the second call reads after the first's rewrite
+        res, jobs = _jobs_in_group(
+            spark, f"compact-table-budget-{i}", lambda: engine.compact_table("t")
+        )
+        assert res.rows_written == 1000
+        assert len(jobs) <= 5
+    assert engine.read_table("t").count() == 1000
+
+
 def test_layout_creates_commit_the_written_schema(spark, sf_dir, tmp_path):
     """The stats, bucket and IVF layout creates commit the schema of
     the frame they write, with no schema-inference job over the files
@@ -991,19 +1016,17 @@ def test_layout_creates_commit_the_written_schema(spark, sf_dir, tmp_path):
     elements and map values all nullable), and the stats-layout
     create of a small frame runs at most 5 jobs (reading the written
     files' schema back made 6)."""
-    import os
-
     from pyspark.sql import functions as F
 
     from data_pipeline_csv_spark.operators.clustering import kmeans_centroids_df
     from data_pipeline_csv_spark.operators.layout import (
         _load_version,
         _skip_data_dir,
-        derive_zorder_spec,
         write_stats_layout,
-        write_zorder_table,
+        write_zorder_table_nd,
     )
     from data_pipeline_csv_spark.operators.similarity import write_ivf_layout
+    from data_pipeline_csv_spark.queries.maintenance import _orders_zorder_spec
     from data_pipeline_csv_spark.sources.tables import load_table
 
     def committed_is_read_back(path):
@@ -1028,11 +1051,8 @@ def test_layout_creates_commit_the_written_schema(spark, sf_dir, tmp_path):
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    spec = derive_zorder_spec(
-        os.path.join(sf_dir, "orders.parquet"), "o_totalprice", "o_orderdate"
-    )
     path = str(tmp_path / "zorder")
-    write_zorder_table(orders, spec, path, n_files=4)
+    write_zorder_table_nd(orders, _orders_zorder_spec(sf_dir), path, n_files=4)
     committed_is_read_back(path)
 
     corpus = load_table(spark, sf_dir, "embeddings")

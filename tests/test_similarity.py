@@ -275,6 +275,72 @@ def test_exact_truth_is_rebuilt_after_same_size_rewrite(spark, sf_dir, tmp_path)
     assert pairs(_exact_topk(spark, sf, QUERY_IDS, 10)) == pairs(want)
 
 
+def test_ann_build_artifacts_are_rebuilt_after_same_size_rewrite(
+    spark, sf_dir, tmp_path
+):
+    """The PQ rerank's IVF layout and PQ codes are keyed by the corpus
+    file's fingerprint, like the audits' exact truth: a repeat call
+    serves them, but after an in-place rewrite at the same byte size
+    whose old mtime is set back, the next call builds a new layout
+    holding the new vectors and new codes, never the old file's."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_csv_spark import artifacts
+    from data_pipeline_csv_spark.operators.similarity import ivf_scan
+    from data_pipeline_csv_spark.queries.similarity import similarity_ann_pq_rerank
+
+    sf = str(tmp_path / "sf")
+    os.mkdir(sf)
+    path = os.path.join(sf, "embeddings.parquet")
+    table = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+
+    def write(t):
+        # fixed-width pages: the same values count gives the same size
+        pq.write_table(t, path, compression="none", use_dictionary=False)
+
+    def built(name):
+        return {
+            value
+            for (n, key), (_dir, value) in list(artifacts._ENTRIES.items())
+            if n == name and sf in repr(key)
+        }
+
+    write(table)
+    similarity_ann_pq_rerank(spark, sf).collect()
+    layouts, codes = built("ivf_layout"), built("pq_codes")
+    assert len(layouts) == len(codes) == 1
+    similarity_ann_pq_rerank(spark, sf).collect()
+    assert (built("ivf_layout"), built("pq_codes")) == (layouts, codes)
+    before = os.stat(path)
+
+    # negate every component of the odd-vec_id vectors
+    vec_ids = table["vec_id"].to_pylist()
+    emb = [
+        [-x for x in e] if v % 2 else e
+        for v, e in zip(vec_ids, table["embedding"].to_pylist())
+    ]
+    i = table.schema.get_field_index("embedding")
+    field = table.schema.field(i)
+    write(table.set_column(i, field, pa.array(emb, field.type)))
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+    st = os.stat(path)
+    assert (st.st_mtime_ns, st.st_size) == (before.st_mtime_ns, before.st_size)
+
+    similarity_ann_pq_rerank(spark, sf).collect()
+    new_layouts = built("ivf_layout") - layouts
+    assert len(new_layouts) == 1 and len(built("pq_codes") - codes) == 1
+    got = {
+        r["vec_id"]: list(r["embedding"])
+        for r in ivf_scan(spark, new_layouts.pop()).select("vec_id", "embedding").collect()
+    }
+    assert sorted(got) == sorted(vec_ids)
+    for v, e in zip(vec_ids, emb):
+        assert got[v] == pytest.approx(e), v
+
+
 def test_pq_rejects_mismatched_dims(spark, sf_dir):
     """dim % m != 0 must raise at train time (not silently drop the
     trailing coordinates from encoding/ADC), and ADC must reject
@@ -1323,8 +1389,8 @@ def test_ivf_layout_refuses_unrouted_writes(spark, tmp_path):
     import datetime
 
     from data_pipeline_csv_spark.operators.layout import (
-        derive_zorder_spec,
-        write_zorder_table,
+        derive_zorder_spec_nd,
+        write_zorder_table_nd,
     )
 
     orders = spark.createDataFrame(
@@ -1336,9 +1402,12 @@ def test_ivf_layout_refuses_unrouted_writes(spark, tmp_path):
     )
     src_pq = str(tmp_path / "orders_src.parquet")
     orders.write.parquet(src_pq)
-    spec = derive_zorder_spec(src_pq, "o_totalprice", "o_orderdate")
+    spec = derive_zorder_spec_nd(
+        src_pq, [("o_totalprice", "num"), ("o_orderdate", "date")],
+        bits=10, prefix_bits=8,
+    )
     zpath = str(tmp_path / "zb")
-    write_zorder_table(orders, spec, zpath)
+    write_zorder_table_nd(orders, spec, zpath)
     zrogue = spark.createDataFrame(
         [(999, 1500.0, datetime.date(1996, 2, 1), 0)],
         "o_orderkey long, o_totalprice double, o_orderdate date, zb long",

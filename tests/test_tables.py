@@ -73,8 +73,10 @@ def test_zorder_covering_buckets_complete(spark):
     import random
 
     from data_pipeline_csv_spark.operators.layout import (
-        zorder_covering_buckets,
+        zorder_covering_buckets_nd,
     )
+
+    spec = {"bits": 10, "prefix_bits": 8, "cols": [{}, {}]}  # d=2
 
     rng = random.Random(7)
 
@@ -87,7 +89,7 @@ def test_zorder_covering_buckets_complete(spark):
     for _ in range(25):
         x0 = rng.randrange(0, 1024); x1 = rng.randrange(x0, 1024)
         y0 = rng.randrange(0, 1024); y1 = rng.randrange(y0, 1024)
-        cover = set(zorder_covering_buckets(x0, x1, y0, y1))
+        cover = set(zorder_covering_buckets_nd(spec, [x0, y0], [x1, y1]))
         for _ in range(200):
             xq = rng.randrange(x0, x1 + 1)
             yq = rng.randrange(y0, y1 + 1)
