@@ -117,8 +117,11 @@ def snapshots_asof(
     change log.
     """
     hist = scd2_history(changes, keys, seq_col=seq_col, op_col=op_col)
+    import pandas as pd
+
     vers = hist.sparkSession.createDataFrame(
-        [(int(v),) for v in versions], "as_of: bigint"
+        pd.DataFrame({"as_of": pd.Series([int(v) for v in versions], dtype="int64")}),
+        "as_of: bigint",
     )
     cond = (F.col("valid_from") <= F.col("as_of")) & (
         F.col("valid_to").isNull() | (F.col("as_of") < F.col("valid_to"))

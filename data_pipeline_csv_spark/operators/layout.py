@@ -196,19 +196,12 @@ def _bucket_planned_scan(spark, path: str, cur: dict, buckets) -> DataFrame:
     a residual so parquet row-group stats prune INSIDE surviving files
     too — rows are zb-sorted, so a file spanning cells [12, 19]
     serving a 2-cell query decodes only those cells' row groups."""
-    import bisect
-
     man = _read_manifest(spark, path, cur)
     rows = man.select("file", "min_zb", "max_zb").collect()
     bs = sorted(set(buckets))
-
-    def hit(lo, hi):
-        if lo is None or hi is None:
-            return False  # an all-null interval plans nothing
-        i = bisect.bisect_left(bs, lo)
-        return i < len(bs) and bs[i] <= hi
-
-    files = sorted(r["file"] for r in rows if hit(r["min_zb"], r["max_zb"]))
+    files = sorted(
+        r["file"] for r in rows if _sorted_hit(bs, r["min_zb"], r["max_zb"])
+    )
     return _read_data_files(spark, cur, files).where(F.col("zb").isin(bs))
 
 
@@ -373,22 +366,14 @@ def zorder_compact(spark, path: str, keep_versions: int | None = None) -> list[i
         dirty = sorted(cur.get("dirty_buckets", []))
         if not dirty:
             return []
-        man = _read_manifest(spark, path, cur)
-        rows = man.collect()
-        import bisect
-
-        def _hits_dirty(lo, hi):
-            # sorted-set bisection, the _bucket_planned_scan rule —
-            # not an O(cells-spanned) range walk (r14 review #5: a
-            # wide compacted file at a 65536-cell prefix would walk
-            # tens of thousands of elements per file per attempt)
-            if lo is None or hi is None:
-                return False
-            i = bisect.bisect_left(dirty, lo)
-            return i < len(dirty) and dirty[i] <= hi
-
+        man = _collect_manifest(spark, path, cur)
+        rows = man.to_pylist()
+        # sorted-set bisection, the _bucket_planned_scan rule — not an
+        # O(cells-spanned) range walk (r14 review #5: a wide compacted
+        # file at a 65536-cell prefix would walk tens of thousands of
+        # elements per file per attempt)
         affected = [
-            r for r in rows if _hits_dirty(r["min_zb"], r["max_zb"])
+            r for r in rows if _sorted_hit(dirty, r["min_zb"], r["max_zb"])
         ]
         if not affected:
             return []
@@ -406,7 +391,7 @@ def zorder_compact(spark, path: str, keep_versions: int | None = None) -> list[i
         payload = _commit_rewrite(
             spark, path, tag, "c", "compact", v, cur, affected, staged,
             n_out=n_out, repartition=False,
-            extra={"spec": cur["spec"], "dirty_buckets": []},
+            extra={"spec": cur["spec"], "dirty_buckets": []}, manifest=man,
         )
         if payload is not None:
             _retention_gc(path, keep_versions)
@@ -1001,15 +986,20 @@ def _manifest_schema(payload):
     the newer stat columns; the explicit-schema read backfills NULL =
     "no stats for this file on that column", which every planner here
     treats as prune-never-match (range predicates never match NULL)."""
+    return _manifest_struct(_data_schema(payload), payload["skip_cols"])
+
+
+def _manifest_struct(data_schema, cols):
+    """(file, n_rows, min_<c>, max_<c> per column of ``cols``), min/max
+    typed as the column is in ``data_schema``."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    data = _data_schema(payload)
-    by_name = {f.name: f for f in data.fields}
+    by_name = {f.name: f for f in data_schema.fields}
     fields = [
         StructField("file", StringType(), True),
         StructField("n_rows", LongType(), True),
     ]
-    for c in payload["skip_cols"]:
+    for c in cols:
         t = by_name[c].dataType
         fields.append(StructField(f"min_{c}", t, True))
         fields.append(StructField(f"max_{c}", t, True))
@@ -1305,6 +1295,108 @@ def _stage_manifest_part(df_part: DataFrame, staging: str, pool: str, name: str)
     os.makedirs(pool, exist_ok=True)
     os.rename(os.path.join(staging, part[0]), os.path.join(pool, name))
     return name
+
+
+def _publish_arrow_part(table, staging: str, pool: str, name: str) -> str:
+    """The driver-side :func:`_stage_manifest_part`: write the Arrow
+    ``table`` as one parquet file into staging with pyarrow (no Spark
+    job), then rename it into the pool under ``name``."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(staging, exist_ok=True)
+    tmp = os.path.join(staging, name)
+    pq.write_table(table, tmp, store_schema=False)
+    os.makedirs(pool, exist_ok=True)
+    os.rename(tmp, os.path.join(pool, name))
+    return name
+
+
+def _arrow_manifest(table, schema):
+    """``table`` with exactly the columns and Arrow types of the Spark
+    manifest ``schema`` (a ``toArrow()`` result may carry large strings
+    or a session-zone timestamp; the cast keeps every value)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(schema)
+    return table.select(target.names).cast(target)
+
+
+def _collect_manifest(spark, path: str, payload: dict):
+    """The commit's whole manifest on the driver: one collect through
+    Arrow, typed for a :func:`_publish_arrow_part` write."""
+    schema = _manifest_schema(payload)
+    return _arrow_manifest(_read_manifest(spark, path, payload).toArrow(), schema)
+
+
+# Skip-column types whose parquet footer min/max is exactly what
+# F.min / F.max return: integers and dates are stored as the ints they
+# compare as, and strings compare byte-wise in both (UTF-8 byte order
+# is code-point order). Timestamps (INT96 by default, which keeps no
+# stats), decimals, floating point (NaN order) and every other type
+# take the aggregate.
+_FOOTER_EXACT_TYPES = ("tinyint", "smallint", "int", "bigint", "date", "string")
+
+
+def _footer_row(local_path: str, skip_types: dict):
+    """One data file's manifest row read from its parquet footer, or
+    None when some skip column's footer is not exact: its type is not
+    in ``_FOOTER_EXACT_TYPES``, the file lacks the column, or a row
+    group has neither min/max nor only nulls (parquet-mr drops the
+    stats of a chunk holding a value over 4 KB)."""
+    import pathlib
+
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(local_path)
+    row = {"file": pathlib.Path(local_path).as_uri(), "n_rows": md.num_rows}
+    col_index = {md.schema.column(i).path: i for i in range(md.num_columns)}
+    for c, t in skip_types.items():
+        i = col_index.get(c)
+        if i is None or t.simpleString() not in _FOOTER_EXACT_TYPES:
+            return None
+        lo = hi = None
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(i).statistics
+            if st is not None and st.has_min_max:
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+            elif st is None or not st.has_null_count or st.null_count != rg.num_rows:
+                return None
+        row[f"min_{c}"], row[f"max_{c}"] = lo, hi
+    return row
+
+
+def _new_file_rows(spark, data_schema, data_dir: str, files: list, cols: list):
+    """Manifest rows for data files an op has just written, as an Arrow
+    table under the manifest schema of ``cols``: read from the files'
+    parquet footers where those are exact (:func:`_footer_row`, no
+    Spark job), and from one collected :func:`_manifest_rows`
+    aggregate over the remaining files. A file with no rows gets no
+    row, as in the aggregate, which groups by the rows' file name."""
+    import os
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = _manifest_struct(data_schema, cols)
+    types = {f.name: f.dataType for f in data_schema.fields}
+    skip_types = {c: types[c] for c in cols}
+    rows, rest = [], []
+    for fn in files:
+        p = os.path.abspath(os.path.join(data_dir, fn))
+        row = _footer_row(p, skip_types)
+        if row is None:
+            rest.append(p)
+        elif row["n_rows"]:
+            rows.append(row)
+    out = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    if rest:
+        agg = _manifest_rows(spark.read.schema(data_schema).parquet(*rest), cols)
+        out = pa.concat_tables([out, _arrow_manifest(agg.toArrow(), schema)])
+    return out
 
 
 def write_stats_layout(
@@ -1639,17 +1731,14 @@ def stats_append(
             os.rename(os.path.join(sdata, fn), os.path.join(data_dir, dst))
             moved.append(dst)
 
-    # one manifest part for exactly the moved files (O(batch) pass)
+    # one manifest part for exactly the moved files, its rows read from
+    # the footers just written and the part written on the driver
     stat_cols = present_skip + new_skip
+    batch_schema = _nullable_schema(df_new.schema)
 
     def _build_part():
-        return _stage_manifest_part(
-            _manifest_rows(
-                spark.read.parquet(
-                    *[os.path.join(data_dir, fn) for fn in moved]
-                ),
-                stat_cols,
-            ),
+        return _publish_arrow_part(
+            _new_file_rows(spark, batch_schema, data_dir, moved, stat_cols),
             os.path.join(staging, "manifest"),
             _manifest_pool_dir(path),
             f"a{tag}-{uuid.uuid4().hex[:8]}.parquet",
@@ -1734,6 +1823,7 @@ def _commit_rewrite(
     repartition: bool = True,
     extra: dict | None = None,
     read_conflict=None,
+    manifest=None,
 ):
     """The COPY-ON-WRITE attempt body shared by :func:`stats_delete`,
     :func:`stats_merge`, :func:`stats_compact`, :func:`stats_cluster`
@@ -1746,11 +1836,16 @@ def _commit_rewrite(
        replacement/new rows) stages as range-partitioned files — one
        per affected file (sizes stay stable; pure inserts get one) —
        then moves into the data dir under ``<prefix><tag>-`` names:
-       INVISIBLE, nothing references them until the CAS;
+       INVISIBLE, nothing references them until the CAS. The write
+       job counts the rows it writes (an ``Observation``); an empty
+       rewrite publishes no file;
     2. the replacement manifest part = the planned version's manifest
-       minus the affected files' rows (excluded BY FILE NAME — exact,
-       independent of any predicate's null semantics) + one freshly
-       aggregated row set for the staged files, written as ONE part;
+       (``manifest``, the caller's Arrow collect of it, else collected
+       here) minus the affected files' rows (excluded BY FILE NAME —
+       exact, independent of any predicate's null semantics) + the
+       staged files' rows, read from the footers just written where
+       they are exact (:func:`_new_file_rows`), written on the driver
+       with pyarrow as ONE part;
     3. the CAS publishes {parts: [that part], new_files, replaced} as
        version+1. On a lost race, Delta's logical conflict check (the
        public ConflictChecker shape) decides (r14, VERDICT missing
@@ -1781,74 +1876,67 @@ def _commit_rewrite(
     import shutil
     import uuid
 
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import Observation
+
     skip_cols = list(cur["skip_cols"])
     data_dir = _skip_data_dir(path)
     replaced = [
         os.path.basename(r["file"].removeprefix("file:")) for r in affected_rows
     ]
-    affected_full = [r["file"] for r in affected_rows]
+    affected_full = pa.array([r["file"] for r in affected_rows], pa.string())
     attempt = f"{tag}-{uuid.uuid4().hex[:8]}"
     staging = os.path.join(path, "_staging", f"rewrite-{attempt}")
     sdata = os.path.join(staging, "data")
-    # persist: the emptiness probe below and the staging write would
-    # otherwise each execute the full affected-file scan + filter/
-    # anti-join — 2x the dominant cost of the op (r12 review); the
-    # cached partitions are bounded by the affected files by design
-    rewrite_df = rewrite_df.persist()
-    try:
-        total_kept = rewrite_df.count()
-        new_files: list[str] = []
-        staged_parts: list[str] = []
-        if total_kept:
-            if n_out is None:
-                n_out = max(1, len(affected_rows))
-            staged_df = rewrite_df
-            if repartition:
-                # the default file layout: range on the skip columns.
-                # stats_cluster passes repartition=False with its own
-                # z-ordered partitioning already applied — re-ranging
-                # here would undo exactly the clustering being written
-                staged_df = rewrite_df.repartitionByRange(
-                    n_out, *[F.col(c) for c in skip_cols]
-                ).sortWithinPartitions(*skip_cols)
-            staged_df.write.mode("overwrite").parquet(sdata)
-            staged_parts = sorted(
-                fn for fn in os.listdir(sdata) if fn.endswith(".parquet")
-            )
-            new_files = [f"{file_prefix}{attempt}-{fn}" for fn in staged_parts]
-    finally:
-        rewrite_df.unpersist()
+    staged_df = rewrite_df
+    if repartition:
+        # the default file layout: range on the skip columns.
+        # stats_cluster passes repartition=False with its own z-ordered
+        # partitioning already applied — re-ranging here would undo
+        # exactly the clustering being written
+        staged_df = rewrite_df.repartitionByRange(
+            n_out or max(1, len(affected_rows)), *[F.col(c) for c in skip_cols]
+        ).sortWithinPartitions(*skip_cols)
+    # the kept-row count rides the write job: an Observation as the
+    # LAST step before the action (observed below repartitionByRange it
+    # would also count the rows its sampling job reads). An empty
+    # rewrite still writes one empty file to staging; it is never
+    # published.
+    kept = Observation()
+    staged_df = staged_df.observe(kept, F.count(F.lit(1)).alias("n"))
+    staged_df.write.mode("overwrite").parquet(sdata)
+    staged_parts = []
+    if kept.get["n"]:
+        staged_parts = sorted(
+            fn for fn in os.listdir(sdata) if fn.endswith(".parquet")
+        )
+    new_files = [f"{file_prefix}{attempt}-{fn}" for fn in staged_parts]
     for fn in staged_parts:
         os.rename(
             os.path.join(sdata, fn),
             os.path.join(data_dir, f"{file_prefix}{attempt}-{fn}"),
         )
+    # the staged files' manifest rows, from the footers just written
+    new_rows = _new_file_rows(
+        spark, _data_schema(cur), data_dir, new_files, skip_cols
+    )
 
-    def _snapshot_part(base_payload, attempt_id):
-        """One full-snapshot manifest part against ``base_payload``:
-        its manifest minus the affected files plus fresh rows for the
-        staged files (recomputed from the already-moved data files —
-        a scan of the op's own output, never of the table)."""
-        man = _read_manifest(spark, path, base_payload)
-        kept_df = man.filter(~F.col("file").isin(affected_full))
-        if new_files:
-            new_rows = _manifest_rows(
-                spark.read.schema(_data_schema(base_payload)).parquet(
-                    *[os.path.join(data_dir, fn) for fn in new_files]
-                ),
-                skip_cols,
-            ).select(*man.columns)
-            full = kept_df.unionByName(new_rows)
-        else:
-            full = kept_df
-        return _stage_manifest_part(
-            full,
+    def _snapshot_part(base_manifest, attempt_id):
+        """One full-snapshot manifest part: ``base_manifest`` (a
+        collected manifest) minus the affected files plus the staged
+        files' rows, written on the driver."""
+        keep = pc.invert(pc.is_in(base_manifest["file"], value_set=affected_full))
+        return _publish_arrow_part(
+            pa.concat_tables([base_manifest.filter(keep), new_rows]),
             os.path.join(staging, "manifest"),
             _manifest_pool_dir(path),
             f"{file_prefix}{attempt_id}.parquet",
         )
 
-    part = _snapshot_part(cur, attempt)
+    if manifest is None:
+        manifest = _collect_manifest(spark, path, cur)
+    part = _snapshot_part(manifest, attempt)
 
     while True:
         payload = {
@@ -1934,7 +2022,9 @@ def _commit_rewrite(
             return None
         REWRITE_RACES["adopted"] += 1
         _rm_f(os.path.join(_manifest_pool_dir(path), part))
-        part = _snapshot_part(head, f"{tag}-{uuid.uuid4().hex[:8]}")
+        part = _snapshot_part(
+            _collect_manifest(spark, path, head), f"{tag}-{uuid.uuid4().hex[:8]}"
+        )
         version, cur = nv, head
 
 
@@ -1966,8 +2056,8 @@ def stats_compact(
     tag = f"c{uuid.uuid4().hex[:10]}"
     while True:
         v, cur = _load_version(path)
-        man = _read_manifest(spark, path, cur)
-        rows = man.collect()  # one row per file: driver-side planning
+        man = _collect_manifest(spark, path, cur)
+        rows = man.to_pylist()  # one row per file: driver-side planning
         small = [r for r in rows if r["n_rows"] < target_rows]
         if len(small) < min_files:
             return []
@@ -1981,7 +2071,7 @@ def stats_compact(
             n_out=n_out,
             # appends never conflict with OPTIMIZE (Delta semantics):
             # a winner-added small file simply waits for the next pass
-            read_conflict=lambda *_a: False,
+            read_conflict=lambda *_a: False, manifest=man,
         )
         if payload is not None:
             _retention_gc(path, keep_versions)
@@ -2123,6 +2213,17 @@ def stats_delete(
             return payload["replaced"]
 
 
+def _sorted_hit(keys: list, lo, hi) -> bool:
+    """Whether the sorted list ``keys`` holds a value in [lo, hi]: one
+    bisection. A null bound (no stats) never hits."""
+    import bisect
+
+    if lo is None or hi is None:
+        return False
+    i = bisect.bisect_left(keys, lo)
+    return i < len(keys) and keys[i] <= hi
+
+
 def stats_merge(
     spark,
     path: str,
@@ -2150,15 +2251,19 @@ def stats_merge(
       scaffold and the streaming CDC sink do).
 
     PLAN FROM THE MANIFEST: ``key_col`` must be a skip column
-    (fail-fast otherwise); the batch's distinct keys join against the
-    broadcast per-file [min, max] intervals, so only files that can
-    contain a batch key are rewritten — a 100-key merge into a 400k-
-    file table rewrites the handful of files whose key range is hit,
-    never the table (the join is |batch keys| x |files| interval
-    pruning, the same planning read Delta's MERGE runs on its add-file
-    stats). Affected files are re-read, their rows ANTI-JOINED against
-    the batch key set (update = old version removed here + new version
-    re-inserted; delete = removed only), unioned with the upsert rows,
+    (fail-fast otherwise). The batch is keyed-change-sized by contract,
+    so its keys come to the driver once (one Arrow collect, which also
+    gives both input counts), and so does the manifest (one collect,
+    one row per file); each file's [min, max] key interval is bisected
+    against the sorted key list, so only files that can contain a
+    batch key are rewritten — a 100-key merge into a 400k-file table
+    rewrites the handful of files whose key range is hit, never the
+    table (O(files * log keys) on the driver, the same planning read
+    Delta's MERGE runs on its add-file stats; the rewrite reuses the
+    collected manifest for its part). Affected files are re-read,
+    their rows ANTI-JOINED against the batch key set (update = old
+    version removed here + new version re-inserted; delete = removed
+    only), unioned with the upsert rows,
     and committed as version+1 by :func:`_commit_rewrite` — a CAS
     loser re-plans against the winner's table and retries (optimistic
     concurrency). A ``_merges/<tag>`` record commits after the CAS;
@@ -2200,8 +2305,7 @@ def stats_merge(
         )
     _sweep_own_tag(path, "m", tag)
 
-    n_ups = upserts.count()
-    n_dels = delete_keys.count()
+    klist = None
     while True:
         v, cur = _load_version(path)
         if "spec" in cur:
@@ -2233,33 +2337,30 @@ def stats_merge(
             raise ValueError(
                 f"stats_merge: upserts lack layout column(s) {missing}"
             )
-        keys = (
-            upserts.select(F.col(key_col).alias("_k"))
-            .unionByName(delete_keys.select(F.col(key_col).alias("_k")))
-            .filter(F.col("_k").isNotNull())
-            .distinct()
-        )
-        # interval pruning: |batch keys| x |files| against the
-        # BROADCAST manifest — files with null key stats can hold no
-        # batch key and drop out of the join naturally
-        man = _read_manifest(spark, path, cur)
-        mk = man.select(
-            "file",
-            F.col(f"min_{key_col}").alias("_lo"),
-            F.col(f"max_{key_col}").alias("_hi"),
-        )
-        hit = set(
-            r["file"]
-            for r in keys.join(
-                F.broadcast(mk),
-                (F.col("_k") >= F.col("_lo")) & (F.col("_k") <= F.col("_hi")),
-            )
-            .select("file")
-            .distinct()
-            .collect()
-        )
-        # O(hit files) driver transfer, not O(all files) (r12 review)
-        rows = man.filter(F.col("file").isin(sorted(hit))).collect() if hit else []
+        if klist is None:
+            # the batch's keys, collected ONCE through Arrow after the
+            # checks above (a nullable bigint stays int64 — toPandas
+            # would make it float64): the input counts and the sorted
+            # distinct non-null key list the planning bisects
+            def tagged(df, is_del):
+                return df.select(
+                    F.col(key_col).alias("_k"), F.lit(is_del).alias("_del")
+                )
+
+            kt = tagged(upserts, False).unionByName(tagged(delete_keys, True)).toArrow()
+            n_dels = kt.filter(kt["_del"]).num_rows
+            n_ups = kt.num_rows - n_dels
+            keys = kt["_k"].unique().drop_null()
+            klist = sorted(keys.to_pylist())
+        # interval pruning on the driver: bisect the sorted key list
+        # against every file's [min, max] from ONE manifest collect —
+        # files with null key stats hold no batch key and never hit
+        man = _collect_manifest(spark, path, cur)
+        rows = [
+            r
+            for r in man.to_pylist()
+            if _sorted_hit(klist, r[f"min_{key_col}"], r[f"max_{key_col}"])
+        ]
         if not rows and n_ups == 0:
             # nothing to rewrite and nothing to insert: skip the
             # commit entirely — a version bump for a no-op batch is
@@ -2269,10 +2370,12 @@ def stats_merge(
             _write_record(path, "_merges", tag, payload)
             return payload
         if rows:
+            import pyarrow as pa
+
             survivors = (
                 _read_data_files(spark, cur, [r["file"] for r in rows])
                 .join(
-                    F.broadcast(keys.withColumnRenamed("_k", key_col)),
+                    F.broadcast(spark.createDataFrame(pa.table({key_col: keys}))),
                     key_col,
                     "left_anti",
                 )
@@ -2286,37 +2389,25 @@ def stats_merge(
         def _added_hit(spark_, path_, head, added):
             # a winner-added file whose key interval contains any
             # batch key holds rows this merge SHOULD have rewritten —
-            # full re-plan (conflict path only; the key list is
-            # keyed-change-sized by the op's contract)
+            # full re-plan (conflict path only)
             if not added:
                 return False
-            import bisect
             import os as _os
 
-            klist = sorted(
-                r["_k"] for r in keys.collect() if r["_k"] is not None
-            )
-            if not klist:
-                return False
             aset = set(added)
-            for r in (
-                _read_manifest(spark_, path_, head)
-                .select("file", f"min_{key_col}", f"max_{key_col}")
-                .collect()
-            ):
-                if _os.path.basename(r["file"].removeprefix("file:")) not in aset:
-                    continue
-                lo, hi = r[f"min_{key_col}"], r[f"max_{key_col}"]
-                if lo is None or hi is None:
-                    continue
-                i = bisect.bisect_left(klist, lo)
-                if i < len(klist) and klist[i] <= hi:
-                    return True
-            return False
+            return any(
+                _os.path.basename(r["file"].removeprefix("file:")) in aset
+                and _sorted_hit(klist, r[f"min_{key_col}"], r[f"max_{key_col}"])
+                for r in (
+                    _read_manifest(spark_, path_, head)
+                    .select("file", f"min_{key_col}", f"max_{key_col}")
+                    .collect()
+                )
+            )
 
         payload = _commit_rewrite(
             spark, path, tag, "m", "merge", v, cur, rows, rewrite,
-            result=result, read_conflict=_added_hit,
+            result=result, read_conflict=_added_hit, manifest=man,
         )
         if payload is not None:
             out = {
@@ -2358,6 +2449,8 @@ def stats_history(spark, path: str) -> DataFrame:
             StructField("committed_at", DoubleType(), True),
         ]
     )
+    import pandas as pd
+
     rows = []
     for v in _list_commits(path):
         rec = _read_commit(path, v)
@@ -2374,7 +2467,8 @@ def stats_history(spark, path: str) -> DataFrame:
                 rec.get("committed_at"),
             )
         )
-    return spark.createDataFrame(rows, schema)
+    # built from pandas, so the rows cross to the JVM as one Arrow batch
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
 
 
 def stats_restore(
@@ -2595,8 +2689,8 @@ def stats_cluster(
                 f"(layout has {skip_cols}) — clustering exists to tighten "
                 f"manifest stats, so cluster keys must carry them"
             )
-        man = _read_manifest(spark, path, cur)
-        rows = man.collect()
+        man = _collect_manifest(spark, path, cur)
+        rows = man.to_pylist()
         if not rows:
             # record the no-op too: without it a same-batch_id retry
             # after later appends would re-run the rewrite, breaking
@@ -2661,7 +2755,7 @@ def stats_cluster(
             # appends never conflict with OPTIMIZE ZORDER: the commit
             # clusters the files that existed at plan time; a winner's
             # appended files stay unclustered until the next pass
-            read_conflict=lambda *_a: False,
+            read_conflict=lambda *_a: False, manifest=man,
         )
         if payload is not None:
             _write_record(path, "_clusters", tag, {"new_files": payload["new_files"]})

@@ -1145,14 +1145,13 @@ def cdc_stats_merge_writer(
         w = W.partitionBy(key_col).orderBy(
             F.col(seq_col).desc(), F.col(op_col).desc()
         )
-        # The winner collapse feeds FIVE downstream evaluations inside
-        # stats_merge (the two input counts, the distinct-key manifest
-        # planning join, and the rewrite union — each a separate job,
-        # so ReuseExchange cannot share the window's shuffle across
-        # them). Persist the collapsed micro-batch for the epoch: the
-        # window runs once and every later pass reads the cached
-        # winners (guide §5 — reused AND expensive to recompute; state
-        # is micro-batch-sized, never table-sized).
+        # The winner collapse feeds two jobs inside stats_merge: the
+        # one Arrow collect of the batch keys (which gives the input
+        # counts and the key list its driver-side planning bisects) and
+        # the rewrite write. Separate jobs cannot share the window's
+        # shuffle, so persist the collapsed micro-batch for the epoch:
+        # the window runs once and the write reads the cached winners
+        # (state is micro-batch-sized, never table-sized).
         winners = (
             batch_df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)

@@ -1568,6 +1568,115 @@ def test_stats_delete_crash_windows_and_replay(spark, tmp_path, monkeypatch):
     assert rows() == [9001]
 
 
+def test_footer_manifest_rows_equal_the_aggregate(spark, tmp_path):
+    """The manifest rows a rewrite or append takes from the footers of
+    the files it wrote equal the _manifest_rows aggregate over those
+    files: long, int, date and string skip columns with nulls, an
+    all-null column and several row groups per file are read from the
+    footer; a timestamp, a decimal and a 5,000-char string column
+    (parquet-mr keeps no stats for a value over 4 KB) make the file
+    take the aggregate, with the same rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from data_pipeline_csv_spark.operators.layout import (
+        _arrow_manifest,
+        _footer_row,
+        _manifest_rows,
+        _manifest_struct,
+        _new_file_rows,
+        _nullable_schema,
+    )
+
+    def nulled(expr, every):
+        return F.when(F.col("id") % every == 0, F.lit(None)).otherwise(F.expr(expr))
+
+    df = spark.range(0, 6000).select(
+        F.col("id"),
+        nulled("cast(id * 7 % 1000 as int)", 11).alias("i"),
+        nulled("date_add(date'2020-01-01', cast(id % 400 as int))", 13).alias("d"),
+        nulled("concat('k', cast(id * 31 % 977 as string))", 17).alias("s"),
+        F.lit(None).cast("bigint").alias("n"),
+        nulled("timestamp_seconds(id * 3600)", 19).alias("t"),
+        nulled("cast(id / 7 as decimal(12, 3))", 23).alias("dc"),
+        nulled("repeat(cast(id % 10 as string), 5000)", 29).alias("big"),
+    )
+    out = str(tmp_path / "data")
+    (
+        df.repartition(3, "id")
+        .sortWithinPartitions("id")
+        .write.option("parquet.block.size", 16 * 1024)
+        .parquet(out)
+    )
+    files = sorted(fn for fn in os.listdir(out) if fn.endswith(".parquet"))
+    assert len(files) == 3
+    assert all(pq.read_metadata(os.path.join(out, f)).num_row_groups > 1 for f in files)
+    schema = _nullable_schema(df.schema)
+    types = {f.name: f.dataType for f in schema.fields}
+
+    def aggregate(cols):
+        agg = _manifest_rows(spark.read.schema(schema).parquet(out), cols)
+        return sorted(
+            _arrow_manifest(agg.toArrow(), _manifest_struct(schema, cols)).to_pylist(),
+            key=lambda r: r["file"],
+        )
+
+    def from_footers(cols):
+        got = _new_file_rows(spark, schema, out, files, cols)
+        assert got.schema.names == _manifest_struct(schema, cols).names
+        return sorted(got.to_pylist(), key=lambda r: r["file"])
+
+    exact = ["id", "i", "d", "s", "n"]
+    for f in files:
+        assert _footer_row(os.path.join(out, f), {c: types[c] for c in exact})
+    want = aggregate(exact)
+    assert from_footers(exact) == want
+    assert any(r["min_s"] is not None for r in want)
+    assert all(r["min_n"] is None and r["max_n"] is None for r in want)
+    for c in ["t", "dc", "big"]:
+        for f in files:
+            assert _footer_row(os.path.join(out, f), {c: types[c]}) is None
+        assert from_footers(exact + [c]) == aggregate(exact + [c])
+
+
+def test_stats_delete_of_whole_files_publishes_no_file(spark, tmp_path):
+    """A stats_delete that removes every row of the files it hits
+    counts zero kept rows inside its write job and publishes nothing:
+    the commit's new_files is empty, the hit file leaves the manifest,
+    and the data dir holds no empty parquet file."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from data_pipeline_csv_spark.operators.layout import (
+        _load_version,
+        _read_manifest,
+        stats_delete,
+        stats_pruned_scan,
+        write_stats_layout,
+    )
+
+    path = str(tmp_path / "sdz")
+    write_stats_layout(spark.range(0, 400).select("id"), path, ["id"], n_files=4)
+    _, cur = _load_version(path)
+    man = _read_manifest(spark, path, cur).orderBy("min_id").collect()
+    lo, hi = man[1]["min_id"], man[1]["max_id"]
+    replaced = stats_delete(spark, path, {"id": (lo, hi)}, batch_id="z1")
+    assert replaced == [os.path.basename(man[1]["file"])]
+    _, head = _load_version(path)
+    assert head["op"] == "delete" and head["new_files"] == []
+    assert len(_read_manifest(spark, path, head).collect()) == 3
+    data = os.path.join(path, "data")
+    for fn in os.listdir(data):
+        if fn.endswith(".parquet"):
+            assert pq.read_metadata(os.path.join(data, fn)).num_rows > 0, fn
+    got = sorted(
+        r["id"] for r in stats_pruned_scan(spark, path, {"id": (None, None)}).collect()
+    )
+    assert got == [i for i in range(400) if not lo <= i <= hi]
+
+
 def test_stats_merge_keyed_upsert_delete(spark, tmp_path, monkeypatch):
     """stats_merge on the commit log (r13): keyed copy-on-write MERGE —
     updates replace, deletes remove, unseen keys insert; only files

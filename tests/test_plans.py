@@ -1080,3 +1080,45 @@ def test_pq_rerank_job_budget(spark, sf_dir):
     )
     assert len(jobs) <= 11
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached
+
+
+def test_stats_merge_job_budget(spark, tmp_path):
+    """A warm stats_merge collects the batch keys once through Arrow,
+    plans the hit files by bisect over one manifest collect that its
+    rewrite reuses, counts the rewrite inside its write job and takes
+    the new files' manifest rows from their footers: at most 4 jobs for
+    an insert into an empty layout and 5 for a merge of updates and
+    deletes into what the insert wrote. Two counts, an interval-join
+    collect, a second manifest collect, a persisted count and a re-scan
+    of the new files ran 12 and 18."""
+    from data_pipeline_csv_spark.operators.layout import (
+        stats_merge,
+        stats_pruned_scan,
+        write_stats_layout,
+    )
+
+    def frames(lo, hi, step, mult):
+        ups = spark.range(lo, hi, step).selectExpr("id", f"id * {mult} AS v").persist()
+        dels = spark.range(lo + 3, hi, 7).selectExpr("id").persist()
+        return ups, dels
+
+    ins_ups, _ = frames(0, 4000, 1, 2)
+    none = spark.range(0).selectExpr("id")
+    mrg_ups, mrg_dels = frames(0, 4000, 5, 3)
+    for i in range(2):  # the first round warms the session
+        path = str(tmp_path / f"sm{i}")
+        write_stats_layout(spark.range(0).selectExpr("id", "id AS v"), path, ["id"], n_files=1)
+        _, ins = _jobs_in_group(
+            spark, f"stats-merge-insert-{i}",
+            lambda: stats_merge(spark, path, ins_ups, none, "id", batch_id="e1"),
+        )
+        rep, mrg = _jobs_in_group(
+            spark, f"stats-merge-merge-{i}",
+            lambda: stats_merge(spark, path, mrg_ups, mrg_dels, "id", batch_id="e2"),
+        )
+    assert rep["replaced"] and rep["n_upserts"] == 800 and rep["n_deletes"] == 571
+    got = {r["id"]: r["v"] for r in stats_pruned_scan(spark, path, {"id": (None, None)}).collect()}
+    want = {k: k * (3 if k % 5 == 0 else 2) for k in range(4000) if (k - 3) % 7 or k % 5 == 0}
+    assert got == want
+    assert len(ins) <= 4
+    assert len(mrg) <= 5
