@@ -33,7 +33,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .sources.csv import read_csv, read_csv_dir
-from .sources.tables import read_parquet_cached
+from .sources.tables import (
+    parquet_num_rows,
+    parquet_schema_cached,
+    read_parquet_cached,
+)
 
 
 @dataclass
@@ -310,14 +314,14 @@ class PipelineEngine:
         tmp = f"{path}._compact_tmp"
         # the source rows are counted by the write job itself (the
         # _write_counted rule: observe as the last step before the
-        # action); the staged files are re-read under the source's
-        # schema, so verifying them runs no schema-inference job
+        # action); the staged files are counted from their footers, so
+        # verifying them runs no job
         rows = Observation()
         df.repartition(n_files).observe(
             rows, F.count(F.lit(1)).alias("n")
         ).write.mode("overwrite").parquet(tmp)
         before = rows.get["n"]
-        after = self.spark.read.schema(df.schema).parquet(tmp).count()
+        after = parquet_num_rows(tmp)
         if after != before:
             shutil.rmtree(tmp, ignore_errors=True)
             raise RuntimeError(
@@ -432,9 +436,11 @@ class PipelineEngine:
         """The table as a lazy scan. Its schema is inferred (one Spark
         job) only on the first read after each rewrite: the schema is
         cached per path, keyed by the listing of the table's part files
-        (name, mtime_ns, size), so a rewrite, which always writes new
-        part-file names, is never served an old schema
-        (``sources.tables.read_parquet_cached``)."""
+        (name, mtime_ns, ctime_ns, size), so a rewrite, which always
+        writes new part-file names, is never served an old schema
+        (``sources.tables.read_parquet_cached``). A count of the whole
+        table is a Spark job here; :meth:`stats` takes it from the
+        files' parquet footers instead."""
         return read_parquet_cached(self.spark, self._table_path(table_name))
 
     def preview(self, table_name: str, limit: int = 10) -> list[dict]:
@@ -443,12 +449,19 @@ class PipelineEngine:
         return [row.asDict() for row in df.limit(limit).collect()]
 
     def stats(self, table_name: str) -> dict:
-        """Q3+Q4: row count + column catalog (reference api.py:227-242)."""
-        df = self.read_table(table_name)
+        """Q3+Q4: row count + column catalog (reference api.py:227-242).
+
+        The count is the sum of the parquet footer row counts of the
+        files a scan would read (``sources.tables.parquet_num_rows``),
+        and the columns come from the schema cache, so an unchanged
+        table's stats run no Spark job; the first read after a rewrite
+        infers the schema once."""
+        path = self._table_path(table_name)
+        schema = parquet_schema_cached(self.spark, path)
         return {
             "table": table_name,
-            "total_records": df.count(),
-            "columns": [{"name": f.name, "type": f.dataType.simpleString()} for f in df.schema.fields],
+            "total_records": parquet_num_rows(path),
+            "columns": [{"name": f.name, "type": f.dataType.simpleString()} for f in schema.fields],
         }
 
     def drop_table(self, table_name: str) -> None:

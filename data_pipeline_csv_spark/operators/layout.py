@@ -438,7 +438,7 @@ def derive_zorder_spec_nd(
 ) -> dict:
     """n-column quantization spec from parquet FOOTER stats (metadata
     only — no data scanned, the same footer walk as
-    sources.tables.table_num_rows). ``cols`` is a list of (name, kind)
+    sources.tables.parquet_num_rows). ``cols`` is a list of (name, kind)
     with kind "num" (scaled onto [0, 2^bits)) or "date" (day-bucketed
     from the observed min). The spec carries the exact constants so
     the row-side (:func:`zquant_nd_cols`) and driver-side
@@ -2097,11 +2097,11 @@ def stats_delete(
        that crashed between CAS and record, the retained commit log's
        (op, tag) match — which recovers the TRUE replaced list, r12
        ADVICE #3) short-circuits the replay;
-    2. PLAN from the manifest of the current commit: only files whose
-       interval intersects every predicate can hold matching rows —
-       the same driver-side pruning as the scan, so a delete touching
-       3 of 400k files rewrites 3 files (O(matching files), never a
-       table scan);
+    2. PLAN from one collect of the current commit's manifest (the
+       rewrite's manifest part reuses it): only files whose interval
+       intersects every predicate can hold matching rows — the same
+       driver-side pruning as the scan, so a delete touching 3 of 400k
+       files rewrites 3 files (O(matching files), never a table scan);
     3. the affected files are re-read and rewritten WITHOUT the
        matching rows (NULLs in a predicate column never match a range
        predicate, so those rows are kept — three-valued logic is
@@ -2174,8 +2174,13 @@ def stats_delete(
                 # scan contract — r12 review)
                 keep = keep & F.col(f"max_{c}").isNotNull()
                 match_pred = match_pred & F.col(c).isNotNull()
-        man = _read_manifest(spark, path, cur)
-        rows = man.filter(keep).collect()  # driver-side planning
+        # driver-side planning from one manifest collect, which the
+        # rewrite reuses: the keep predicate runs over it as a local
+        # relation (no job), under Spark's own casts and NULL semantics
+        manifest = _collect_manifest(spark, path, cur)
+        rows = (
+            spark.createDataFrame(manifest, _manifest_schema(cur)).filter(keep).collect()
+        )
         if not rows:
             _write_record(path, "_deletes", tag, {"replaced": []})
             return []
@@ -2205,7 +2210,7 @@ def stats_delete(
 
         payload = _commit_rewrite(
             spark, path, tag, "d", "delete", v, cur, rows, survivors,
-            read_conflict=_added_hit,
+            read_conflict=_added_hit, manifest=manifest,
         )
         if payload is not None:
             _write_record(path, "_deletes", tag, {"replaced": payload["replaced"]})

@@ -96,7 +96,7 @@ def ann_ivf_topk(
     stride here would need the corpus row count, and an eager
     ``count()`` at query-construction time is a full extra scan per
     call. Callers reading the driver testdata get the count for free
-    from parquet footer metadata (sources.tables.table_num_rows).
+    from parquet footer metadata (sources.tables.parquet_num_rows).
     """
     corpus = corpus.select("vec_id", "embedding")
     if centroids is None:
@@ -104,7 +104,7 @@ def ann_ivf_topk(
             raise ValueError(
                 "ann_ivf_topk needs centroid_stride or centroids: pass "
                 "centroid_stride=max(1, n_rows // nlists) (cheap n_rows: "
-                "sources.tables.table_num_rows) or trained centroids "
+                "sources.tables.parquet_num_rows) or trained centroids "
                 "(operators.clustering.kmeans_centroids_df)"
             )
         stride = max(1, centroid_stride)

@@ -61,9 +61,13 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # Push whole-file MIN/MAX/COUNT aggregates into parquet footers
-        # (off by default in Spark 4): full-table counts/stats read
-        # metadata instead of data.
+        # Pushes MIN/MAX/COUNT into parquet footers for DSv2 parquet
+        # scans only. parquet is in spark.sql.sources.useV1SourceList,
+        # so spark.read.parquet never takes that path: on Spark 4.1.2 a
+        # full count plans HashAggregate <- Exchange SinglePartition <-
+        # partial_count <- FileScan parquet [] (ReadSchema struct<>) and
+        # runs 2 jobs. Whole-table counts of engine-written parquet
+        # come from sources.tables.parquet_num_rows (no job) instead.
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # testdata events.parquet stores TIMESTAMP(NANOS) which the Spark
         # reader rejects; read as long and convert in the events loader.

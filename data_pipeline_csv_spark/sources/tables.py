@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -52,24 +53,42 @@ def balanced(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
-def table_num_rows(sf_dir: str, name: str) -> int:
-    """Exact row count from parquet footer metadata — no Spark job, no
-    data scan (footers carry per-row-group counts). The cheap
-    cardinality source for sizing decisions made at query-CONSTRUCTION
-    time (e.g. the IVF default centroid stride), where triggering an
-    eager full-table count would be an extra scan per call.
-    """
+def _spark_hidden(name: str) -> bool:
+    """Whether Spark's file listing skips a file or directory of this
+    name: ``_``-prefixed ones (``_SUCCESS``, ``_temporary/``) unless
+    they name a partition (``_p=1``), ``.``-prefixed ones (``.crc``
+    checksums) and in-flight ``._COPYING_`` copies."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def parquet_num_rows(path: str) -> int:
+    """``spark.read.parquet(path).count()`` without a Spark job: the sum
+    of the footer ``num_rows`` of exactly the files Spark's listing
+    reads. Hidden files and directories (``_spark_hidden``) and
+    zero-byte files are skipped, as Spark skips them. Spark's own
+    count reads only row-group metadata too, but costs two jobs.
+
+    For unfiltered counts of parquet the engine wrote: the dashboard's
+    ``stats()``, a staged rewrite's verification, and sizing decisions
+    made at query-construction time (e.g. the IVF default centroid
+    stride). Raises ``OSError`` for a path that cannot be listed
+    locally."""
     import pyarrow.parquet as pq
 
-    path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        return total
-    return pq.ParquetFile(path).metadata.num_rows
+    if not os.path.isdir(path):
+        return pq.read_metadata(path).num_rows if os.path.getsize(path) else 0
+    total = 0
+    for root, dirs, files in os.walk(path, followlinks=True):
+        dirs[:] = [d for d in dirs if not _spark_hidden(d)]
+        for f in files:
+            full = os.path.join(root, f)
+            if not _spark_hidden(f) and os.path.getsize(full):
+                total += pq.read_metadata(full).num_rows
+    return total
 
 
 def _events_ts_is_nanos(path: str) -> bool:
@@ -161,6 +180,15 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     _SCHEMA_CACHE[path] = (fingerprint, df.schema)
     return df
+
+
+def parquet_schema_cached(spark: SparkSession, path: str) -> StructType:
+    """``read_parquet_cached(spark, path).schema``, except that a cache
+    hit builds no DataFrame."""
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[0] == parquet_fingerprint(path):
+        return hit[1]
+    return read_parquet_cached(spark, path).schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -803,6 +803,7 @@ def compact_neardup_state(
     from pyspark.sql import functions as F
 
     from ..engine import clear_managed_table
+    from ..sources.tables import parquet_num_rows
 
     p = _neardup_paths(state_root)
     old_gens, folded_upto = _read_neardup_marker(p["cmark"])
@@ -838,7 +839,7 @@ def compact_neardup_state(
     def _rows(g: dict) -> int:
         # legacy generations carry rows=None; count once, lazily
         if g["rows"] is None:
-            g["rows"] = spark.read.parquet(g["docs"]).count()
+            g["rows"] = parquet_num_rows(g["docs"])
         return g["rows"]
 
     def _next_names() -> tuple[str, str]:
@@ -869,7 +870,7 @@ def compact_neardup_state(
         shutil.rmtree(docs_dir, ignore_errors=True)
         docs_df.write.mode("overwrite").parquet(docs_dir)
         if rows is None:
-            rows = spark.read.parquet(docs_dir).count()
+            rows = parquet_num_rows(docs_dir)
         return {"table": table, "docs": docs_dir, "rows": rows}
 
     gens = list(old_gens)

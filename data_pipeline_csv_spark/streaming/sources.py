@@ -143,9 +143,3 @@ def rate_events_stream(spark: SparkSession, rows_per_second: int = 1000) -> Data
             (F.col("value") % 97 / 7.0).alias("value"),
         )
     )
-
-
-def checkpoint_dir(base: str, name: str) -> str:
-    path = os.path.join(base, f"ckpt_{name}")
-    os.makedirs(path, exist_ok=True)
-    return path

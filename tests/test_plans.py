@@ -961,9 +961,11 @@ def test_pipeline_load_is_one_job(spark, tmp_path):
 
 def test_read_path_job_budget(spark, tmp_path):
     """preview + stats of an unchanged table take the table's schema
-    from the schema cache: at most 3 jobs warm (the limit collect and
-    the count; an uncached read ran 5, one schema-inference job per
-    read), and at most 4 on the first read after a rewrite."""
+    from the schema cache, and stats counts the rows from the parquet
+    footers: at most 1 job warm (the limit collect; a Spark count ran
+    3, an uncached read 5), at most 2 on the first read after a
+    rewrite (the schema inference and the limit collect; a Spark count
+    ran 4), and a warm stats alone runs none (a Spark count ran 2)."""
     from data_pipeline_csv_spark.engine import PipelineEngine
 
     engine = PipelineEngine(spark, str(tmp_path / "wh"))
@@ -977,19 +979,24 @@ def test_read_path_job_budget(spark, tmp_path):
     for i in range(2):  # the second pass reads after an overwrite
         engine.run_pipeline(src, "products")
         (rows, st), jobs = _jobs_in_group(spark, f"read-path-first-{i}", read)
-        assert len(jobs) <= 4
+        assert len(jobs) <= 2
         assert len(rows) == 10 and st["total_records"] == 100
         _, jobs = _jobs_in_group(spark, f"read-path-warm-{i}", read)
-        assert len(jobs) <= 3
+        assert len(jobs) <= 1
+        st, jobs = _jobs_in_group(
+            spark, f"stats-warm-{i}", lambda: engine.stats("products")
+        )
+        assert jobs == [] and st["total_records"] == 100
 
 
 def test_compact_table_job_budget(spark, tmp_path):
     """compact_table counts the source rows inside its write job (an
-    Observation) and re-reads the staged files under the source's
-    schema: at most 5 jobs per call on a 1000-row, 8-file table (the
-    source's schema inference after each rewrite, the repartitioned
-    write, the staged count). A separate source count plus a staged
-    read that inferred its schema ran 7, and 8 on a repeat call."""
+    Observation) and the staged files' rows from their parquet footers:
+    at most 3 jobs per call on a 1000-row, 8-file table (the source's
+    schema inference after each rewrite and the repartitioned write).
+    A Spark count of the staged files ran 5; a separate source count
+    plus a staged read that inferred its schema ran 7, and 8 on a
+    repeat call."""
     import os
 
     from data_pipeline_csv_spark.engine import PipelineEngine
@@ -1004,7 +1011,7 @@ def test_compact_table_job_budget(spark, tmp_path):
             spark, f"compact-table-budget-{i}", lambda: engine.compact_table("t")
         )
         assert res.rows_written == 1000
-        assert len(jobs) <= 5
+        assert len(jobs) <= 3
     assert engine.read_table("t").count() == 1000
 
 
@@ -1122,3 +1129,30 @@ def test_stats_merge_job_budget(spark, tmp_path):
     assert got == want
     assert len(ins) <= 4
     assert len(mrg) <= 5
+
+
+def test_stats_delete_job_budget(spark, tmp_path):
+    """A warm stats_delete plans from one Arrow collect of the manifest,
+    evaluates its range predicate over it as a local relation and hands
+    the same collect to its rewrite: at most 3 jobs for a one-file
+    delete on a 4-file layout (the manifest collect, the range sample
+    and the write). Planning from a Spark filter of the manifest and
+    collecting it again for the rewrite ran 4."""
+    from data_pipeline_csv_spark.operators.layout import (
+        stats_delete,
+        stats_pruned_scan,
+        write_stats_layout,
+    )
+
+    src = spark.range(4000).selectExpr("id", "id * 2 AS v")
+    for i in range(2):  # the first round warms the session
+        path = str(tmp_path / f"sd{i}")
+        write_stats_layout(src, path, ["id"], n_files=4)
+        replaced, jobs = _jobs_in_group(
+            spark, f"stats-delete-{i}",
+            lambda: stats_delete(spark, path, {"id": (100, 199)}, batch_id="d1"),
+        )
+    assert len(replaced) == 1
+    got = sorted(r["id"] for r in stats_pruned_scan(spark, path, {"id": (None, None)}).collect())
+    assert got == [k for k in range(4000) if not 100 <= k <= 199]
+    assert len(jobs) <= 3

@@ -4,13 +4,13 @@ top-k (the correctness harness can't check approximate results)."""
 import pytest
 
 from data_pipeline_csv_spark.operators.similarity import ann_ivf_topk, cosine_topk
-from data_pipeline_csv_spark.sources.tables import load_table, table_num_rows
+from data_pipeline_csv_spark.sources.tables import load_table, parquet_num_rows
 
 QUERY_IDS = [0, 1, 2, 3, 4, 5, 6, 7]
 
 
 def _stride(sf_dir, nlists=16):
-    return max(1, table_num_rows(sf_dir, "embeddings") // nlists)
+    return max(1, parquet_num_rows(f"{sf_dir}/embeddings.parquet") // nlists)
 
 
 def test_ivf_recall_at_10(spark, sf_dir):

@@ -1,5 +1,6 @@
 """Table-loader hygiene: footer probing on nested layouts, the
-NANOS-read fallback, and job-free metadata row counts."""
+NANOS-read fallback, and job-free footer row counts that equal
+Spark's count."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ import pyarrow.parquet as pq
 from data_pipeline_csv_spark.sources.tables import (
     _events_ts_is_nanos,
     load_table,
-    table_num_rows,
+    parquet_num_rows,
 )
 
 
@@ -53,17 +54,50 @@ def test_load_table_reads_nanos_events_as_micros(spark, tmp_path):
     ]
 
 
-def test_table_num_rows_matches_spark_count(spark, sf_dir):
+def test_parquet_num_rows_matches_testdata_count(spark, sf_dir):
     for name in ("embeddings", "documents", "orders"):
-        assert table_num_rows(sf_dir, name) == load_table(spark, sf_dir, name).count()
+        path = f"{sf_dir}/{name}.parquet"
+        assert parquet_num_rows(path) == load_table(spark, sf_dir, name).count()
 
 
-def test_table_num_rows_walks_directories(tmp_path):
+def test_parquet_num_rows_walks_directories(tmp_path):
     ds = tmp_path / "events.parquet" / "sub"
     ds.mkdir(parents=True)
     _write_events_ns(str(ds / "a.parquet"))
     _write_events_ns(str(ds / "b.parquet"))
-    assert table_num_rows(str(tmp_path), "events") == 6
+    assert parquet_num_rows(str(tmp_path / "events.parquet")) == 6
+
+
+def test_parquet_num_rows_counts_what_spark_reads(spark, tmp_path):
+    """The footer count equals spark.read.parquet(p).count() on the
+    layouts the engine writes, and skips every file Spark's listing
+    skips: _/.-prefixed files and directories and zero-byte files (a
+    rule counting every *.parquet file counts 3 extra files here and
+    cannot read the empty one). A partition directory is read even
+    when its column name starts with _."""
+    from data_pipeline_csv_spark.engine import PipelineEngine
+
+    engine = PipelineEngine(spark, str(tmp_path / "wh"))
+    src = spark.range(1000).selectExpr("id", "id % 3 AS _p").repartition(4)
+
+    flat = str(tmp_path / "flat")
+    src.write.parquet(flat)
+    names = os.listdir(flat)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    part = engine.write_partitioned(src, "part", ["_p"]).table_path
+    empty = engine.load(spark.createDataFrame([], "id long, _p long"), "empty").table_path
+
+    noisy = str(tmp_path / "noisy")
+    src.write.parquet(noisy)
+    extra = pa.table({"id": pa.array([1, 2], pa.int64()), "_p": pa.array([1, 2], pa.int64())})
+    os.makedirs(os.path.join(noisy, "_temporary", "0"))
+    pq.write_table(extra, os.path.join(noisy, "_temporary", "0", "part-t.parquet"))
+    pq.write_table(extra, os.path.join(noisy, "_meta.parquet"))
+    pq.write_table(extra, os.path.join(noisy, ".hidden.parquet"))
+    open(os.path.join(noisy, "part-zero.parquet"), "wb").close()
+
+    for path, want in ((flat, 1000), (part, 1000), (empty, 0), (noisy, 1000)):
+        assert parquet_num_rows(path) == spark.read.parquet(path).count() == want, path
 
 
 def test_zorder_covering_buckets_complete(spark):
