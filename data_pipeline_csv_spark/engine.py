@@ -37,6 +37,7 @@ from .sources.tables import (
     parquet_num_rows,
     parquet_schema_cached,
     read_parquet_cached,
+    spark_listed_files,
 )
 
 
@@ -428,9 +429,13 @@ class PipelineEngine:
 
     # -- read path (Q1-Q4) ----------------------------------------------
     def table_exists(self, table_name: str) -> bool:
-        """Q1 (reference api.py:182-187)."""
+        """Q1 (reference api.py:182-187): the table's directory holds a
+        parquet file that Spark's listing reads, at the root or under
+        the ``col=value/`` dirs of a :meth:`write_partitioned` table."""
         path = self._table_path(table_name)
-        return os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path))
+        return os.path.isdir(path) and any(
+            f.endswith(".parquet") for f in spark_listed_files(path)
+        )
 
     def read_table(self, table_name: str) -> DataFrame:
         """The table as a lazy scan. Its schema is inferred (one Spark

@@ -132,41 +132,17 @@ def _bucket_init(df: DataFrame, spec: dict, path: str, n_files: int = 64) -> Non
     Initialization is single-writer (a concurrent initializer fails
     loud at the v1 CAS), exactly like :func:`write_stats_layout`;
     multi-writer concurrency begins at the first commit."""
-    import os
     import shutil
-    import uuid
 
-    spark = df.sparkSession
     if "zb" in df.columns:
         raise ValueError("bucket layout: 'zb' is the reserved bucket column")
     shutil.rmtree(path, ignore_errors=True)
-    data_dir = _skip_data_dir(path)
     out = _bucket_write(df, spec, n_files)
-    out.write.mode("overwrite").parquet(data_dir)
-    data_schema = _nullable_schema(out.schema)
-    tag = f"init-{uuid.uuid4().hex[:12]}"
-    staging = os.path.join(path, "_staging", tag)
-    part = _stage_manifest_part(
-        _manifest_rows(spark.read.schema(data_schema).parquet(data_dir), ["zb"]),
-        staging,
-        _manifest_pool_dir(path),
-        f"{tag}.parquet",
+    out.write.mode("overwrite").parquet(_skip_data_dir(path))
+    _commit_init(
+        df.sparkSession, path, _nullable_schema(out.schema), ["zb"],
+        spec=spec, dirty_buckets=[],
     )
-    new_files = sorted(fn for fn in os.listdir(data_dir) if fn.endswith(".parquet"))
-    payload = {
-        "op": "init",
-        "tag": tag,
-        "parts": [part],
-        "new_files": new_files,
-        "replaced": [],
-        "skip_cols": ["zb"],
-        "data_schema": data_schema.jsonValue(),
-        "spec": spec,
-        "dirty_buckets": [],
-    }
-    if not _cas_commit(path, 1, payload):
-        raise RuntimeError(f"bucket layout: {path} was initialized concurrently")
-    shutil.rmtree(staging, ignore_errors=True)
 
 
 def read_zorder_spec(path: str) -> dict:
@@ -310,8 +286,8 @@ def zorder_append(
     touched = sorted(
         r["zb"] for r in staged.select("zb").distinct().collect()
     )
-    part = _stage_manifest_part(
-        _manifest_rows(staged, ["zb"]),
+    part = _publish_arrow_part(
+        _new_file_rows(spark, _data_schema(cur), data_dir, moved, ["zb"]),
         os.path.join(staging, "manifest"),
         _manifest_pool_dir(path),
         f"a{tag}-{uuid.uuid4().hex[:8]}.parquet",
@@ -1274,9 +1250,10 @@ def stats_vacuum(spark, path: str, grace_seconds: float = 3600.0) -> dict:
 
 def _manifest_rows(files_df: DataFrame, skip_cols: list) -> DataFrame:
     """One manifest row per scanned file: (file, n_rows, min_<c>,
-    max_<c> per skip column) — the single definition of the manifest
-    row shape, shared by the initial build, the per-batch append part,
-    and every rewrite part so they can never drift."""
+    max_<c> per skip column) — the definition of a manifest row, which
+    :func:`_new_file_rows` reads from exact footers and computes with
+    this aggregate for every other file, so no part writer has its
+    own rule."""
     aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
     for c in skip_cols:
         aggs.append(F.min(c).alias(f"min_{c}"))
@@ -1284,23 +1261,12 @@ def _manifest_rows(files_df: DataFrame, skip_cols: list) -> DataFrame:
     return files_df.groupBy(F.input_file_name().alias("file")).agg(*aggs)
 
 
-def _stage_manifest_part(df_part: DataFrame, staging: str, pool: str, name: str) -> str:
-    """Write a one-file manifest part to staging, then rename it into
-    the pool under ``name`` — invisible until a commit lists it."""
-    import os
-
-    df_part.coalesce(1).write.mode("overwrite").parquet(staging)
-    part = [fn for fn in os.listdir(staging) if fn.endswith(".parquet")]
-    assert len(part) == 1
-    os.makedirs(pool, exist_ok=True)
-    os.rename(os.path.join(staging, part[0]), os.path.join(pool, name))
-    return name
-
-
 def _publish_arrow_part(table, staging: str, pool: str, name: str) -> str:
-    """The driver-side :func:`_stage_manifest_part`: write the Arrow
-    ``table`` as one parquet file into staging with pyarrow (no Spark
-    job), then rename it into the pool under ``name``."""
+    """The one writer of every pool part (manifest parts, the IVF
+    sidecars and the restore marker): write the Arrow ``table`` as one
+    parquet file into staging with pyarrow (no Spark job), then rename
+    it into the pool under ``name`` — invisible until a commit lists
+    it."""
     import os
 
     import pyarrow.parquet as pq
@@ -1399,6 +1365,46 @@ def _new_file_rows(spark, data_schema, data_dir: str, files: list, cols: list):
     return out
 
 
+def _commit_init(spark, path: str, data_schema, skip_cols: list, sides=None, **extra):
+    """Commit version 1 of the layout whose data files were just
+    written to its data dir: one manifest part over all of them, read
+    from their footers (:func:`_new_file_rows`), each Arrow table of
+    ``sides`` as one more pool part named under its payload key, and
+    ``extra`` as further payload keys. Initialization is single-writer,
+    like CREATE TABLE everywhere: the v1 CAS makes a concurrent
+    initializer fail loud."""
+    import os
+    import shutil
+    import uuid
+
+    tag = f"init-{uuid.uuid4().hex[:12]}"
+    staging = os.path.join(path, "_staging", tag)
+    pool = _manifest_pool_dir(path)
+    data_dir = _skip_data_dir(path)
+    new_files = sorted(fn for fn in os.listdir(data_dir) if fn.endswith(".parquet"))
+    payload = {
+        "op": "init",
+        "tag": tag,
+        "parts": [
+            _publish_arrow_part(
+                _new_file_rows(spark, data_schema, data_dir, new_files, skip_cols),
+                staging, pool, f"{tag}.parquet",
+            )
+        ],
+        "new_files": new_files,
+        "replaced": [],
+        "skip_cols": list(skip_cols),
+        "data_schema": data_schema.jsonValue(),
+        **extra,
+    }
+    for key, table in (sides or {}).items():
+        payload[key] = _publish_arrow_part(table, staging, pool, f"{tag}-{key}.parquet")
+    ok = _cas_commit(path, 1, payload)
+    shutil.rmtree(staging, ignore_errors=True)
+    if not ok:
+        raise RuntimeError(f"{path} was initialized concurrently")
+
+
 def write_stats_layout(
     df: DataFrame, path: str, skip_cols: list, n_files: int = 48
 ) -> None:
@@ -1420,12 +1426,13 @@ def write_stats_layout(
     Rows are range-partitioned on ``skip_cols[0]`` (then sorted within
     tasks by all skip columns), so each written file covers a tight
     range of the leading column and the manifest intervals barely
-    overlap. One distributed pass over the written files then
-    aggregates per-file min/max for every skip column into one
-    manifest part — one row per data file (a 100 TB table at 256 MB
-    files is ~400k manifest rows: broadcast-sized, and the pass that
-    builds it is the same full scan the write itself already paid,
-    not an extra footer crawl per file). Commit v1 carries the part
+    overlap. The per-file min/max of every skip column is then read
+    from the written files' parquet footers (:func:`_new_file_rows`;
+    no Spark job, and a column whose footer stats are not exact takes
+    one :func:`_manifest_rows` aggregate over those files) into one
+    manifest part written on the driver — one row per data file (a
+    100 TB table at 256 MB files is ~400k manifest rows:
+    broadcast-sized). Commit v1 carries the part
     list, the skip columns and the (all-nullable) data schema, so
     every later scan reads data and manifest under an EXPLICIT schema
     — no mergeSchema footer crawls at plan time, and files written
@@ -1445,46 +1452,18 @@ def write_stats_layout(
     the first commit; create from one writer, then append/delete/
     merge/compact from as many as you like.
     """
-    import os
     import shutil
-    import uuid
 
-    spark = df.sparkSession
     shutil.rmtree(path, ignore_errors=True)
-    data_dir = _skip_data_dir(path)
     out = df.repartitionByRange(
         n_files, *[F.col(c) for c in skip_cols]
     ).sortWithinPartitions(*skip_cols)
-    out.write.mode("overwrite").parquet(data_dir)
+    out.write.mode("overwrite").parquet(_skip_data_dir(path))
     data_schema = _nullable_schema(out.schema)
     missing = [c for c in skip_cols if c not in data_schema.names]
     if missing:
         raise ValueError(f"write_stats_layout: skip column(s) {missing} not in data")
-    tag = f"init-{uuid.uuid4().hex[:12]}"
-    staging = os.path.join(path, "_staging", tag)
-    part = _stage_manifest_part(
-        _manifest_rows(spark.read.schema(data_schema).parquet(data_dir), skip_cols),
-        staging,
-        _manifest_pool_dir(path),
-        f"{tag}.parquet",
-    )
-    new_files = sorted(
-        fn for fn in os.listdir(data_dir) if fn.endswith(".parquet")
-    )
-    payload = {
-        "op": "init",
-        "tag": tag,
-        "parts": [part],
-        "new_files": new_files,
-        "replaced": [],
-        "skip_cols": list(skip_cols),
-        "data_schema": data_schema.jsonValue(),
-    }
-    if not _cas_commit(path, 1, payload):
-        raise RuntimeError(
-            f"write_stats_layout: {path} was initialized concurrently"
-        )
-    shutil.rmtree(staging, ignore_errors=True)
+    _commit_init(df.sparkSession, path, data_schema, skip_cols)
 
 
 def stats_pruned_scan(
@@ -2536,6 +2515,8 @@ def stats_restore(
     import os
     import uuid as _uuid
 
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     while True:
         v, cur = _load_version(path)
         tv, target = _load_version(path, version)  # fails loud if expired
@@ -2552,8 +2533,8 @@ def stats_restore(
         # to any manifest read, but flows forward through appends like
         # every part, so the part-referenced probe can recognize this
         # restore's commit long after its record expired
-        marker = _stage_manifest_part(
-            spark.createDataFrame([], _manifest_schema(target)),
+        marker = _publish_arrow_part(
+            to_arrow_schema(_manifest_schema(target)).empty_table(),
             os.path.join(path, "_staging", f"restore-{tag}-{_uuid.uuid4().hex[:8]}"),
             _manifest_pool_dir(path),
             f"r{tag}-{_uuid.uuid4().hex[:8]}.parquet",
@@ -2782,10 +2763,11 @@ def stats_compute_stats(
     real values but would read NULL stats = silently pruned, the
     wrong-answer hazard the refusal blocks), and a full copy-on-write
     rewrite would pay write amplification for nothing — the stats are
-    a pure FUNCTION of the existing files. So this op runs ONE
-    distributed per-file min/max aggregate over the commit's file
-    list (the pass every write already pays; the ANALYZE TABLE shape
-    rather than the OPTIMIZE one) and commits the result
+    a pure FUNCTION of the existing files. So this op reads the
+    per-file min/max of the commit's files from their parquet footers
+    (:func:`_new_file_rows`; files whose footers are not exact for a
+    column take one :func:`_manifest_rows` aggregate — the ANALYZE
+    TABLE shape rather than the OPTIMIZE one) and commits the result
     METADATA-ONLY: parts = [one fresh full-snapshot part carrying
     stats for the old AND new skip columns], new_files = [],
     replaced = [], skip_cols widened. No data file moves; pinned
@@ -2796,7 +2778,7 @@ def stats_compute_stats(
     range predicate never matches NULL; every other file gets TRUE
     bounds from its own rows, so the silent-prune hazard cannot arise
     by construction. A CAS loser re-plans from the winner's version
-    (the aggregate must cover any files the winner added).
+    (the snapshot part must cover any files the winner added).
     Exactly-once per ``batch_id`` via the ``_computes/<tag>`` record
     + commit-log tag recovery; the part carries the ``s<tag>-``
     prefix so a post-retention retry of a committed attempt still
@@ -2843,11 +2825,16 @@ def stats_compute_stats(
             return skip_cols
         widened = skip_cols + new_cols
         man = _read_manifest(spark, path, cur)
-        files = sorted(r["file"] for r in man.select("file").collect())
+        files = sorted(
+            os.path.basename(r["file"].removeprefix("file:"))
+            for r in man.select("file").collect()
+        )
         attempt = f"{tag}-{uuid.uuid4().hex[:8]}"
         staging = os.path.join(path, "_staging", f"compute-{attempt}")
-        part = _stage_manifest_part(
-            _manifest_rows(_read_data_files(spark, cur, files), widened),
+        part = _publish_arrow_part(
+            _new_file_rows(
+                spark, _data_schema(cur), _skip_data_dir(path), files, widened
+            ),
             os.path.join(staging, "manifest"),
             _manifest_pool_dir(path),
             f"s{attempt}.parquet",

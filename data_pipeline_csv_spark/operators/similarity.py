@@ -313,23 +313,19 @@ def write_ivf_layout(
     matching files from the broadcast-sized manifest
     (:func:`read_ivf_lists`) instead of scanning the corpus.
     """
-    import os
     import shutil
-    import uuid
 
-    from .layout import (
-        _cas_commit,
-        _manifest_pool_dir,
-        _manifest_rows,
-        _nullable_schema,
-        _skip_data_dir,
-        _stage_manifest_part,
-    )
+    from .layout import _commit_init, _nullable_schema, _skip_data_dir
 
     spark = corpus.sparkSession
     pcols = list(partition_cols)
+    # The coarse quantizer is COMMITTED STATE (r14 review: centroids
+    # are what list_id means — leaving them caller-side let a racing
+    # retrain silently desync assignment from the index). Every later
+    # op assigns/probes against the centroids of the commit it plans.
+    cents = _arrow_sidecar(centroids, _IVF_CENTS_SCHEMA)
     if n_files is None:
-        n_files = centroids.count()
+        n_files = cents.num_rows
     assigned = ivf_assign_lists(
         corpus.select("vec_id", "embedding", *carry), centroids, carry=carry
     )
@@ -343,49 +339,12 @@ def write_ivf_layout(
     missing = [c for c in pcols if c not in data_schema.names]
     if missing:
         raise ValueError(f"write_ivf_layout: partition column(s) {missing} not in data")
-    tag = f"init-{uuid.uuid4().hex[:12]}"
-    staging = os.path.join(path, "_staging", tag)
     members = spark.read.schema(data_schema).parquet(data_dir)
-    part = _stage_manifest_part(
-        _manifest_rows(members, pcols),
-        staging,
-        _manifest_pool_dir(path),
-        f"{tag}.parquet",
+    stats = _arrow_sidecar(_ivf_list_stats(members, centroids), _IVF_STATS_SCHEMA)
+    _commit_init(
+        spark, path, data_schema, pcols,
+        sides={"stats_part": stats, "centroids_part": cents},
     )
-    stats_part = _stage_manifest_part(
-        _ivf_list_stats(members, centroids),
-        os.path.join(staging, "stats"),
-        _manifest_pool_dir(path),
-        f"{tag}-stats.parquet",
-    )
-    # The coarse quantizer is COMMITTED STATE (r14 review: centroids
-    # are what list_id means — leaving them caller-side let a racing
-    # retrain silently desync assignment from the index). Every later
-    # op assigns/probes against the centroids of the commit it plans.
-    cents_part = _stage_manifest_part(
-        centroids.select(
-            F.col("c_id").cast("long"), F.col("c_emb").cast("array<double>")
-        ),
-        os.path.join(staging, "cents"),
-        _manifest_pool_dir(path),
-        f"{tag}-cents.parquet",
-    )
-    new_files = sorted(fn for fn in os.listdir(data_dir) if fn.endswith(".parquet"))
-    payload = {
-        "op": "init",
-        "tag": tag,
-        "parts": [part],
-        "new_files": new_files,
-        "replaced": [],
-        "skip_cols": pcols,
-        "data_schema": data_schema.jsonValue(),
-        "stats_part": stats_part,
-        "centroids_part": cents_part,
-    }
-    ok = _cas_commit(path, 1, payload)
-    shutil.rmtree(staging, ignore_errors=True)
-    if not ok:
-        raise RuntimeError(f"write_ivf_layout: {path} was initialized concurrently")
 
 
 # The per-list stats sidecar's fixed shape (explicit-schema reads, no
@@ -458,6 +417,18 @@ def _ivf_list_stats(members: DataFrame, centroids: DataFrame) -> DataFrame:
 
 
 _IVF_CENTS_SCHEMA = "c_id long, c_emb array<double>"
+
+
+def _arrow_sidecar(df: DataFrame, ddl: str):
+    """``df`` collected through Arrow with exactly the columns and
+    types of the sidecar schema ``ddl`` (``_IVF_STATS_SCHEMA`` or
+    ``_IVF_CENTS_SCHEMA``), for a :func:`_publish_arrow_part` write —
+    the sidecar form of the manifest's :func:`_arrow_manifest`."""
+    from pyspark.sql.types import StructType
+
+    from .layout import _arrow_manifest
+
+    return _arrow_manifest(df.toArrow(), StructType.fromDDL(ddl))
 
 
 def _read_ivf_centroids(spark, layout_path: str, payload: dict | None = None):
@@ -558,13 +529,13 @@ def ivf_append(
         _data_schema,
         _load_version,
         _manifest_pool_dir,
-        _manifest_rows,
+        _new_file_rows,
+        _publish_arrow_part,
         _read_data_files,
         _read_record,
         _retention_gc,
         _rm_f,
         _skip_data_dir,
-        _stage_manifest_part,
         _sweep_own_tag,
         _tag_recovery_state,
         _write_record,
@@ -670,8 +641,8 @@ def ivf_append(
         staged = _read_data_files(
             spark, cur, [os.path.join(data_dir, fn) for fn in moved]
         )
-        part = _stage_manifest_part(
-            _manifest_rows(staged, pcols),
+        part = _publish_arrow_part(
+            _new_file_rows(spark, _data_schema(cur), data_dir, moved, pcols),
             os.path.join(staging, "manifest"),
             _manifest_pool_dir(layout_path),
             f"b{tag}-{uuid.uuid4().hex[:8]}.parquet",
@@ -743,9 +714,9 @@ def ivf_append(
             )
             .select("list_id", "n_vec", "min_sim", "build_min_sim", "n_drift")
         )
-        sp = _stage_manifest_part(
-            merged,
-            os.path.join(staging, f"stats-{uuid.uuid4().hex[:6]}"),
+        sp = _publish_arrow_part(
+            _arrow_sidecar(merged, _IVF_STATS_SCHEMA),
+            os.path.join(staging, "stats"),
             _manifest_pool_dir(layout_path),
             f"b{tag}-stats-{uuid.uuid4().hex[:8]}.parquet",
         )
@@ -869,14 +840,14 @@ def ivf_retrain(
 
     from .clustering import SCALE, _reduce_partials
     from .layout import (
+        _collect_manifest,
         _commit_rewrite,
         _load_version,
         _manifest_pool_dir,
+        _publish_arrow_part,
         _read_data_files,
-        _read_manifest,
         _retention_gc,
         _rm_f,
-        _stage_manifest_part,
     )
 
     no_op = {
@@ -905,11 +876,12 @@ def ivf_retrain(
             raise ValueError(
                 f"retrain needs a list_id-first partitioned layout, got {pcols}"
             )
-        man = _read_manifest(spark, layout_path, cur)
-        mrows = man.collect()
+        # one manifest collect plans the affected files and is handed
+        # to the rewrite, which would otherwise collect it again
+        man = _collect_manifest(spark, layout_path, cur)
         affected = [
             r
-            for r in mrows
+            for r in man.to_pylist()
             if _lists_intersect(drifted, r["min_list_id"], r["max_list_id"])
         ]
         sub_all = _read_data_files(
@@ -987,17 +959,17 @@ def ivf_retrain(
             side_staging = os.path.join(
                 layout_path, "_staging", f"retrain-{tag}-{uuid.uuid4().hex[:8]}"
             )
-            sp = _stage_manifest_part(
-                kept.unionByName(fresh),
-                os.path.join(side_staging, "stats"),
+            sp = _publish_arrow_part(
+                _arrow_sidecar(kept.unionByName(fresh), _IVF_STATS_SCHEMA),
+                side_staging,
                 _manifest_pool_dir(layout_path),
                 f"w{tag}-stats-{uuid.uuid4().hex[:8]}.parquet",
             )
             # the NEW quantizer rides the same commit: a racing
             # append's loser sees centroids_part change and re-assigns
-            cp = _stage_manifest_part(
-                new_cents,
-                os.path.join(side_staging, "cents"),
+            cp = _publish_arrow_part(
+                _arrow_sidecar(new_cents, _IVF_CENTS_SCHEMA),
+                side_staging,
                 _manifest_pool_dir(layout_path),
                 f"w{tag}-cents-{uuid.uuid4().hex[:8]}.parquet",
             )
@@ -1005,7 +977,7 @@ def ivf_retrain(
             payload = _commit_rewrite(
                 spark, layout_path, tag, "w", "retrain", v, cur, affected,
                 staged, n_out=n_out, repartition=False,
-                extra={"stats_part": sp, "centroids_part": cp},
+                extra={"stats_part": sp, "centroids_part": cp}, manifest=man,
             )
         finally:
             sub_all.unpersist()

@@ -36,11 +36,7 @@ def _staged_run(spark: SparkSession, sf_dir: str, build, output_mode: str) -> Da
     try:
         stage_events_dir(spark, sf_dir, staged, n_files=4)
         stream = build(read_events_stream(spark, staged))
-        out = run_to_memory(stream, spark, output_mode=output_mode)
-        # memory sink tables are session-scoped; materialize before the
-        # staging dir disappears.
-        out.persist().count()
-        return out
+        return run_to_memory(stream, spark, output_mode=output_mode)
     finally:
         shutil.rmtree(staged, ignore_errors=True)
 

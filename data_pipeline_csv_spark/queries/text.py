@@ -582,9 +582,13 @@ def _bpe_chain(n_merges: int) -> str:
     freq, m{t} is the deterministic argmax, w{t} applies the canonical
     greedy merge pass via list_reduce with the same string-fold as
     operators/bpe._merge_pass. Returns the WITH-chain through
-    w{n_merges}; the merge- and encode-oracles append their selects."""
+    w{n_merges}; the merge- and encode-oracles append their selects.
+
+    Every CTE is MATERIALIZED: DuckDB otherwise inlines a CTE at each
+    reference, and w{t-1} is read by both p{t} and w{t}, so w{n}
+    expanded w0 ~2^n times (the 10-merge replay outgrew 12 GB)."""
     sql = f"""
-    WITH w0 AS (
+    WITH w0 AS MATERIALIZED (
       SELECT trim(regexp_replace(w, '(.)', '\\1 ', 'g')) AS seg, freq FROM (
         SELECT t.tok AS w, CAST(COUNT(*) AS BIGINT) AS freq
         FROM (SELECT unnest({_TOKS}) AS tok FROM documents) t
@@ -594,15 +598,15 @@ def _bpe_chain(n_merges: int) -> str:
     for t in range(1, n_merges + 1):
         prev = f"w{t - 1}"
         sql += f""",
-    p{t} AS (
+    p{t} AS MATERIALIZED (
       SELECT s[CAST(r.i AS INT)] AS l, s[CAST(r.i AS INT) + 1] AS r2,
              SUM(freq) AS pf
       FROM (SELECT string_split(seg, ' ') AS s, freq FROM {prev})
       JOIN range(1, 1000000) r(i) ON r.i <= len(s) - 1
       GROUP BY 1, 2
     ),
-    m{t} AS (SELECT l, r2, pf FROM p{t} ORDER BY pf DESC, l ASC, r2 ASC LIMIT 1),
-    w{t} AS (
+    m{t} AS MATERIALIZED (SELECT l, r2, pf FROM p{t} ORDER BY pf DESC, l ASC, r2 ASC LIMIT 1),
+    w{t} AS MATERIALIZED (
       SELECT list_reduce(string_split({prev}.seg, ' '), (acc, x) ->
                CASE WHEN x = m{t}.r2 AND (acc = m{t}.l OR acc LIKE '% ' || m{t}.l)
                     THEN acc || m{t}.r2 ELSE acc || ' ' || x END) AS seg,

@@ -65,12 +65,24 @@ def _spark_hidden(name: str) -> bool:
     )
 
 
+def spark_listed_files(path: str):
+    """The files Spark's listing of the directory ``path`` reads: every
+    file under it, ``col=value/`` partition dirs included, except
+    hidden files and directories (``_spark_hidden``) and zero-byte
+    files, which Spark skips too."""
+    for root, dirs, files in os.walk(path, followlinks=True):
+        dirs[:] = [d for d in dirs if not _spark_hidden(d)]
+        for f in files:
+            full = os.path.join(root, f)
+            if not _spark_hidden(f) and os.path.getsize(full):
+                yield full
+
+
 def parquet_num_rows(path: str) -> int:
     """``spark.read.parquet(path).count()`` without a Spark job: the sum
     of the footer ``num_rows`` of exactly the files Spark's listing
-    reads. Hidden files and directories (``_spark_hidden``) and
-    zero-byte files are skipped, as Spark skips them. Spark's own
-    count reads only row-group metadata too, but costs two jobs.
+    reads (``spark_listed_files``). Spark's own count reads only
+    row-group metadata too, but costs two jobs.
 
     For unfiltered counts of parquet the engine wrote: the dashboard's
     ``stats()``, a staged rewrite's verification, and sizing decisions
@@ -81,14 +93,7 @@ def parquet_num_rows(path: str) -> int:
 
     if not os.path.isdir(path):
         return pq.read_metadata(path).num_rows if os.path.getsize(path) else 0
-    total = 0
-    for root, dirs, files in os.walk(path, followlinks=True):
-        dirs[:] = [d for d in dirs if not _spark_hidden(d)]
-        for f in files:
-            full = os.path.join(root, f)
-            if not _spark_hidden(f) and os.path.getsize(full):
-                total += pq.read_metadata(full).num_rows
-    return total
+    return sum(pq.read_metadata(f).num_rows for f in spark_listed_files(path))
 
 
 def _events_ts_is_nanos(path: str) -> bool:

@@ -1156,3 +1156,47 @@ def test_stats_delete_job_budget(spark, tmp_path):
     got = sorted(r["id"] for r in stats_pruned_scan(spark, path, {"id": (None, None)}).collect())
     assert got == [k for k in range(4000) if not 100 <= k <= 199]
     assert len(jobs) <= 3
+
+
+def test_layout_create_job_budget(spark, tmp_path):
+    """write_stats_layout and write_ivf_layout take the manifest rows
+    from the footers of the files they have just written and write
+    every part (manifest, stats and centroid sidecars) on the driver:
+    warm, at most 3 jobs for a 4,000-row, 4-file stats layout, 1 for
+    an empty 1-file one (the write alone) and 8 for a 400-vector,
+    4-list IVF layout. A coalesce(1) Spark write of each part, the
+    manifest re-scanning the written files, ran 5, 3 and 12."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_csv_spark.operators.layout import write_stats_layout
+    from data_pipeline_csv_spark.operators.similarity import write_ivf_layout
+
+    src = spark.range(4000).selectExpr("id", "id * 2 AS v")
+    empty = spark.range(0).selectExpr("id", "id AS v")
+    # no zero vector, so every cosine is defined
+    corpus = spark.range(400).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            *[F.sin(F.col("id") * (k + 1)) + F.lit(1.5) for k in range(8)]
+        ).alias("embedding"),
+    )
+    cents = spark.createDataFrame(
+        [(c, [float((c + k) % 4 == 0) for k in range(8)]) for c in range(4)],
+        "c_id long, c_emb array<double>",
+    )
+    for i in range(2):  # the first round warms the session
+        _, full = _jobs_in_group(
+            spark, f"stats-layout-4-{i}",
+            lambda: write_stats_layout(src, str(tmp_path / f"s4{i}"), ["id"], n_files=4),
+        )
+        _, none = _jobs_in_group(
+            spark, f"stats-layout-0-{i}",
+            lambda: write_stats_layout(empty, str(tmp_path / f"s0{i}"), ["id"], n_files=1),
+        )
+        _, ivf = _jobs_in_group(
+            spark, f"ivf-layout-{i}",
+            lambda: write_ivf_layout(corpus, cents, str(tmp_path / f"ivf{i}")),
+        )
+    assert len(full) <= 3
+    assert len(none) <= 1
+    assert len(ivf) <= 8

@@ -184,6 +184,17 @@ def test_pipeline_empty_clean_writes_schema(spark, engine, tmp_path):
     assert [c["name"] for c in stats["columns"]] == ["id", "name", "Message"]
 
 
+def test_partitioned_table_exists_and_counts(spark, engine):
+    """A write_partitioned table keeps its parquet files under
+    col=value/ dirs, none at the root: table_exists still finds it (so
+    the preview and stats endpoints answer it), and stats counts its
+    rows."""
+    df = spark.range(10).selectExpr("id", "id % 2 AS p")
+    engine.write_partitioned(df, "parted", ["p"])
+    assert engine.table_exists("parted")
+    assert engine.stats("parted")["total_records"] == 10
+
+
 def test_column_names_with_spaces_roundtrip(spark, engine, tmp_path):
     src = tmp_path / "spaced.csv"
     src.write_text("Unique ID,Geo Type Name\n7,Borough\n")

@@ -982,6 +982,79 @@ def test_ivf_append_first_touch_list_uses_observed_edge(spark, tmp_path):
     )
 
 
+def test_ivf_parts_equal_the_aggregate_and_sidecars(spark, tmp_path):
+    """Every IVF part is written on the driver and reads back as the
+    Spark computation it replaces. For a freshly built layout and after
+    one ivf_append, the committed manifest equals the _manifest_rows
+    aggregate over the data files and the centroid sidecar equals the
+    input centroids. The build's stats sidecar equals _ivf_list_stats
+    over the members; after the append, its n_vec and min_sim equal
+    _ivf_list_stats over all members while build_min_sim stays
+    frozen."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_csv_spark.operators.layout import (
+        _load_version,
+        _manifest_pool_dir,
+        _manifest_rows,
+        _read_data_files,
+        _read_manifest,
+    )
+    from data_pipeline_csv_spark.operators.similarity import (
+        _IVF_STATS_SCHEMA,
+        _ivf_list_stats,
+        _read_ivf_centroids,
+        ivf_append,
+        write_ivf_layout,
+    )
+
+    def corpus(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("vec_id"),
+            F.array(
+                *[F.sin(F.col("id") * (k + 1)) + F.lit(1.5) for k in range(8)]
+            ).alias("embedding"),
+        )
+
+    cents = spark.createDataFrame(
+        [(c, [float((c + k) % 4 == 0) for k in range(8)]) for c in range(4)],
+        "c_id long, c_emb array<double>",
+    )
+    layout = str(tmp_path / "ivf")
+
+    def by(rows, key):
+        return sorted((r.asDict() for r in rows), key=lambda r: r[key])
+
+    def check():
+        _v, cur = _load_version(layout)
+        man = _read_manifest(spark, layout, cur)
+        files = [r["file"] for r in man.select("file").collect()]
+        members = _read_data_files(spark, cur, files)
+        assert by(man.collect(), "file") == by(
+            _manifest_rows(members, ["list_id"]).collect(), "file"
+        )
+        assert by(_read_ivf_centroids(spark, layout, cur).collect(), "c_id") == by(
+            cents.collect(), "c_id"
+        )
+        stats = spark.read.schema(_IVF_STATS_SCHEMA).parquet(
+            f"{_manifest_pool_dir(layout)}/{cur['stats_part']}"
+        )
+        return by(stats.collect(), "list_id"), by(
+            _ivf_list_stats(members, cents).collect(), "list_id"
+        )
+
+    write_ivf_layout(corpus(0, 400), cents, layout)
+    built, want = check()
+    assert built == want and len(built) == 4
+    ivf_append(corpus(400, 500), None, layout, batch_id="b1")
+    appended, want = check()
+    assert [(r["list_id"], r["n_vec"], r["min_sim"]) for r in appended] == [
+        (r["list_id"], r["n_vec"], r["min_sim"]) for r in want
+    ]
+    assert sum(r["n_vec"] for r in appended) == 500
+    assert [r["build_min_sim"] for r in appended] == [r["build_min_sim"] for r in built]
+
+
 def test_ivf_restore_rolls_back_quantizer(spark, sf_dir, tmp_path):
     """RESTORE on an IVF layout is inherited from the shared commit
     log — and it must roll back the SIDE PARTS with the data: the

@@ -193,6 +193,22 @@ def test_attribution_join_stream_matches_batch_interval_join(spark, sf_dir, stag
     assert got_rows == want_rows and len(got_rows) > 0
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["streaming_hourly_rollup", "streaming_dedup_event_ids", "streaming_enriched_rollup"],
+)
+def test_memory_sink_queries_leave_no_cached_rdd(spark, sf_dir, name):
+    """The registry queries that drain a stream into the memory sink
+    return the sink's driver-held rows without persisting them, so
+    each leaves no more cached RDDs behind than there were before it."""
+    from data_pipeline_csv_spark.queries import REGISTRY
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    assert REGISTRY[name].fn(spark, sf_dir).count() > 0
+    assert jsc.getPersistentRDDs().size() <= before
+
+
 def test_checkpoint_recovery_processes_each_file_once(spark, sf_dir, tmp_path):
     """Stop a checkpointed stream mid-feed, add more data, restart with the
     same checkpoint: the second run must process ONLY the unseen files
