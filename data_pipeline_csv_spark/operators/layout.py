@@ -1266,14 +1266,17 @@ def _publish_arrow_part(table, staging: str, pool: str, name: str) -> str:
     sidecars and the restore marker): write the Arrow ``table`` as one
     parquet file into staging with pyarrow (no Spark job), then rename
     it into the pool under ``name`` — invisible until a commit lists
-    it."""
+    it. The ``file`` column keeps no min/max statistics: nothing
+    filters a manifest by file, and they would store each long URI
+    twice more in the footer."""
     import os
 
     import pyarrow.parquet as pq
 
     os.makedirs(staging, exist_ok=True)
     tmp = os.path.join(staging, name)
-    pq.write_table(table, tmp, store_schema=False)
+    stats = [c for c in table.column_names if c != "file"]
+    pq.write_table(table, tmp, store_schema=False, write_statistics=stats)
     os.makedirs(pool, exist_ok=True)
     os.rename(tmp, os.path.join(pool, name))
     return name

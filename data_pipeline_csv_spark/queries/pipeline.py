@@ -730,62 +730,65 @@ def corpus_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle into training shards. Each fragment below is the same
     # SQL its standalone query ships (corpus_decontaminate_bloom,
     # corpus_dsir_select, dedup_remove_spans/dedup_span_coverage,
-    # corpus_shuffle_shards), composed end to end.
+    # corpus_shuffle_shards), composed end to end. Every CTE is
+    # MATERIALIZED: DuckDB otherwise inlines a CTE at each reference,
+    # and this chain reads most of its CTEs more than once (inlined,
+    # the sf0.001 replay took ~257 s).
     oracle=f"""
-    WITH RECURSIVE {_CONTAM_SHINGLE_CTE},
-    q AS ({_QUALITY_SQL}),
-    kept AS (
+    WITH RECURSIVE {_CONTAM_SHINGLE_CTE.replace(" AS (", " AS MATERIALIZED (")},
+    q AS MATERIALIZED ({_QUALITY_SQL}),
+    kept AS MATERIALIZED (
       SELECT q.doc_id, q.quality FROM q
       JOIN documents d ON q.doc_id = d.doc_id
       WHERE d.source <> 'src0'
         AND q.n_tokens >= 16 AND q.a_ratio >= 0.5 AND q.stop_ratio >= 0.05
     ),
-    surv AS (
+    surv AS MATERIALIZED (
       SELECT d.doc_id, k.quality,
              trim(regexp_replace(regexp_replace(lower(d.text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS nrm
       FROM documents d JOIN kept k USING (doc_id)
     ),
-    uniq AS (
+    uniq AS MATERIALIZED (
       SELECT doc_id, quality FROM (
         SELECT *, ROW_NUMBER() OVER (PARTITION BY nrm ORDER BY doc_id) AS rn FROM surv
       ) WHERE rn = 1
     ),
-    cpairs AS (
+    cpairs AS MATERIALIZED (
       SELECT t.doc_id AS train_id, e.doc_id AS eval_id, COUNT(*) AS shared
       FROM sh t JOIN sh e ON t.shingle = e.shingle
       WHERE t.source <> 'src0' AND e.source = 'src0'
       GROUP BY 1, 2
     ),
-    contam AS (
+    contam AS MATERIALIZED (
       SELECT DISTINCT train_id AS doc_id FROM cpairs
       JOIN sizes ts ON train_id = ts.doc_id
       JOIN sizes es ON eval_id = es.doc_id
       WHERE CAST(shared AS DOUBLE) / (ts.n_sh + es.n_sh - shared) >= 0.5
     ),
-    clean AS (
+    clean AS MATERIALIZED (
       SELECT u.doc_id, u.quality FROM uniq u
       LEFT JOIN contam c USING (doc_id) WHERE c.doc_id IS NULL
     ),
-    sh2 AS (SELECT s.doc_id, s.shingle FROM sh s JOIN clean c USING (doc_id)),
-    prs AS (
+    sh2 AS MATERIALIZED (SELECT s.doc_id, s.shingle FROM sh s JOIN clean c USING (doc_id)),
+    prs AS MATERIALIZED (
       SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS shared
       FROM sh2 a JOIN sh2 b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
       GROUP BY 1, 2
     ),
-    nd AS (
+    nd AS MATERIALIZED (
       SELECT d1, d2 FROM prs
       JOIN sizes s1 ON d1 = s1.doc_id
       JOIN sizes s2 ON d2 = s2.doc_id
       WHERE CAST(shared AS DOUBLE) / (s1.n_sh + s2.n_sh - shared) >= 0.8
     ),
-    edges AS (SELECT d1 AS u, d2 AS v FROM nd UNION SELECT d2, d1 FROM nd),
-    walk(node, reach) AS (
+    edges AS MATERIALIZED (SELECT d1 AS u, d2 AS v FROM nd UNION SELECT d2, d1 FROM nd),
+    walk(node, reach) AS MATERIALIZED (
       SELECT u, u FROM (SELECT DISTINCT u FROM edges)
       UNION
       SELECT w.node, e.v FROM walk w JOIN edges e ON e.u = w.reach
     ),
-    labels AS (SELECT node AS doc_id, MIN(reach) AS comp FROM walk GROUP BY node),
-    winners AS (
+    labels AS MATERIALIZED (SELECT node AS doc_id, MIN(reach) AS comp FROM walk GROUP BY node),
+    winners AS MATERIALIZED (
       SELECT doc_id FROM (
         SELECT c.doc_id,
                ROW_NUMBER() OVER (
@@ -795,28 +798,28 @@ def corpus_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM clean c LEFT JOIN labels l USING (doc_id)
       ) WHERE rw = 1
     ),
-    dn AS (
+    dn AS MATERIALIZED (
       SELECT d.doc_id, d.source, {_TOKS} AS toks FROM documents d
       WHERE d.source = 'src0' OR d.doc_id IN (SELECT doc_id FROM winners)
     ),
-    f AS (
+    f AS MATERIALIZED (
       SELECT doc_id, source, unnest(toks) AS ng FROM dn
       UNION ALL
       SELECT doc_id, source,
              concat_ws(' ', toks[CAST(r.i AS INT)], toks[CAST(r.i AS INT)+1]) AS ng
       FROM dn JOIN range(1, 1000000) r(i) ON r.i <= len(toks) - 1
     ),
-    bk AS (
+    bk AS MATERIALIZED (
       SELECT doc_id, source,
              CAST(CONCAT('0x', SUBSTR(md5(ng), 1, 8)) AS BIGINT) % 1024 AS b
       FROM f
     ),
-    tc AS (SELECT b, COUNT(*) AS ct FROM bk WHERE source = 'src0' GROUP BY b),
-    rf AS (SELECT doc_id, b FROM bk WHERE source <> 'src0'),
-    rc AS (SELECT b, COUNT(*) AS cr FROM rf GROUP BY b),
-    ntc AS (SELECT COUNT(*) AS nt FROM bk WHERE source = 'src0'),
-    nrc AS (SELECT COUNT(*) AS nr FROM rf),
-    sc AS (
+    tc AS MATERIALIZED (SELECT b, COUNT(*) AS ct FROM bk WHERE source = 'src0' GROUP BY b),
+    rf AS MATERIALIZED (SELECT doc_id, b FROM bk WHERE source <> 'src0'),
+    rc AS MATERIALIZED (SELECT b, COUNT(*) AS cr FROM rf GROUP BY b),
+    ntc AS MATERIALIZED (SELECT COUNT(*) AS nt FROM bk WHERE source = 'src0'),
+    nrc AS MATERIALIZED (SELECT COUNT(*) AS nr FROM rf),
+    sc AS MATERIALIZED (
       SELECT rc.b,
              CAST(FLOOR((ln(CAST(COALESCE(tc.ct, 0) + 1 AS DOUBLE))
                        - ln(CAST(ntc.nt + 1024 AS DOUBLE))
@@ -824,24 +827,24 @@ def corpus_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                        + ln(CAST(nrc.nr + 1024 AS DOUBLE))) * 1000000.0) AS BIGINT) AS r_fp
       FROM rc LEFT JOIN tc USING (b) CROSS JOIN ntc CROSS JOIN nrc
     ),
-    pd AS (
+    pd AS MATERIALIZED (
       SELECT doc_id, SUM(c * r_fp) AS w_fp FROM (
         SELECT doc_id, b, COUNT(*) AS c FROM rf GROUP BY 1, 2
       ) dc JOIN sc USING (b) GROUP BY doc_id
     ),
-    dk AS (
+    dk AS MATERIALIZED (
       SELECT w.doc_id,
              CAST(COALESCE(pd.w_fp, 0) AS DOUBLE) / 1000000.0
                - ln(-ln({uniform_from_id_sql('w.doc_id')})) AS key
       FROM winners w LEFT JOIN pd USING (doc_id)
     ),
-    sel AS (
+    sel AS MATERIALIZED (
       SELECT doc_id FROM (
         SELECT doc_id, ROW_NUMBER() OVER (ORDER BY key DESC, doc_id ASC) AS rnk
         FROM dk
       ) WHERE rnk <= 100
     ),
-    g8 AS (
+    g8 AS MATERIALIZED (
       SELECT n.doc_id, CAST(r.i - 1 AS BIGINT) AS pos,
              concat_ws(' ', n.toks[CAST(r.i AS INT)], n.toks[CAST(r.i AS INT)+1],
                             n.toks[CAST(r.i AS INT)+2], n.toks[CAST(r.i AS INT)+3],
@@ -850,14 +853,14 @@ def corpus_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM norm n JOIN sel USING (doc_id)
       JOIN range(1, 1000000) r(i) ON r.i <= len(n.toks) - 7
     ),
-    dup8 AS (
+    dup8 AS MATERIALIZED (
       SELECT doc_id, pos, pos + 7 AS e FROM (
         SELECT *, MIN(doc_id) OVER (PARTITION BY ngram) AS mn,
                   MAX(doc_id) OVER (PARTITION BY ngram) AS mx
         FROM g8
       ) WHERE mn <> mx
     ),
-    i8 AS (
+    i8 AS MATERIALIZED (
       SELECT doc_id, pos, e,
              CASE WHEN pos > COALESCE(MAX(e) OVER (
                PARTITION BY doc_id ORDER BY pos
@@ -865,23 +868,23 @@ def corpus_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
              THEN 1 ELSE 0 END AS nw
       FROM dup8
     ),
-    i82 AS (
+    i82 AS MATERIALIZED (
       SELECT doc_id, pos, e,
              SUM(nw) OVER (PARTITION BY doc_id ORDER BY pos
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
       FROM i8
     ),
-    cov AS (
+    cov AS MATERIALIZED (
       SELECT doc_id, CAST(SUM(l) AS BIGINT) AS n_covered FROM (
         SELECT doc_id, island, MAX(e) - MIN(pos) + 1 AS l FROM i82 GROUP BY 1, 2
       ) GROUP BY 1
     ),
-    ct AS (
+    ct AS MATERIALIZED (
       SELECT s.doc_id,
              CAST(q.n_tokens - COALESCE(c.n_covered, 0) AS BIGINT) AS n_tokens_clean
       FROM sel s JOIN q ON s.doc_id = q.doc_id LEFT JOIN cov c ON s.doc_id = c.doc_id
     ),
-    shx AS (
+    shx AS MATERIALIZED (
       SELECT doc_id, n_tokens_clean, {uniform_from_id_sql('doc_id')} AS u FROM ct
     )
     SELECT doc_id,

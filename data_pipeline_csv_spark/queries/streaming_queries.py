@@ -6,6 +6,12 @@ to exhaustion, and returns the final result — so the driver's oracle
 literally checks that incremental streaming execution converges to the
 batch-SQL answer on the same data. n_users_approx (HLL state) is the
 one column excluded: approximate by construction.
+
+No query caches its result. A returned DataFrame that reads drained
+state (a generation snapshot, a layout, the near-dup pairs) plans over
+files in an ``artifacts.scratch_dir``, which lives until interpreter
+exit, so the caller's later collect still finds them; the staged feed
+is deleted on return.
 """
 
 from __future__ import annotations
@@ -124,7 +130,6 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_events").alias("total_events"),
             )
         )
-        out.persist().count()
         return out
     finally:
         shutil.rmtree(staged, ignore_errors=True)
@@ -191,7 +196,6 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_clicks"),
             F.max("click_ts").alias("last_click_ts"),
         )
-        out.persist().count()
         return out
     finally:
         shutil.rmtree(staged, ignore_errors=True)
@@ -258,7 +262,7 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.sinks import run_incremental_mv
 
     staged = tempfile.mkdtemp(prefix="sg_stream_")
-    state = tempfile.mkdtemp(prefix="sg_mv_")
+    state = scratch_dir("mv_")
     try:
         stage_events_dir(spark, sf_dir, staged, n_files=4)
         stream = read_events_stream(spark, staged).select(
@@ -275,11 +279,9 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = finalize_state(raw, sums={"sum_value": VALUE_SCALE}).select(
             "event_type", "day", F.col("n_rows").cast("bigint").alias("n_events"), "sum_value"
         )
-        out.persist().count()
         return out
     finally:
         shutil.rmtree(staged, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 @query(
@@ -327,7 +329,7 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.sources import read_events_stream
 
     staged = tempfile.mkdtemp(prefix="sg_stream_")
-    state = tempfile.mkdtemp(prefix="sg_cdc_")
+    state = scratch_dir("cdc_")
     try:
         stage_changes_dir(spark, sf_dir, staged, n_files=3)
         stream = read_events_stream(spark, staged)  # generic staged reader
@@ -342,11 +344,9 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("seq").cast("bigint").alias("version"),
             F.col("n_versions").cast("bigint").alias("n_versions"),
         )
-        out.persist().count()
         return out
     finally:
         shutil.rmtree(staged, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 @query(
@@ -378,7 +378,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d, w, k = 4, 1024, 20
     staged = tempfile.mkdtemp(prefix="sg_stream_")
-    state = tempfile.mkdtemp(prefix="sg_cms_")
+    state = scratch_dir("cms_")
     try:
         stage_docs_dir(spark, sf_dir, staged, n_files=4)
         arr = F.array(*[_bucket(F.col("t"), j, w) for j in range(d)])
@@ -399,11 +399,9 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = balanced(spark, load_table(spark, sf_dir, "documents"))
         tok = docs.select(F.explode(tokens("text")).alias("t"))
         out = cms_estimate_topk(sketch, tok, "t", k, d, w)
-        out.persist().count()
         return out
     finally:
         shutil.rmtree(staged, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 @query(
@@ -429,7 +427,7 @@ def streaming_dedup_neardup(
     from ..streaming import read_docs_stream, run_streaming_neardup, stage_docs_dir
 
     staged = tempfile.mkdtemp(prefix="sg_stream_")
-    state = tempfile.mkdtemp(prefix="sg_nd_")
+    state = scratch_dir("nd_")
     try:
         stage_docs_dir(spark, sf_dir, staged, n_files=4)
         stream = read_docs_stream(spark, staged)
@@ -447,11 +445,9 @@ def streaming_dedup_neardup(
             index_table="sg_neardup_stream_idx_q",
             phase_timings=phase_timings,
         )
-        out.persist().count()
         return out
     finally:
         shutil.rmtree(staged, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 
@@ -495,7 +491,7 @@ def streaming_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import read_events_stream, run_streaming_kmv, stage_events_dir
 
     staged = tempfile.mkdtemp(prefix="sg_stream_")
-    state = tempfile.mkdtemp(prefix="sg_kmv_")
+    state = scratch_dir("kmv_")
     try:
         stage_events_dir(spark, sf_dir, staged, n_files=4)
         stream = read_events_stream(spark, staged).select("user_id")
@@ -513,11 +509,9 @@ def streaming_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(float((_KMV_K - 1) * (1 << 60))) / F.col("_th").cast("double"))
             .alias("est_distinct"),
         )
-        out.persist().count()
         return out
     finally:
         shutil.rmtree(staged, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 @query(
@@ -558,10 +552,6 @@ def streaming_stats_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import run_streaming_stats_ingest
 
     staged = tempfile.mkdtemp(prefix="sg_stream_")
-    # the returned DataFrame plans over the layout's parquet files: with
-    # the layout deleted on return, a persisted block evicted before the
-    # harness collects would recompute against a dead path (r11 ADVICE)
-    # — so the layout lives until interpreter exit
     layout = scratch_dir("skipstream_")
     try:
         li = load_table(spark, sf_dir, "lineitem").select(
@@ -586,7 +576,6 @@ def streaming_stats_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "l_orderkey", "l_linenumber", "l_shipdate", "l_extendedprice", "l_quantity"
         )
-        out.persist().count()
         return out
     finally:
         shutil.rmtree(staged, ignore_errors=True)
@@ -646,7 +635,7 @@ def streaming_cdc_stats_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
     staged = tempfile.mkdtemp(prefix="sg_stream_")
-    layout = scratch_dir("cdcmerge_")  # outlives the call, as above
+    layout = scratch_dir("cdcmerge_")
     try:
         base = load_table(spark, sf_dir, "orders").select(*cols).limit(0)
         write_stats_layout(base, layout, ["o_orderkey"], n_files=1)
@@ -659,7 +648,6 @@ def streaming_cdc_stats_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = stats_pruned_scan(
             spark, layout, {"o_orderkey": (None, None)}
         ).select(*cols)
-        out.persist().count()
         return out
     finally:
         shutil.rmtree(staged, ignore_errors=True)

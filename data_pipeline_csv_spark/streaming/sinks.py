@@ -1,7 +1,11 @@
-"""Streaming sinks: foreachBatch parquet upsert + memory (tests)."""
+"""Streaming sinks: foreachBatch writers that fold each epoch of a
+bounded stream into durable state (generation-snapshot MVs, CDC
+snapshots and KMV sketches, the near-dup LSH state, the stats and IVF
+layouts), the drains that run them, and the memory sink for tests."""
 
 from __future__ import annotations
 
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +35,21 @@ def foreach_batch_parquet(
     )
 
 
+def _drain(stream_df: DataFrame, writer, checkpoint: str) -> None:
+    """Run ``writer`` as the foreachBatch sink of a bounded stream
+    until every available input is processed, then stop the query."""
+    q = (
+        stream_df.writeStream.foreachBatch(writer)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def run_to_memory(
     stream_df: DataFrame,
     spark: SparkSession,
@@ -58,17 +77,18 @@ def run_to_memory(
     return spark.table(name)
 
 
-# Generation-snapshot commit protocol, shared by state_merge_writer and
-# cdc_upsert_writer. Design points (each closes a real crash window):
+# Generation-snapshot commit protocol, shared by every writer built on
+# _snapshot_writer (state_merge_writer, cdc_upsert_writer,
+# kmv_state_writer). Design points (each closes a real crash window):
 #
 # - The committed epoch is ENCODED IN the `current` symlink's target
 #   name (gen-{epoch}-{attempt}) and derived at read time, so the
-#   repoint IS the commit record — one atomic os.replace. The previous
-#   protocol wrote a separate last_epoch marker AFTER the repoint; a
-#   crash in between left committed state with an unrecorded epoch, and
-#   the replayed epoch would then re-merge into (and overwrite-write)
-#   the very generation dir `current` resolves to, deleting the
-#   eagerly-listed input files mid-job and double-counting n_versions.
+#   repoint IS the commit record — one atomic os.replace. A separate
+#   epoch marker written after the repoint would leave a crash window
+#   with committed state and an unrecorded epoch; the replayed epoch
+#   would then re-merge into (and overwrite-write) the very generation
+#   dir `current` resolves to, deleting the eagerly-listed input files
+#   mid-job and double-counting n_versions.
 # - Generation dirs are PER-ATTEMPT unique (gen-{epoch}-{uuid8}), so no
 #   retry can ever overwrite a dir any reader resolves to.
 # - After each commit, generations other than the new current and its
@@ -76,18 +96,7 @@ def run_to_memory(
 #   one commit for the crash window: a reader that resolved `current`
 #   just before the repoint may still be listing its files). On-disk
 #   state is therefore <= 2 snapshots, not linear in epoch count.
-#   Legacy-format dirs (bare gen-{epoch}) and the retired last_epoch
-#   marker are swept by the same pass.
-_GEN_DIR_RE = None  # compiled lazily (module imports stay cheap)
-
-
-def _gen_re():
-    global _GEN_DIR_RE
-    if _GEN_DIR_RE is None:
-        import re
-
-        _GEN_DIR_RE = re.compile(r"^gen-(\d+)(-[0-9a-f]{8})?$")
-    return _GEN_DIR_RE
+_GEN_DIR_RE = re.compile(r"^gen-(\d+)-[0-9a-f]{8}$")
 
 
 def _committed_epoch(cur: str) -> int:
@@ -97,7 +106,7 @@ def _committed_epoch(cur: str) -> int:
 
     if not os.path.lexists(cur):
         return -1
-    m = _gen_re().match(os.path.basename(os.readlink(cur)))
+    m = _GEN_DIR_RE.match(os.path.basename(os.readlink(cur)))
     return int(m.group(1)) if m else -1
 
 
@@ -107,7 +116,6 @@ def _commit_generation(state_root: str, cur: str, df: DataFrame, epoch_id: int) 
     (keep the new current + its immediate predecessor)."""
     import os
     import shutil
-    import uuid
 
     prev = os.readlink(cur) if os.path.lexists(cur) else None
     gen = os.path.join(state_root, f"gen-{epoch_id}-{uuid.uuid4().hex[:8]}")
@@ -122,11 +130,26 @@ def _commit_generation(state_root: str, cur: str, df: DataFrame, epoch_id: int) 
         keep.add(os.path.abspath(os.path.join(state_root, prev)))
     for d in os.listdir(state_root):
         full = os.path.abspath(os.path.join(state_root, d))
-        if _gen_re().match(d) and full not in keep:
+        if _GEN_DIR_RE.match(d) and full not in keep:
             shutil.rmtree(full, ignore_errors=True)
-    legacy_marker = os.path.join(state_root, "last_epoch")
-    if os.path.exists(legacy_marker):
-        os.remove(legacy_marker)
+
+
+def _snapshot_writer(state_root: str, fold):
+    """foreachBatch writer committing ``fold(base, batch_df)`` as each
+    epoch's generation snapshot, where ``base`` is the committed
+    snapshot (None before the first commit). A replayed epoch — one
+    the `current` target already records — returns without folding."""
+    import os
+
+    cur = os.path.join(state_root, "current")
+
+    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        if _committed_epoch(cur) >= epoch_id:
+            return  # epoch replay: already folded
+        base = batch_df.sparkSession.read.parquet(cur) if os.path.lexists(cur) else None
+        _commit_generation(state_root, cur, fold(base, batch_df), epoch_id)
+
+    return write_epoch
 
 
 def state_merge_writer(state_root: str, keys, sums, mins=(), maxs=()):
@@ -150,25 +173,15 @@ def state_merge_writer(state_root: str, keys, sums, mins=(), maxs=()):
     (Delta/Iceberg MERGE); this is the same commit protocol on bare
     parquet.
     """
-    import os
-
     from ..operators.incremental import merge_agg_state, partial_agg_state
 
-    cur = os.path.join(state_root, "current")
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if _committed_epoch(cur) >= epoch_id:
-            return  # epoch replay: already merged
-        spark = batch_df.sparkSession
+    def fold(base, batch_df: DataFrame) -> DataFrame:
         delta = partial_agg_state(batch_df, keys, sums, dict(mins) or None, dict(maxs) or None)
-        if os.path.lexists(cur):
-            base = spark.read.parquet(cur)
-            merged = merge_agg_state([base, delta], keys, mins=list(mins), maxs=list(maxs))
-        else:
-            merged = delta
-        _commit_generation(state_root, cur, merged, epoch_id)
+        if base is None:
+            return delta
+        return merge_agg_state([base, delta], keys, mins=list(mins), maxs=list(maxs))
 
-    return write_epoch
+    return _snapshot_writer(state_root, fold)
 
 
 def cdc_upsert_writer(
@@ -200,36 +213,26 @@ def cdc_upsert_writer(
     State size is |keys ever seen| rows — bounded by key cardinality,
     no watermark needed.
     """
-    import os
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
 
-    cur = os.path.join(state_root, "current")
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if _committed_epoch(cur) >= epoch_id:
-            return  # epoch replay: already merged
-        spark = batch_df.sparkSession
-        from pyspark.sql import Window as W
-        from pyspark.sql import functions as F
-
-        delta = batch_df.withColumn("n_versions", F.lit(1).cast("bigint"))
-        if os.path.lexists(cur):
-            un = spark.read.parquet(cur).unionByName(delta)
-        else:
-            un = delta
+    def fold(base, batch_df: DataFrame) -> DataFrame:
+        un = batch_df.withColumn("n_versions", F.lit(1).cast("bigint"))
+        if base is not None:
+            un = base.unionByName(un)
         w = W.partitionBy(*keys).orderBy(
             F.col(seq_col).desc(), F.col(op_col).desc()
         )
         wk = W.partitionBy(*keys)
-        merged = (
+        return (
             un.withColumn("_rn", F.row_number().over(w))
             .withColumn("_nv", F.sum("n_versions").over(wk))
             .filter(F.col("_rn") == 1)
             .drop("_rn", "n_versions")
             .withColumnRenamed("_nv", "n_versions")
         )
-        _commit_generation(state_root, cur, merged, epoch_id)
 
-    return write_epoch
+    return _snapshot_writer(state_root, fold)
 
 
 def run_streaming_cdc_merge(
@@ -247,21 +250,14 @@ def run_streaming_cdc_merge(
     writer's resurrection note)."""
     import os
 
-    os.makedirs(state_root, exist_ok=True)
-    q = (
-        stream_changes.writeStream.foreachBatch(
-            cdc_upsert_writer(state_root, keys, seq_col, op_col, delete_op)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     from pyspark.sql import functions as F
 
+    os.makedirs(state_root, exist_ok=True)
+    _drain(
+        stream_changes,
+        cdc_upsert_writer(state_root, keys, seq_col, op_col, delete_op),
+        checkpoint,
+    )
     return spark.read.parquet(os.path.join(state_root, "current")).filter(
         F.col(op_col) != delete_op
     )
@@ -282,18 +278,7 @@ def run_incremental_mv(
     import os
 
     os.makedirs(state_root, exist_ok=True)
-    q = (
-        stream_df.writeStream.foreachBatch(
-            state_merge_writer(state_root, keys, sums, mins, maxs)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream_df, state_merge_writer(state_root, keys, sums, mins, maxs), checkpoint)
     return spark.read.parquet(os.path.join(state_root, "current"))
 
 
@@ -313,25 +298,17 @@ def kmv_state_writer(state_root: str, key_col: str, k: int):
     commit/replay semantics are exactly :func:`_commit_generation`'s
     (epoch id atomic with the symlink repoint, per-attempt dirs, GC).
     """
-    import os
-
     from pyspark.sql import functions as F
 
     from ..operators.kmv import _hash60
 
-    cur = os.path.join(state_root, "current")
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if _committed_epoch(cur) >= epoch_id:
-            return  # epoch replay: already folded
-        spark = batch_df.sparkSession
+    def fold(base, batch_df: DataFrame) -> DataFrame:
         delta = batch_df.select(_hash60(F.col(key_col)).alias("h"))
-        if os.path.lexists(cur):
-            delta = spark.read.parquet(cur).unionByName(delta)
-        merged = delta.distinct().orderBy("h").limit(k)
-        _commit_generation(state_root, cur, merged, epoch_id)
+        if base is not None:
+            delta = base.unionByName(delta)
+        return delta.distinct().orderBy("h").limit(k)
 
-    return write_epoch
+    return _snapshot_writer(state_root, fold)
 
 
 def run_streaming_kmv(
@@ -347,16 +324,7 @@ def run_streaming_kmv(
     import os
 
     os.makedirs(state_root, exist_ok=True)
-    q = (
-        stream_df.writeStream.foreachBatch(kmv_state_writer(state_root, key_col, k))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream_df, kmv_state_writer(state_root, key_col, k), checkpoint)
     return spark.read.parquet(os.path.join(state_root, "current"))
 
 
@@ -367,8 +335,6 @@ def _neardup_paths(state_root: str) -> dict:
         "idx": os.path.join(state_root, "lsh_index"),
         "docs": os.path.join(state_root, "seen_docs"),
         "pairs": os.path.join(state_root, "pairs"),
-        "cidx": os.path.join(state_root, "compacted_index"),
-        "cdocs": os.path.join(state_root, "compacted_docs"),
         "cmark": os.path.join(state_root, "compacted_index_table"),
     }
 
@@ -380,32 +346,15 @@ def _read_neardup_marker(cmark_path: str):
     ``generations`` is oldest-first; each is a dict with ``table``
     (bucketed index table name), ``docs`` (parquet dir of that
     generation's documents) and ``rows`` (doc count, used by the
-    geometric merge policy; None for migrated legacy generations —
-    counted lazily on the next compaction).
-
-    Three on-disk formats are readable, so a state_root written by any
-    prior version of this module keeps working after an upgrade:
-    v2 JSON (current, multi-generation), the 3-line
-    ``table\\ndocs\\nfolded_upto`` single-generation format, and the
-    oldest 1-line table-name-only format (docs at the fixed
-    ``compacted_docs`` path, no watermark — its tail dirs were always
-    deleted synchronously, so ``folded_upto=-1`` cannot double-read)."""
+    geometric merge policy)."""
     import json
     import os
 
     if not os.path.exists(cmark_path):
         return [], -1
     with open(cmark_path) as fh:
-        raw = fh.read().strip()
-    if raw.startswith("{"):
-        doc = json.loads(raw)
-        return doc["generations"], int(doc["folded_upto"])
-    lines = raw.splitlines()
-    if len(lines) == 1:  # legacy v0: table name only
-        cdocs = os.path.join(os.path.dirname(cmark_path), "compacted_docs")
-        return [{"table": lines[0], "docs": cdocs, "rows": None}], -1
-    table, docs_dir, upto = lines
-    return [{"table": table, "docs": docs_dir, "rows": None}], int(upto)
+        doc = json.load(fh)
+    return doc["generations"], int(doc["folded_upto"])
 
 
 def _write_neardup_marker(cmark_path: str, generations: list, folded_upto: int) -> None:
@@ -417,59 +366,6 @@ def _write_neardup_marker(cmark_path: str, generations: list, folded_upto: int) 
     with open(tmp, "w") as fh:
         fh.write(json.dumps({"v": 2, "folded_upto": folded_upto, "generations": generations}))
     os.replace(tmp, cmark_path)
-
-
-def _docs_with_shset(df: DataFrame) -> DataFrame:
-    """Normalize a docs-state read to ``(doc_id, text, shset)``.
-
-    r15 state format: each doc's DISTINCT shingle array is stored next
-    to its text at ingest (computed once, by the same expression the
-    exact verification evaluates — operators/dedup.with_shingle_set),
-    so no later epoch or compaction ever re-tokenizes a history doc.
-    Legacy text-only state rows (pre-r15) fall back to computing the
-    column on read — the migration cost disappears at the next
-    compaction, which persists the computed sets."""
-    from ..operators.dedup import with_shingle_set
-
-    if "shset" in df.columns:
-        return df.select("doc_id", "text", "shset")
-    return with_shingle_set(df.select("doc_id", "text"))
-
-
-def _has_data_files(path: str) -> bool:
-    """True when ``path`` holds a file Spark would read (its names
-    starting with ``_`` or ``.`` are metadata, not data)."""
-    import os
-
-    return any(
-        not f.startswith(("_", "."))
-        for _root, _dirs, files in os.walk(path)
-        for f in files
-    )
-
-
-def _read_tail_docs(spark, docs_root: str, batch_dirs: list, cond) -> DataFrame:
-    """The visible batch-keyed docs tail, normalized to include
-    ``shset``. A tail written across a version upgrade can MIX
-    text-only and shingled batch dirs inside one parquet read (whose
-    inferred schema would come from an arbitrary footer); the per-dir
-    schema probe below (one footer read per visible dir, tail length
-    is bounded by compact_every) detects that and falls back to
-    recomputing the whole tail's shingle sets — correctness-only
-    migration path; an all-new tail takes the zero-cost branch. A dir
-    with no data files (an orphaned ``batch=`` dir) has no schema to
-    probe and contributes no rows, so the probe skips it."""
-    import os
-
-    df = spark.read.parquet(docs_root).where(cond)
-    paths = [os.path.join(docs_root, d) for d in batch_dirs]
-    if "shset" in df.columns and all(
-        "shset" in spark.read.parquet(p).columns for p in paths if _has_data_files(p)
-    ):
-        return df.select("doc_id", "text", "shset")
-    from ..operators.dedup import with_shingle_set
-
-    return with_shingle_set(df.select("doc_id", "text"))
 
 
 def _neardup_state(spark, state_root: str, epoch_id: int):
@@ -507,17 +403,19 @@ def _neardup_state(spark, state_root: str, epoch_id: int):
         idx_parts.append(
             spark.table(g["table"]).select("doc_id", "band_id", "band_hash")
         )
-        docs_parts.append(_docs_with_shset(spark.read.parquet(g["docs"])))
-    visible_dirs = [
-        d
-        for d in (os.listdir(p["docs"]) if os.path.isdir(p["docs"]) else [])
-        if d.startswith("batch=")
+        docs_parts.append(
+            spark.read.parquet(g["docs"]).select("doc_id", "text", "shset")
+        )
+    if any(
+        d.startswith("batch=")
         and d != f"batch={epoch_id}"
         and int(d.split("=", 1)[1]) > folded_upto
-    ]
-    if visible_dirs:
+        for d in (os.listdir(p["docs"]) if os.path.isdir(p["docs"]) else [])
+    ):
         cond = (F.col("batch") != epoch_id) & (F.col("batch") > folded_upto)
-        docs_parts.append(_read_tail_docs(spark, p["docs"], visible_dirs, cond))
+        docs_parts.append(
+            spark.read.parquet(p["docs"]).where(cond).select("doc_id", "text", "shset")
+        )
         idx_parts.append(
             spark.read.parquet(p["idx"])
             .where(cond)
@@ -583,7 +481,6 @@ def neardup_epoch_writer(
     taken from an uninstrumented run and the breakdown from a
     separate instrumented one.
     """
-    import os
     import time as _time
 
     from pyspark.storagelevel import StorageLevel
@@ -722,8 +619,7 @@ def neardup_epoch_writer(
                 ),
                 # docs state = (doc_id, text, shset): the shingle sets
                 # persist with the docs, so later epochs verify against
-                # this batch without re-tokenizing it (r15 state format;
-                # readers fall back to computing shset for legacy dirs)
+                # this batch without re-tokenizing it
                 lambda: sized(batch_sh).write.mode("overwrite").parquet(
                     f"{p['docs']}/batch={epoch_id}"
                 ),
@@ -791,13 +687,9 @@ def compact_neardup_state(
     swap leaves folded tail dirs and retired generations on disk that
     readers already ignore via the marker, so cleanup is resumable. A
     replayed epoch that re-triggers its compaction sees an empty
-    visible tail and skips. Markers written by older versions of this
-    module (single-generation, see :func:`_read_neardup_marker`) read
-    as one legacy generation and their fixed-path docs/index dirs are
-    swept here once that generation merges away.
+    visible tail and skips.
     """
     import os
-    import re
     import shutil
 
     from pyspark.sql import functions as F
@@ -836,15 +728,9 @@ def compact_neardup_state(
         # skip entirely, never drop and rebuild committed generations.
         return
 
-    def _rows(g: dict) -> int:
-        # legacy generations carry rows=None; count once, lazily
-        if g["rows"] is None:
-            g["rows"] = parquet_num_rows(g["docs"])
-        return g["rows"]
-
     def _next_names() -> tuple[str, str]:
         # smallest unused generation id: never collides with live
-        # generations (any marker version) or crashed-run orphans
+        # generations or crashed-run orphans
         s = 0
         while True:
             t = f"{index_table}_g{s}"
@@ -878,17 +764,13 @@ def compact_neardup_state(
     #    by the completed-epoch id list, never an open-ended watermark
     #    comparison (see tail_ids above)
     cond = F.col("batch").isin(tail_ids)
-    # docs carry (doc_id, text, shset) through every fold and merge —
-    # legacy text-only rows get their shingle sets computed HERE, once,
-    # so the migration cost is paid at compaction instead of on every
-    # later epoch's verification read (_docs_with_shset/_read_tail_docs)
     gens.append(
         _save(
             spark.read.parquet(p["idx"]).where(cond).select(
                 "doc_id", "band_id", "band_hash"
             ),
-            _read_tail_docs(
-                spark, p["docs"], [f"batch={b}" for b in tail_ids], cond
+            spark.read.parquet(p["docs"]).where(cond).select(
+                "doc_id", "text", "shset"
             ),
             rows=None,
         )
@@ -896,7 +778,7 @@ def compact_neardup_state(
     # 2. geometric merge: youngest absorbs upward while it has grown to
     #    >= merge_ratio of its elder — each surviving generation is
     #    >= 1/merge_ratio x its junior, so |gens| is logarithmic
-    while len(gens) >= 2 and _rows(gens[-1]) >= merge_ratio * _rows(gens[-2]):
+    while len(gens) >= 2 and gens[-1]["rows"] >= merge_ratio * gens[-2]["rows"]:
         young, elder = gens.pop(), gens.pop()
         merged = _save(
             spark.table(elder["table"])
@@ -904,8 +786,10 @@ def compact_neardup_state(
             .unionByName(
                 spark.table(young["table"]).select("doc_id", "band_id", "band_hash")
             ),
-            _docs_with_shset(spark.read.parquet(elder["docs"])).unionByName(
-                _docs_with_shset(spark.read.parquet(young["docs"]))
+            spark.read.parquet(elder["docs"])
+            .select("doc_id", "text", "shset")
+            .unionByName(
+                spark.read.parquet(young["docs"]).select("doc_id", "text", "shset")
             ),
             rows=elder["rows"] + young["rows"],
         )
@@ -915,8 +799,7 @@ def compact_neardup_state(
     #    ignore tail batches <= new_upto and retired generations
     _write_neardup_marker(p["cmark"], gens, new_upto)
     # 4. cleanup, all resumable garbage collection: folded tail dirs,
-    #    retired/orphaned generations (incl. legacy fixed-path dirs and
-    #    crashed-run leftovers)
+    #    retired/orphaned generations (and crashed-run leftovers)
     live_tables = {g["table"].lower() for g in gens}
     live_docs = {os.path.abspath(g["docs"]) for g in gens}
     for root in (p["idx"], p["docs"]):
@@ -928,8 +811,6 @@ def compact_neardup_state(
         full = os.path.abspath(os.path.join(state_root, d))
         if d.startswith("compacted_docs") and full not in live_docs:
             shutil.rmtree(full, ignore_errors=True)
-    if os.path.abspath(p["cidx"]) not in live_docs:
-        shutil.rmtree(p["cidx"], ignore_errors=True)  # legacy v0 index dir
     retired = {
         g["table"].lower() for g in old_gens if g["table"].lower() not in live_tables
     }
@@ -943,7 +824,6 @@ def compact_neardup_state(
             orphan.fullmatch(t.name) and t.name not in live_tables
         ):
             clear_managed_table(spark, t.name)
-    shutil.rmtree(os.path.join(state_root, "_compact_staging"), ignore_errors=True)
 
 
 def run_streaming_neardup(
@@ -1030,16 +910,7 @@ def run_streaming_stats_ingest(
     """Drain a bounded stream through :func:`stats_ingest_writer`
     (the layout at ``layout_path`` must already exist — the base
     corpus a continuous feed appends to)."""
-    q = (
-        stream_df.writeStream.foreachBatch(stats_ingest_writer(layout_path))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream_df, stats_ingest_writer(layout_path), checkpoint)
 
 
 def ivf_ingest_writer(layout_path: str, reports: list | None = None):
@@ -1085,18 +956,7 @@ def run_streaming_ivf_ingest(
     """Drain a bounded vector stream through :func:`ivf_ingest_writer`
     (the index at ``layout_path`` must already exist — the built
     corpus a continuous embedding feed appends to)."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            ivf_ingest_writer(layout_path, reports=reports)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream_df, ivf_ingest_writer(layout_path, reports=reports), checkpoint)
 
 
 def cdc_stats_merge_writer(
@@ -1182,15 +1042,8 @@ def run_streaming_cdc_stats_merge(
     :func:`cdc_stats_merge_writer` (the layout at ``layout_path`` must
     already exist — the base snapshot a continuous change feed merges
     into)."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            cdc_stats_merge_writer(spark, layout_path, key_col, layout_cols)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
+    _drain(
+        stream_df,
+        cdc_stats_merge_writer(spark, layout_path, key_col, layout_cols),
+        checkpoint,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()

@@ -1640,6 +1640,38 @@ def test_footer_manifest_rows_equal_the_aggregate(spark, tmp_path):
         assert from_footers(exact + [c]) == aggregate(exact + [c])
 
 
+def test_manifest_part_is_no_larger_than_a_spark_part(spark, sf_dir, tmp_path):
+    """A 4-file manifest part written on the driver keeps min/max
+    statistics for every column but ``file`` (whose long URIs would
+    otherwise be stored twice more), so it is no larger than the same
+    rows written by Spark's one-file part writer."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from data_pipeline_csv_spark.operators.layout import write_stats_layout
+    from data_pipeline_csv_spark.sources.tables import load_table
+
+    lay = str(tmp_path / "lay")
+    orders = load_table(spark, sf_dir, "orders")
+    write_stats_layout(orders, lay, ["o_orderkey"], n_files=4)
+    [part] = glob.glob(os.path.join(lay, "_manifests", "*.parquet"))
+    meta = pq.read_metadata(part)
+    assert meta.num_rows == 4
+    stats = {
+        meta.schema.column(i).name: meta.row_group(0).column(i).is_stats_set
+        for i in range(meta.num_columns)
+    }
+    assert stats == {
+        "file": False, "n_rows": True, "min_o_orderkey": True, "max_o_orderkey": True
+    }
+    sp = str(tmp_path / "spark_part")
+    spark.read.parquet(part).coalesce(1).write.parquet(sp)
+    [spark_part] = glob.glob(os.path.join(sp, "part-*.parquet"))
+    assert os.path.getsize(part) <= os.path.getsize(spark_part)
+
+
 def test_stats_delete_of_whole_files_publishes_no_file(spark, tmp_path):
     """A stats_delete that removes every row of the files it hits
     counts zero kept rows inside its write job and publishes nothing:

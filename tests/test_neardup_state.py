@@ -276,91 +276,6 @@ def test_tiered_compaction_rewrites_only_tail(spark, sf_dir, tmp_path):
                 clear_managed_table(spark, t.name)
 
 
-def test_legacy_three_line_marker_migrates(spark, sf_dir, tmp_path):
-    """A state_root committed by the previous (single-generation,
-    3-line marker) version of this module must keep working: the
-    marker reads as one legacy generation (rows unknown -> counted
-    lazily), later epochs probe it, and the next compaction folds new
-    tail against it under the geometric policy."""
-    from data_pipeline_csv_spark.streaming.sinks import _read_neardup_marker
-
-    docs = load_table(spark, sf_dir, "documents")
-    batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    state = str(tmp_path / "state")
-    mark = os.path.join(state, "compacted_index_table")
-    w = neardup_epoch_writer(spark, state, threshold=0.8)
-    try:
-        w(batches[0], 0)
-        w(batches[1], 1)
-        compact_neardup_state(spark, state, "t_nd_idx_legacy3_test")
-        gens, upto = _read_neardup_marker(mark)
-        # rewrite the marker in the legacy 3-line format
-        with open(mark, "w") as fh:
-            fh.write(f"{gens[0]['table']}\n{gens[0]['docs']}\n{upto}\n")
-        gens2, upto2 = _read_neardup_marker(mark)
-        assert upto2 == upto and gens2[0]["rows"] is None
-        assert gens2[0]["table"] == gens[0]["table"]
-
-        w(batches[2], 2)  # probes the legacy generation
-        compact_neardup_state(spark, state, "t_nd_idx_legacy3_test")
-        gens3, upto3 = _read_neardup_marker(mark)
-        assert upto3 == 2
-        assert sum(g["rows"] for g in gens3) == docs.count()
-        assert _pairs(spark, state) == _oneshot(spark, sf_dir)
-    finally:
-        from data_pipeline_csv_spark.engine import clear_managed_table
-
-        for t in spark.catalog.listTables():
-            if t.name.startswith("t_nd_idx_legacy3_test"):
-                clear_managed_table(spark, t.name)
-
-
-def test_legacy_one_line_marker_migrates_and_gc(spark, sf_dir, tmp_path):
-    """The oldest marker format (one line: table name; docs at the
-    fixed compacted_docs path) must read as a legacy generation, and
-    once that generation merges away the fixed-path dir is swept by
-    compaction GC."""
-    import shutil
-
-    from data_pipeline_csv_spark.streaming.sinks import _read_neardup_marker
-
-    docs = load_table(spark, sf_dir, "documents")
-    batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    state = str(tmp_path / "state")
-    mark = os.path.join(state, "compacted_index_table")
-    w = neardup_epoch_writer(spark, state, threshold=0.8)
-    try:
-        w(batches[0], 0)
-        w(batches[1], 1)
-        compact_neardup_state(spark, state, "t_nd_idx_legacy1_test")
-        gens, _ = _read_neardup_marker(mark)
-        legacy_docs = os.path.join(state, "compacted_docs")
-        shutil.move(gens[0]["docs"], legacy_docs)
-        with open(mark, "w") as fh:
-            fh.write(gens[0]["table"])
-        gens2, upto2 = _read_neardup_marker(mark)
-        assert upto2 == -1 and gens2[0]["docs"] == legacy_docs
-
-        w(batches[2], 2)  # probes the legacy generation
-        # 1/3 >= 0.45 * 2/3 -> the tail fold merges with the legacy
-        # generation, which retires it; GC must sweep the fixed path
-        compact_neardup_state(
-            spark, state, "t_nd_idx_legacy1_test", merge_ratio=0.45
-        )
-        gens3, upto3 = _read_neardup_marker(mark)
-        assert upto3 == 2 and len(gens3) == 1
-        assert not os.path.exists(legacy_docs)
-        assert not spark.catalog.tableExists(gens2[0]["table"])
-        assert spark.read.parquet(gens3[0]["docs"]).count() == docs.count()
-        assert _pairs(spark, state) == _oneshot(spark, sf_dir)
-    finally:
-        from data_pipeline_csv_spark.engine import clear_managed_table
-
-        for t in spark.catalog.listTables():
-            if t.name.startswith("t_nd_idx_legacy1_test"):
-                clear_managed_table(spark, t.name)
-
-
 def test_empty_nth_batch_still_triggers_compaction(spark, sf_dir, tmp_path):
     """An EMPTY Nth micro-batch (sparse feed) must still fire the
     in-stream compaction — otherwise the documented 'tail never

@@ -14,20 +14,6 @@ from data_pipeline_csv_spark.testing.oracle import (
     smoke_rows_only,
 )
 
-# The heaviest oracle replay (corpus_e2e_prep's DuckDB-side recursive
-# CTE chain: ~257 s at sf0.001) is marked slow so the default run fits
-# the driver's verify budget; the driver's own CORRECTNESS gate
-# replays every registered query's oracle independently, so it keeps
-# external cover even in the default set. The BPE replays run by
-# default: their chain CTEs are materialized, so each oracle takes
-# ~0.3 s and ~0.2 GB in DuckDB at sf0.001 (inlined, memory doubled per
-# merge and the 10-merge chains ran out of memory).
-_SLOW_ORACLES = {"corpus_e2e_prep"}
-NAMES = [
-    pytest.param(n, marks=pytest.mark.slow) if n in _SLOW_ORACLES else n
-    for n in REGISTRY
-]
-
 
 @pytest.fixture(scope="module")
 def duck(sf_dir):
@@ -36,7 +22,14 @@ def duck(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", NAMES)
+# Every oracle runs in the default suite. The chained oracles declare
+# their CTEs MATERIALIZED, since DuckDB otherwise inlines a CTE at each
+# reference: at sf0.001 corpus_e2e_prep's replay takes ~1.4 s in
+# DuckDB (~33 s per test with the Spark side; inlined, the replay took
+# ~257 s), text_bpe_merges ~13 s and text_bpe_encode ~4 s per test
+# (inlined, the merges replay took ~325 s and the encode one ran out
+# of memory on a 16 GB host).
+@pytest.mark.parametrize("name", list(REGISTRY))
 def test_query_matches_oracle(spark, sf_dir, duck, name):
     spec = REGISTRY[name]
     if spec.oracle is None:
