@@ -87,7 +87,8 @@ class PipelineEngine:
     # -- ingest (S1/S2 + JSONL/parquet extension) -----------------------
     def ingest(self, path: str, schema=None) -> DataFrame:
         """Dispatch on extension: CSV (reference parity), JSONL, parquet.
-        Directories keep the reference's tolerant CSV-dir semantics."""
+        Directories keep the reference's tolerant CSV-dir semantics; a
+        CSV file's schema is inferred once per version of the file."""
         if os.path.isdir(path):
             return read_csv_dir(self.spark, path)
         lower = path.lower()
@@ -141,9 +142,9 @@ class PipelineEngine:
 
         ``rows_written`` is counted inside the write job (an
         ``Observation`` on the written frame), so a load from a CSV
-        directory is one job: the files' schemas were resolved at
-        ingest, and nothing re-reads the table. An empty frame still
-        writes the table with its schema and reports 0.
+        directory is one job: ingest resolved the files' schemas (from
+        the schema cache once inferred), and nothing re-reads the table.
+        An empty frame still writes the table with its schema and reports 0.
         """
         return self._write_counted(df, table_name)
 

@@ -22,7 +22,7 @@ from ..operators.dedup import (
     ngram_jaccard_pairs_prefix,
     simhash,
 )
-from ..sources.tables import balanced, load_table, read_parquet_cached
+from ..sources.tables import balanced, load_table, read_parquet_cached, table_version
 from .registry import query
 
 # DuckDB twin of functions.text_funcs normalization + word-3-gram
@@ -836,7 +836,7 @@ def _cc_base_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
         prefix.write.mode("overwrite").parquet(os.path.join(path, "prefix"))
         return path
 
-    path = build_once("cc_base_index", sf_dir, build)
+    path = build_once("cc_base_index", table_version(sf_dir, "documents"), build)
     return (
         read_parquet_cached(spark, os.path.join(path, "labels")),
         read_parquet_cached(spark, os.path.join(path, "shingles")),

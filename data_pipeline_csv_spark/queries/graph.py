@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..artifacts import build_once
 from ..operators.graph import PR_SCALE, pagerank
-from ..sources.tables import load_table, read_parquet_cached
+from ..sources.tables import load_table, read_parquet_cached, table_version
 from .registry import query
 
 _PART_OFFSET = 10_000_000
@@ -373,7 +373,7 @@ def _tri_base_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
         )
         return path
 
-    path = build_once("tri_base_index", sf_dir, build)
+    path = build_once("tri_base_index", table_version(sf_dir, "embeddings"), build)
     return (
         read_parquet_cached(spark, os.path.join(path, "edges")),
         read_parquet_cached(spark, os.path.join(path, "degrees")),
@@ -477,7 +477,7 @@ def _tri_edge_base_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
         )
         return path
 
-    path = build_once("tri_edge_index", sf_dir, build)
+    path = build_once("tri_edge_index", table_version(sf_dir, "embeddings"), build)
     return (
         read_parquet_cached(spark, os.path.join(path, "edges")),
         read_parquet_cached(spark, os.path.join(path, "base")),

@@ -21,23 +21,12 @@ from ..operators.similarity import (
 from ..sources.tables import (
     balanced,
     load_table,
-    parquet_fingerprint,
     read_parquet_cached,
+    table_version,
 )
 from .registry import query
 
 QUERY_IDS = [0, 1, 2, 3, 4, 5, 6, 7]
-
-
-def _corpus_version(sf_dir: str) -> tuple:
-    """``(embeddings path, parquet_fingerprint(path))``: the prefix of
-    every build-once key derived from the embeddings corpus (truths,
-    centroids, PQ books, IVF layouts and codes, the append/retrain
-    scaffolds). The fingerprint changes on every rewrite of the file,
-    so a corpus rewritten in place under the same ``sf_dir`` is never
-    served artifacts built from the old one."""
-    path = f"{sf_dir}/embeddings.parquet"
-    return (path, parquet_fingerprint(path))
 
 
 def _exact_topk(spark: SparkSession, sf_dir: str, q_ids, k: int):
@@ -45,18 +34,18 @@ def _exact_topk(spark: SparkSession, sf_dir: str, q_ids, k: int):
     corpus as a pandas frame of ``(q_id, vec_id)`` rows: the ground
     truth the ANN audits measure recall against. It is a pure function
     of (corpus version, query ids, k), so it is built once per corpus
-    version and held in memory. The key starts with
-    :func:`_corpus_version`, never a bare ``sf_dir``, so a rewritten
-    corpus gets a fresh truth. Queries whose answer IS ``cosine_topk``
-    (similarity_cosine_topk, similarity_label_knn,
-    contrastive_hard_negatives) run it per call, uncached."""
+    version and held in memory. The key starts with ``table_version``,
+    never a bare ``sf_dir``, so a rewritten corpus gets a fresh truth.
+    Queries whose answer IS ``cosine_topk`` (similarity_cosine_topk,
+    similarity_label_knn, contrastive_hard_negatives) run it per call."""
     q_ids = tuple(q_ids)
 
     def build(_path):
         corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
         return cosine_topk(corpus, list(q_ids), k=k).select("q_id", "vec_id").toPandas()
 
-    return build_once("ann_exact_truth", (*_corpus_version(sf_dir), q_ids, k), build)
+    ver = table_version(sf_dir, "embeddings")
+    return build_once("ann_exact_truth", (*ver, q_ids, k), build)
 
 
 def _recall_vs_truth(
@@ -202,7 +191,7 @@ def similarity_neardup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import kmeans_centroids_df
 
     corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
-    ver = _corpus_version(sf_dir)
+    ver = table_version(sf_dir, "embeddings")
     # cache_key: steady state trains the cell index once per corpus
     # version and reuses it across runs (bit-identical either way).
     cents = kmeans_centroids_df(
@@ -424,7 +413,7 @@ def similarity_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import kmeans_centroids_df
 
     corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
-    ver = _corpus_version(sf_dir)
+    ver = table_version(sf_dir, "embeddings")
     cents = kmeans_centroids_df(
         spark, corpus, k=16, iters=2, cache_key=(*ver, "embeddings")
     )
@@ -510,7 +499,7 @@ def similarity_neardup_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     aug = base.unionByName(twins)
-    ver = _corpus_version(sf_dir)
+    ver = table_version(sf_dir, "embeddings")
     cents = kmeans_centroids_df(
         spark, aug, k=16, iters=2, cache_key=(*ver, "embeddings_aug16")
     )
@@ -603,7 +592,7 @@ def similarity_ann_ivf_ondisk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ann_ivf_probe_ondisk, ivf_layout_cached
 
     corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
-    ver = _corpus_version(sf_dir)
+    ver = table_version(sf_dir, "embeddings")
     cents = kmeans_centroids_df(
         spark, corpus, k=16, iters=2, cache_key=(*ver, "embeddings")
     )
@@ -742,7 +731,7 @@ def similarity_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
-    ver = _corpus_version(sf_dir)
+    ver = table_version(sf_dir, "embeddings")
     books = pq_train(
         spark, corpus, dim=64, m=8, k=16, iters=2, cache_key=(*ver, "pq8")
     )
@@ -909,7 +898,7 @@ def _ivf_append_demo_cached(spark: SparkSession, sf_dir: str, ver: tuple):
     against the merged index, not rebuilds); the untouched-partition
     file check runs at append time, when 'before' is observable, and
     rides the artifact. Returns (layout_path, drift_report,
-    untouched_ok). ``ver`` is the caller's :func:`_corpus_version`."""
+    untouched_ok). ``ver`` is the caller's ``table_version``."""
     from pyspark.sql import functions as F
 
     from ..operators.clustering import kmeans_centroids_df
@@ -1013,7 +1002,7 @@ def similarity_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
     base = corpus.filter(F.col("vec_id") % 5 != 0)
-    ver = _corpus_version(sf_dir)
+    ver = table_version(sf_dir, "embeddings")
     cents = kmeans_centroids_df(
         spark, base, k=16, iters=2, cache_key=(*ver, "ivf_append_base")
     )
@@ -1097,7 +1086,7 @@ def similarity_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         return cosine_from_parts(dot_exact(a, b), norm_sq_exact(a), norm_sq_exact(b))
 
     corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))
-    ver = _corpus_version(sf_dir)
+    ver = table_version(sf_dir, "embeddings")
     cents = kmeans_centroids_df(
         spark, corpus, k=16, iters=2, cache_key=(*ver, "embeddings")
     )
@@ -1163,7 +1152,7 @@ def _ivf_retrain_demo_cached(spark: SparkSession, sf_dir: str):
     from ..operators.clustering import kmeans_centroids_df
     from ..operators.similarity import ivf_append, ivf_retrain, write_ivf_layout
 
-    ver = _corpus_version(sf_dir)
+    ver = table_version(sf_dir, "embeddings")
 
     def build(layout):
         corpus = balanced(spark, load_table(spark, sf_dir, "embeddings"))

@@ -14,9 +14,10 @@ Reference behavior being reproduced (Spark-first, not a port):
 Spark mapping: ``spark.read.csv`` is lazy/distributed/splittable; the
 by-name alignment uses per-file readers + ``unionByName(
 allowMissingColumns=True)`` because a single multi-path read aligns by
-position. Per-file error tolerance resolves each file's schema eagerly
-(a header job plus, with inference, a full inference scan), so a
-corrupt file is caught before the union is built.
+position. Per-file error tolerance resolves each file's schema eagerly,
+so a corrupt file is caught before the union is built; the header job
+and inference scan run on the first read of each version of a file only,
+and the schema cache (``sources/tables.py``) serves it after that.
 
 Each file's schema resolution is a small job that leaves most cores
 idle, so the directory scan resolves files concurrently: a thread pool of
@@ -44,6 +45,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
+from .tables import _read_cached
+
 logger = logging.getLogger(__name__)
 
 
@@ -63,14 +66,12 @@ def read_csv(
 ) -> DataFrame:
     """Single-file CSV scan (reference S1). Explicit ``schema`` beats
     inference for production determinism; inference kept as the
-    reference-parity default."""
+    reference-parity default, run once per version of the file."""
     _validate_csv_path(path)
-    reader = spark.read.option("header", header)
+    reader = spark.read.options(header=header, inferSchema=infer_schema)
     if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", infer_schema)
-    return reader.csv(path)
+        return reader.schema(schema).csv(path)
+    return _read_cached(reader, (path, header, infer_schema), path, lambda r: r.csv(path))
 
 
 def read_csv_dir(
@@ -95,11 +96,9 @@ def read_csv_dir(
     def resolve(name: str) -> DataFrame | None:
         full = os.path.join(dir_path, name)
         try:
-            df = read_csv(spark, full, header=header, infer_schema=infer_schema)
-            # force header/schema resolution now so a corrupt file is
+            # read_csv resolves the schema now, so a corrupt file is
             # caught here and skipped, like the reference's per-file try
-            _ = df.schema
-            return df
+            return read_csv(spark, full, header=header, infer_schema=infer_schema)
         except Exception as exc:  # noqa: BLE001 - reference skips any per-file failure
             logger.warning("Skipping unreadable CSV %s: %s", full, exc)
             return None

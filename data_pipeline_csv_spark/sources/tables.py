@@ -128,34 +128,31 @@ def _events_ts_is_nanos(path: str) -> bool:
     return getattr(t, "unit", None) == "ns"
 
 
-# Inferred Spark schema per parquet path: spark.read.parquet without an
-# explicit schema runs a footer/schema-inference JOB on every call, so
-# every read of an unchanged table would pay one cluster round trip to
-# re-derive a schema it already knows. Reads of paths the engine wrote
-# (testdata tables, warehouse tables, build-once artifacts) go through
-# read_parquet_cached, which infers once and passes .schema(...) after
-# that (asserted in tests/test_similarity.py::
-# test_ann_query_construction_runs_no_job and the read-path job budget
-# in tests/test_plans.py).
+# Inferred Spark schema per parquet or CSV file version: a read without
+# an explicit schema runs inference JOBS on every call (parquet footers;
+# a CSV header plus, with inference, a full scan). read_parquet_cached and
+# sources/csv.py::read_csv infer once per version, then pass .schema(...)
+# (job budgets: tests/test_plans.py, tests/test_similarity.py).
 #
-# One entry per path: path -> (fingerprint, schema), the fingerprint
-# from parquet_fingerprint below.
+# key -> (parquet_fingerprint, schema); the key is a parquet path, or
+# (path, header, infer_schema) for a CSV. Two threads that miss on one
+# key both infer it, and the entry keeps the later schema.
 _SCHEMA_CACHE: dict = {}
 
 
 def parquet_fingerprint(path: str) -> tuple:
-    """A key for the contents of a parquet file or directory that
+    """A key for the contents of a parquet or CSV file or directory that
     changes on EVERY rewrite, so it is never a timestamp alone: a path
     rewritten within the filesystem's mtime resolution (or given its
     old mtime back) keeps its mtime, and a timestamp key then serves
     state derived from the old files. A plain file's fingerprint is
     its (mtime_ns, ctime_ns, size): ``os.utime`` can set the mtime
     back but not the ctime, so an in-place rewrite at the same size
-    still changes it. A directory's fingerprint is the listing of
-    every file under it, each as (relative name, mtime_ns, ctime_ns,
-    size); Spark names every part file with a per-write UUID, so a
-    Spark rewrite always changes the listing. Raises ``OSError`` for a
-    path that cannot be listed locally."""
+    (or a ``chmod``) still changes it. A directory's fingerprint is
+    the listing of every file under it, each as (relative name,
+    mtime_ns, ctime_ns, size); Spark names every part file with a
+    per-write UUID, so a Spark rewrite always changes the listing.
+    Raises ``OSError`` for a path that cannot be listed locally."""
     if not os.path.isdir(path):
         st = os.stat(path)
         return (st.st_mtime_ns, st.st_ctime_ns, st.st_size)
@@ -170,21 +167,27 @@ def parquet_fingerprint(path: str) -> tuple:
     return tuple(sorted(listing))
 
 
-def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that runs the schema-inference job
-    only on the first read after each rewrite of ``path`` (see
-    ``_SCHEMA_CACHE`` above). A path that cannot be listed locally is
-    read uncached."""
+def _read_cached(reader, key, path: str, read) -> DataFrame:
+    """``read(reader)``, which infers the schema, on the first call per
+    version of ``path`` (its schema is stored under ``key``, unless it
+    raises), and ``read(reader.schema(stored))`` after that. A path that
+    cannot be listed locally is read with inference on every call."""
     try:
         fingerprint = parquet_fingerprint(path)
     except OSError:
-        return spark.read.parquet(path)
-    hit = _SCHEMA_CACHE.get(path)
+        return read(reader)
+    hit = _SCHEMA_CACHE.get(key)
     if hit is not None and hit[0] == fingerprint:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMA_CACHE[path] = (fingerprint, df.schema)
+        return read(reader.schema(hit[1]))
+    df = read(reader)
+    _SCHEMA_CACHE[key] = (fingerprint, df.schema)
     return df
+
+
+def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that runs the schema-inference job
+    only on the first read of each version of ``path``."""
+    return _read_cached(spark.read, path, path, lambda r: r.parquet(path))
 
 
 def parquet_schema_cached(spark: SparkSession, path: str) -> StructType:
@@ -194,6 +197,14 @@ def parquet_schema_cached(spark: SparkSession, path: str) -> StructType:
     if hit is not None and hit[0] == parquet_fingerprint(path):
         return hit[1]
     return read_parquet_cached(spark, path).schema
+
+
+def table_version(sf_dir: str, name: str) -> tuple:
+    """``(path, parquet_fingerprint(path))`` of testdata table ``name``:
+    the prefix of every build-once key derived from the table, so one
+    rewritten in place is never served artifacts built from the old file."""
+    path = f"{sf_dir}/{name}.parquet"
+    return (path, parquet_fingerprint(path))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -945,6 +945,37 @@ def test_read_csv_dir_jobs_stay_in_caller_job_group(spark, tmp_path):
     assert df.count() == 5 * n
 
 
+def test_warm_read_csv_dir_runs_no_job(spark, tmp_path):
+    """A second read of an unchanged directory takes every file's
+    schema from the schema cache: no header or inference job (the
+    first read ran at least one per file)."""
+    from data_pipeline_csv_spark.sources.csv import read_csv_dir
+
+    path = _csv_dir(tmp_path, 4)
+    read_csv_dir(spark, path)
+    df, jobs = _jobs_in_group(
+        spark, "read-csv-dir-warm", lambda: read_csv_dir(spark, path)
+    )
+    assert jobs == []
+    assert df.count() == 20
+
+
+def test_warm_pipeline_run_is_one_job(spark, tmp_path):
+    """A pipeline run over an unchanged raw directory is the write job
+    alone: ingest resolves no schema, and load counts its rows inside
+    the write (a run that re-inferred ran 2n+1 jobs for n files)."""
+    from data_pipeline_csv_spark.engine import PipelineEngine
+
+    engine = PipelineEngine(spark, str(tmp_path / "wh"))
+    src = _csv_dir(tmp_path, 4)
+    engine.run_pipeline(src, "products")
+    res, jobs = _jobs_in_group(
+        spark, "pipeline-warm", lambda: engine.run_pipeline(src, "products")
+    )
+    assert len(jobs) == 1
+    assert res.rows_written == 20
+
+
 def test_pipeline_load_is_one_job(spark, tmp_path):
     """PipelineEngine.load counts rows inside the write job: one job,
     no re-read of the written table."""

@@ -341,6 +341,63 @@ def test_ann_build_artifacts_are_rebuilt_after_same_size_rewrite(
         assert got[v] == pytest.approx(e), v
 
 
+@pytest.mark.parametrize(
+    "table, id_col, index",
+    [
+        ("documents", "doc_id", "dedup._cc_base_index_cached"),
+        ("embeddings", "vec_id", "graph._tri_base_index_cached"),
+        ("embeddings", "vec_id", "graph._tri_edge_base_index_cached"),
+    ],
+)
+def test_standing_indexes_are_rebuilt_after_same_size_rewrite(
+    spark, sf_dir, tmp_path, table, id_col, index
+):
+    """The standing dedup and triangle indexes are keyed by the version
+    of the table they read: a repeat call serves the built index, but
+    after an in-place rewrite at the same byte size whose old mtime is
+    set back, the next call builds a new index from the new rows."""
+    import importlib
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    module, name = index.split(".")
+    build = getattr(
+        importlib.import_module(f"data_pipeline_csv_spark.queries.{module}"), name
+    )
+    sf = str(tmp_path / "sf")
+    os.mkdir(sf)
+    path = os.path.join(sf, f"{table}.parquet")
+    data = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
+
+    def write(t):
+        # fixed-width pages: the same values count gives the same size
+        pq.write_table(t, path, compression="none", use_dictionary=False)
+
+    def min_id():
+        # the first artifact's first column holds the table's ids
+        first = build(spark, sf)[0]
+        return first.agg({first.columns[0]: "min"}).first()[0]
+
+    write(data)
+    assert min_id() < 1_000_000
+    old = build(spark, sf)[0].inputFiles()
+    assert build(spark, sf)[0].inputFiles() == old  # built once
+    before = os.stat(path)
+
+    # shift every id by a multiple of 5: each row keeps its side of the
+    # indexes' id % 5 base/batch split
+    i = data.schema.get_field_index(id_col)
+    shifted = pc.add(data[id_col], 1_000_000)
+    write(data.set_column(i, data.schema.field(i), shifted))
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+    st = os.stat(path)
+    assert (st.st_mtime_ns, st.st_size) == (before.st_mtime_ns, before.st_size)
+
+    assert min_id() >= 1_000_000
+
+
 def test_pq_rejects_mismatched_dims(spark, sf_dir):
     """dim % m != 0 must raise at train time (not silently drop the
     trailing coordinates from encoding/ADC), and ADC must reject
